@@ -861,10 +861,9 @@ object SparkEntry {
     // A6 _cat/segments: per-segment docs + token counts straight off the
     // delta-served index's registries (segment 0 = base, 1 = delta).
     "a63_cat_segments" -> ((s, d) => {
-      import graft.io.Tables
       val idx = DocumentsIndex.deltaIndexDir(s, d)
       graft.index.DeltaIndex.segmentDirs(s, idx).zipWithIndex.map { case (seg, i) =>
-        Tables.read(s, seg, graft.index.InvertedIndex.DocsTable)
+        graft.index.InvertedIndex.read(s, seg, graft.index.InvertedIndex.DocsTable)
           .agg(count(lit(1)).as("docs"), sum(col("dl")).as("tokens"))
           .select(lit(i).as("segment"), col("docs"), col("tokens"))
       }.reduce(_ unionByName _).orderBy("segment")

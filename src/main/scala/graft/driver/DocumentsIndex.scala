@@ -2,7 +2,6 @@ package graft.driver
 
 import graft.fixtures.CodeFile
 import graft.index.{DeltaIndex, IndexConfig, InvertedIndex}
-import graft.io.Tables
 import graft.lineage.Manifests
 import graft.query.IndexReader
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -176,7 +175,7 @@ object DocumentsIndex {
 
   /** Engine stats table in oracle-comparable form. */
   def statsDf(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.read(spark, indexDir(spark, sfDir), InvertedIndex.StatsTable)
+    InvertedIndex.read(spark, indexDir(spark, sfDir), InvertedIndex.StatsTable)
       .select(col("numDocs").as("num_docs"), col("sumDl").as("sum_dl"),
         round(col("avgDl"), 6).as("avg_dl"))
 
@@ -187,7 +186,7 @@ object DocumentsIndex {
     */
   private def docIdMapOf(spark: SparkSession, idx: String): DataFrame =
     DeltaIndex.segmentDirs(spark, idx)
-      .map(seg => Tables.read(spark, seg, InvertedIndex.DocsTable)
+      .map(seg => InvertedIndex.read(spark, seg, InvertedIndex.DocsTable)
         .select(col("docId"), col("path").cast("long").as("doc_id")))
       .reduce(_ unionByName _)
 
@@ -1298,7 +1297,7 @@ object DocumentsIndex {
     require(pit.nonEmpty, "empty PIT manifest")
     val idx = deltaIndexDir(spark, sfDir)
     val r = new IndexReader(spark, idx, pinnedSegments = Some(pit))
-    val map = pit.map(seg => Tables.read(spark, seg, InvertedIndex.DocsTable)
+    val map = pit.map(seg => InvertedIndex.read(spark, seg, InvertedIndex.DocsTable)
         .select(col("docId"), col("path").cast("long").as("doc_id")))
       .reduce(_ unionByName _)
     r.scoreAllDf(query).join(map, Seq("docId"))
@@ -1634,7 +1633,7 @@ object DocumentsIndex {
     require(clauses.nonEmpty, "profile needs at least one clause")
     val terms = clauses.map(_._2).distinct
     val dict = r.segments.map(seg =>
-        Tables.read(spark, seg, InvertedIndex.DictTable)
+        InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
           .where(col("term").isin(terms: _*)).select(col("term"), col("df")))
       .reduce(_ unionByName _).groupBy("term").agg(sum("df").as("docs"))
     val leaf = clauses.toDF("kind", "term").join(dict, Seq("term"), "left_outer")
@@ -1939,7 +1938,7 @@ object DocumentsIndex {
     */
   private def dlByDocId(spark: SparkSession, sfDir: String): DataFrame =
     DeltaIndex.segmentDirs(spark, indexDir(spark, sfDir))
-      .map(seg => Tables.read(spark, seg, InvertedIndex.DocsTable)
+      .map(seg => InvertedIndex.read(spark, seg, InvertedIndex.DocsTable)
         .select(col("path").cast("long").as("doc_id"), col("dl")))
       .reduce(_ unionByName _)
 
@@ -1948,7 +1947,7 @@ object DocumentsIndex {
     */
   private def dlByInternalId(spark: SparkSession, sfDir: String): DataFrame =
     DeltaIndex.segmentDirs(spark, indexDir(spark, sfDir))
-      .map(seg => Tables.read(spark, seg, InvertedIndex.DocsTable)
+      .map(seg => InvertedIndex.read(spark, seg, InvertedIndex.DocsTable)
         .select(col("docId"), col("dl")))
       .reduce(_ unionByName _)
 
@@ -1987,7 +1986,7 @@ object DocumentsIndex {
   }
 
   def dictionaryDf(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.read(spark, indexDir(spark, sfDir), InvertedIndex.DictTable)
+    InvertedIndex.read(spark, indexDir(spark, sfDir), InvertedIndex.DictTable)
       .select(col("term"), col("df"), col("cf"))
       .orderBy("term")
 
@@ -2001,13 +2000,13 @@ object DocumentsIndex {
   private def termDfFrame(spark: SparkSession, sfDir: String): DataFrame = {
     val r = reader(spark, sfDir)
     val u = r.segments.map(seg =>
-        Tables.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
+        InvertedIndex.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
       .reduce(_ unionByName _)
     if (r.segments.size == 1) u else u.groupBy("term").agg(sum("df").as("df"))
   }
 
   def registryDf(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.read(spark, indexDir(spark, sfDir), InvertedIndex.DocsTable)
+    InvertedIndex.read(spark, indexDir(spark, sfDir), InvertedIndex.DocsTable)
       .select(col("path").cast("long").as("doc_id"), col("dl").cast("long").as("dl"), col("sha256"))
       .orderBy("doc_id")
 }

@@ -1,7 +1,6 @@
 package graft.index
 
 import graft.fixtures.CodeFile
-import graft.io.Tables
 import graft.lineage.Manifests
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -61,7 +60,11 @@ object DeltaIndex {
 
   /** Total committed docs = the next delta's docIdBase. */
   def totalDocs(spark: SparkSession, indexDir: String): Long =
-    segmentDirs(spark, indexDir).map(InvertedIndex.readStats(spark, _).numDocs).sum
+    totalDocs(spark, segmentDirs(spark, indexDir))
+
+  /** Docs committed in `segs`: every segment's stats row in one job. */
+  private def totalDocs(spark: SparkSession, segs: Seq[String]): Long =
+    InvertedIndex.readStats(spark, segs).map(_.numDocs).sum
 
   /** Build the next delta segment over `newDocs` and return its dir. The
     * new keys must be disjoint from every committed segment's (the same
@@ -87,10 +90,11 @@ object DeltaIndex {
       s"addDocuments: cfg.analyzer ${cfg.analyzer.serialized} differs from the base " +
         s"index's built analyzer ${baseAnalyzer.serialized} at $indexDir — " +
         "an index's analyzer is immutable; rebuild to change it")
+    // the committed segments, listed once for the whole call
     val segs = segmentDirs(spark, indexDir)
     val newKeys = newDocs.toDF().select("repo", "path", "commit")
     for (seg <- segs) {
-      val clash = Tables.read(spark, seg, InvertedIndex.DocsTable)
+      val clash = InvertedIndex.read(spark, seg, InvertedIndex.DocsTable)
         .select("repo", "path", "commit")
         .join(broadcast(newKeys), Seq("repo", "path", "commit"), "left_semi")
         .limit(1).collect()
@@ -98,9 +102,9 @@ object DeltaIndex {
         s"addDocuments: key ${clash.headOption.getOrElse("")} already exists in segment $seg — " +
           "delta segments only ADD documents; re-index via compact() to replace")
     }
-    val gen = deltaDirs(spark, indexDir).size
+    val gen = segs.size - 1 // committed deltas
     val dir = f"$indexDir/$DeltasSubdir/d$gen%04d"
-    val base = totalDocs(spark, indexDir)
+    val base = totalDocs(spark, segs)
     InvertedIndex.build(spark, newDocs, dir, cfg.copy(docIdBase = base), runId)
     dir
   }
@@ -120,8 +124,9 @@ object DeltaIndex {
     require(maxDeltaShare > 0.0, s"maxDeltaShare must be positive, got $maxDeltaShare")
     val deltas = deltaDirs(spark, indexDir)
     if (deltas.isEmpty) return false
-    val deltaDocs = deltas.map(InvertedIndex.readStats(spark, _).numDocs).sum
-    val baseDocs = InvertedIndex.readStats(spark, indexDir).numDocs
+    val docs = InvertedIndex.readStats(spark, indexDir +: deltas).map(_.numDocs)
+    val baseDocs = docs.head
+    val deltaDocs = docs.tail.sum
     val share = deltaDocs.toDouble / math.max(1L, baseDocs + deltaDocs)
     if (share <= maxDeltaShare) false
     else {

@@ -9,6 +9,7 @@ import graft.tokenize.{Analyzer, CodeTokenizer}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** One row of the `docs` table: doc registry + exact norms + the sha256
   * per-row invariant (SURVEY.md §1.3; BASELINE.json:15). Content is NOT
@@ -161,6 +162,48 @@ object InvertedIndex {
   val StatsTable = "corpus_stats"
   val PostingsTable = "postings"
   val DictTable = "dictionary"
+
+  /** Declared schemas of the tables [[build]] writes — exactly what a
+    * parquet read infers from the committed files (column order, types, all
+    * nullable), so [[read]] plans without the footer-merge job schema
+    * inference launches. The layout is pinned by [[FormatVersion]].
+    */
+  val DocsSchema: StructType = Tables.schemaOf[DocRow]
+  val StatsSchema: StructType = Tables.schemaOf[CorpusStats]
+  /** [[PostingBlock]]'s fields, then the `tbucket` partition column. */
+  val PostingsSchema: StructType = Tables.schemaOf[PostingBlock].add("tbucket", IntegerType)
+  /** [[buildDictionary]]'s output. */
+  val DictSchema: StructType = new StructType()
+    .add("term", StringType).add("df", LongType).add("cf", LongType)
+    .add("maxTfn", DoubleType).add("maxTf", IntegerType).add("minDl", IntegerType)
+
+  /** Scratch of a sliced postings build: one [[PostingBlock]] table per
+    * slice plus the committed heavy-term salt map, under one geometry dir.
+    */
+  private val SlicesDir = "postings_slices"
+  private val HeavyTermsTable = "heavy_terms"
+  private val SliceSchema: StructType = Tables.schemaOf[PostingBlock]
+  private val HeavyTermsSchema: StructType = new StructType()
+    .add("term", StringType).add("salts", IntegerType)
+
+  private def schemaFor(table: String): StructType = table match {
+    case DocsTable => DocsSchema
+    case StatsTable => StatsSchema
+    case PostingsTable => PostingsSchema
+    case DictTable => DictSchema
+    case t if t.startsWith("lineage/") => Manifests.Schema
+    case t if t.startsWith(s"$SlicesDir/") =>
+      if (t.endsWith(s"/$HeavyTermsTable")) HeavyTermsSchema else SliceSchema
+    case t => throw new IllegalArgumentException(
+      s"'$t' is not a table the index writes — read it with Tables.read")
+  }
+
+  /** Read a table of the index (or a segment) at `dir` with its declared
+    * schema: [[DocsTable]], [[StatsTable]], [[PostingsTable]], [[DictTable]],
+    * a `lineage/<stage>` manifest, or sliced-build scratch.
+    */
+  def read(spark: SparkSession, dir: String, table: String): DataFrame =
+    Tables.read(spark, dir, table, schemaFor(table))
 
   /** On-disk format version; bump on any postings/codec layout change. A
     * reader refuses indexes of another version instead of misdecoding
@@ -724,18 +767,22 @@ object InvertedIndex {
       plan.total
     }
 
+    // the stats this run wrote; a resumed build that skipped the stage
+    // reads the committed row instead
+    var wroteStats: Option[CorpusStats] = None
     results += Manifests.runStage(spark, indexDir, "stats", runId, Seq(StatsTable)) {
-      val agg = Tables.read(spark, indexDir, DocsTable)
+      val agg = read(spark, indexDir, DocsTable)
         .agg(count(lit(1)).as("numDocs"), sum("dl").as("sumDl")).collect()(0)
       // sum over zero rows is NULL, not 0 — an empty corpus is a legal
       // (if degenerate) build and must commit stats, not crash
       val n = agg.getLong(0); val sumDl = if (agg.isNullAt(1)) 0L else agg.getLong(1)
       val stats = CorpusStats(n, sumDl, if (n == 0) 0.0 else sumDl.toDouble / n)
       Tables.write(Seq(stats).toDF(), indexDir, StatsTable)
+      wroteStats = Some(stats)
       n
     }
 
-    val stats = readStats(spark, indexDir)
+    val stats = wroteStats.getOrElse(readStats(spark, indexDir))
 
     // The "merge into globally sorted postings" step (BASELINE.json:6) over
     // the COMPACT encoded block rows (~2 orders of magnitude smaller than
@@ -802,11 +849,11 @@ object InvertedIndex {
         // DIFFERENT salt count than already-committed slices — and salt
         // occupies the top blockId bits, so mixed salting would silently
         // break the blockId-monotone-in-docId invariant BMW iterates by.
-        val heavyTable = s"postings_slices/$geom/heavy_terms"
+        val heavyTable = s"$SlicesDir/$geom/$HeavyTermsTable"
         val heavyStage = s"postings_heavy_$geom"
         val heavy: Map[String, Int] =
           if (Manifests.isComplete(spark, indexDir, heavyStage))
-            Tables.read(spark, indexDir, heavyTable).select("term", "salts")
+            read(spark, indexDir, heavyTable).select("term", "salts")
               .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
           else {
             val h = heavyTerms(spark, src, cfg)
@@ -817,18 +864,19 @@ object InvertedIndex {
             h
           }
         for (i <- 0 until s) {
-          val table = s"postings_slices/$geom/s$i"
+          val table = s"$SlicesDir/$geom/s$i"
           sliceResults += Manifests.runStage(spark, indexDir, s"postings_slice_${geom}_$i", runId, Seq(table)) {
             val blocks = buildPostingsSlice(spark, src, stats, cfg, heavy, i, s, plan)
             Tables.write(blocks.toDF(), indexDir, table)
-            Tables.read(spark, indexDir, table).count()
+            read(spark, indexDir, table).count()
           }
           if (cfg.chaosFailAfterSlice == i)
             throw new RuntimeException(s"chaos: injected kill after postings slice $i")
         }
-        // the merge reads the committed slice parquet — already compact
-        val all = spark.read.parquet(
-          (0 until s).map(i => Tables.tablePath(indexDir, s"postings_slices/$geom/s$i")): _*)
+        // the merge reads the committed slice parquet — already compact —
+        // as ONE scan over every slice's files
+        val all = spark.read.schema(SliceSchema).parquet(
+          (0 until s).map(i => Tables.tablePath(indexDir, s"$SlicesDir/$geom/s$i")): _*)
         commitSorted(all)
       }
       // sidecars written INSIDE the stage body: they describe the layout this
@@ -845,23 +893,22 @@ object InvertedIndex {
     results ++= sliceResults.result()
     // Slice scratch is only needed until the merged postings commit; clean
     // it AFTER the stage manifest (a kill in between re-runs from the
-    // still-committed slices, never from scratch). Manifests are swept for
+    // still-committed slices, never from scratch). runStage has returned,
+    // so the postings manifest is committed. Manifests are swept for
     // EVERY geometry — matching the scratch deletion — so a later build
     // under some old geometry can never find a 'committed' slice manifest
     // whose data is gone.
-    if (Manifests.isComplete(spark, indexDir, "postings")) {
-      Tables.delete(spark, indexDir, "postings_slices")
-      val lineage = new org.apache.hadoop.fs.Path(s"$indexDir/lineage")
-      val fs = lineage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(lineage)) fs.listStatus(lineage).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("postings_slice_") || nm.startsWith("postings_heavy_"))
-          fs.delete(st.getPath, true)
-      }
+    Tables.delete(spark, indexDir, SlicesDir)
+    val lineage = new org.apache.hadoop.fs.Path(s"$indexDir/lineage")
+    val lfs = lineage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (lfs.exists(lineage)) lfs.listStatus(lineage).foreach { st =>
+      val nm = st.getPath.getName
+      if (nm.startsWith("postings_slice_") || nm.startsWith("postings_heavy_"))
+        lfs.delete(st.getPath, true)
     }
 
     results += Manifests.runStage(spark, indexDir, "dictionary", runId, Seq(DictTable)) {
-      val postings = Tables.read(spark, indexDir, PostingsTable)
+      val postings = read(spark, indexDir, PostingsTable)
       val dict = buildDictionary(spark, postings, stats)
         .repartitionByRange(cfg.partitions, col("term"))
         .sortWithinPartitions("term")
@@ -884,8 +931,14 @@ object InvertedIndex {
     }
   }
 
-  def readStats(spark: SparkSession, indexDir: String): CorpusStats = {
-    import spark.implicits._
-    Tables.read(spark, indexDir, StatsTable).as[CorpusStats].collect()(0)
+  def readStats(spark: SparkSession, indexDir: String): CorpusStats =
+    readStats(spark, Seq(indexDir)).head
+
+  /** The stats rows of every segment dir in `dirs`, in order, from ONE job. */
+  def readStats(spark: SparkSession, dirs: Seq[String]): Seq[CorpusStats] = {
+    val rows = dirs.zipWithIndex.map { case (d, i) =>
+      read(spark, d, StatsTable).select(lit(i).as("i"), col("numDocs"), col("sumDl"), col("avgDl"))
+    }.reduce(_ unionByName _).collect()
+    rows.sortBy(_.getInt(0)).map(r => CorpusStats(r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
   }
 }

@@ -426,7 +426,7 @@ object MultiFieldIndex {
     val dfu = ctf.groupBy("term").agg(count(lit(1)).as("dfu"))
     val pp = graft.query.Bm25.Default
     val cdl = readers.zip(weights).map { case (r, w) =>
-      r.segments.map(seg => graft.io.Tables.read(spark, seg, InvertedIndex.DocsTable)
+      r.segments.map(seg => InvertedIndex.read(spark, seg, InvertedIndex.DocsTable)
         .select(col("docId"), col("dl"))).reduce(_ unionByName _)
         .select(col("docId"), (lit(w) * col("dl")).as("wdl"))
     }.reduce(_ unionByName _).groupBy("docId").agg(sum("wdl").as("cdl"))

@@ -1,7 +1,9 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.types.StructType
+import scala.reflect.runtime.universe.TypeTag
 
 /** Storage facade for all engine state tables (SURVEY.md §0.3, §7.5).
   *
@@ -9,12 +11,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Iceberg runtime (SURVEY.md §0.3), so tables are parquet directories of the
   * exact same schema. Swapping to Iceberg is `format("iceberg")` + catalog
   * config here and nowhere else — all engine code goes through this facade.
+  *
+  * Reads come in two forms. Tables the engine owns (the index tables and
+  * the lineage manifests) are read with the schema declared next to the
+  * code that writes them (`InvertedIndex.read`), so a read plans without
+  * the parquet footer-merge job that schema inference launches. The
+  * schema-less form is for foreign tables only: source tables, testdata,
+  * and tables whose columns a caller's own data decides.
   */
 object Tables {
   def tablePath(base: String, name: String): String = s"$base/$name"
 
+  /** Read a foreign table, inferring its schema from the parquet footers. */
   def read(spark: SparkSession, base: String, name: String): DataFrame =
     spark.read.parquet(tablePath(base, name))
+
+  /** Read an engine-owned table with its declared schema: no inference job.
+    * `schema` must be what inference would return (column order, types,
+    * all-nullable), or checksums over `struct(*)` would change.
+    */
+  def read(spark: SparkSession, base: String, name: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(tablePath(base, name))
+
+  /** The schema a parquet read of a table written from a `Dataset[T]`
+    * returns: T's columns in declaration order, every one nullable.
+    */
+  def schemaOf[T <: Product: TypeTag]: StructType =
+    StructType(Encoders.product[T].schema.fields.map(_.copy(nullable = true)))
 
   /** Idempotent full-overwrite commit of one table — the reference's bulk
     * sink + retry logic (SURVEY.md §2.1 A5) collapses to deterministic

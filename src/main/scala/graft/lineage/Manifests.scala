@@ -1,8 +1,10 @@
 package graft.lineage
 
+import graft.index.InvertedIndex
 import graft.io.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Per-stage / per-partition lineage manifests + counters (SURVEY.md §2.3
   * B12; BASELINE.json:6/14: "every stage writes per-partition lineage
@@ -20,13 +22,45 @@ object Manifests {
   final case class ManifestRow(stage: String, partitionId: Int, file: String,
       inputRows: Long, outputRows: Long, checksum: Long, committedAtMs: Long, runId: String)
 
+  /** Declared schema of every `lineage/<stage>` table (see [[ManifestRow]]). */
+  val Schema: StructType = Tables.schemaOf[ManifestRow]
+
   private def manifestName(stage: String) = s"lineage/$stage"
 
+  /** One job: the marker row is unique, so a filtered collect answers
+    * without the incremental partition scans of a `limit`.
+    */
   def isComplete(spark: SparkSession, base: String, stage: String): Boolean =
-    Tables.exists(spark, base, manifestName(stage)) && {
-      Tables.read(spark, base, manifestName(stage))
-        .where(col("partitionId") === -1).limit(1).count() == 1
-    }
+    Tables.exists(spark, base, manifestName(stage)) &&
+      InvertedIndex.read(spark, base, manifestName(stage))
+        .where(col("partitionId") === -1).select("partitionId").collect().nonEmpty
+
+  /** (file path, rows, bit_xor of xxhash64(struct(*))) per file of `table`,
+    * sorted by path, from ONE job with no exchange: each task folds its rows
+    * into per-file partials, merged after the collect. Count and xor are
+    * associative, so a file split across tasks merges back whole and the
+    * result equals a `groupBy(input_file_name())` aggregate. The xor of row
+    * hashes is order-independent and overflow-free (ANSI mode).
+    */
+  private def fileChecksums(spark: SparkSession, base: String,
+      table: String): Array[(String, Long, Long)] = {
+    import spark.implicits._
+    InvertedIndex.read(spark, base, table)
+      .select(input_file_name(), expr("xxhash64(struct(*))"))
+      .as[(String, Long)]
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+        rows.foreach { case (f, h) =>
+          val (n, x) = acc.getOrElse(f, (0L, 0L))
+          acc.update(f, (n + 1, x ^ h))
+        }
+        acc.iterator.map { case (f, (n, x)) => (f, n, x) }
+      }
+      .collect()
+      .groupBy(_._1).toArray
+      .map { case (f, ps) => (f, ps.map(_._2).sum, ps.map(_._3).reduce(_ ^ _)) }
+      .sortBy(_._1)
+  }
 
   /** Commit the manifest for `stage`, fingerprinting each output table file. */
   def commit(spark: SparkSession, base: String, stage: String, runId: String,
@@ -34,17 +68,9 @@ object Manifests {
     import spark.implicits._
     val now = System.currentTimeMillis()
     val perFile = outputTables.flatMap { t =>
-      val df = Tables.read(spark, base, t)
-      // bit_xor of row hashes: order-independent, overflow-free (ANSI mode).
-      df.groupBy(input_file_name().as("file"))
-        .agg(count(lit(1)).as("rows"), expr("bit_xor(xxhash64(struct(*)))").as("checksum"))
-        .collect()
-        .sortBy(_.getString(0))
-        .zipWithIndex
-        .map { case (r, i) =>
-          ManifestRow(stage, i, s"$t:${r.getString(0).split('/').last}",
-            inputRows, r.getLong(1), r.getLong(2), now, runId)
-        }
+      fileChecksums(spark, base, t).zipWithIndex.map { case ((file, rows, checksum), i) =>
+        ManifestRow(stage, i, s"$t:${file.split('/').last}", inputRows, rows, checksum, now, runId)
+      }
     }
     val outputRows = perFile.map(_.outputRows).sum
     val marker = ManifestRow(stage, -1, "SUCCESS", inputRows, outputRows, 0L, now, runId)

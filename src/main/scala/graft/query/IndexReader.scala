@@ -2,7 +2,6 @@ package graft.query
 
 import graft.codec.PostingsCodec
 import graft.index.{CorpusStats, DeltaIndex, InvertedIndex, PostingBlock}
-import graft.io.Tables
 import graft.tokenize.CodeTokenizer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,11 +62,9 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   lazy val stats: CorpusStats = {
     // one job for all segments' stats rows (r07; was one per segment) —
     // the sums are order-independent, so the merge is unchanged
-    val rows = segments.map(seg =>
-        Tables.read(spark, seg, InvertedIndex.StatsTable).select("numDocs", "sumDl"))
-      .reduce(_ unionByName _).collect()
-    val n = rows.iterator.map(_.getLong(0)).sum
-    val sumDl = rows.iterator.map(_.getLong(1)).sum
+    val rows = InvertedIndex.readStats(spark, segments)
+    val n = rows.iterator.map(_.numDocs).sum
+    val sumDl = rows.iterator.map(_.sumDl).sum
     CorpusStats(n, sumDl, if (n == 0) 0.0 else sumDl.toDouble / n)
   }
 
@@ -152,7 +149,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       // (df, maxTfn, maxTf, minDl) per term, merged across segments
       val acc = scala.collection.mutable.Map.empty[String, (Long, Double, Int, Int)]
       segments.map { seg =>
-        Tables.read(spark, seg, InvertedIndex.DictTable)
+        InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
           .where(col("term").isin(missing.toSeq: _*))
           .select("term", "df", "maxTfn", "maxTf", "minDl")
       }.reduce(_ unionByName _)
@@ -211,7 +208,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       else lit(Array.emptyByteArray).as("pos"))
     val scans = segments.zip(segBuckets).map { case (seg, b) =>
       val tb = terms.map(t => InvertedIndex.termBucket(t, b)).distinct
-      Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.PostingsTable)
         .where(col("tbucket").isin(tb: _*) && col("term").isin(terms: _*))
         .select(cols: _*)
     }
@@ -583,7 +580,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     // the frame is ids-only like every filter. Composes with term filters
     // by a semi-join (conjunction of conjunctions).
     val rangeIds: Option[DataFrame] = dlRange.map { case (rlo, rhi) =>
-      segments.map(seg => Tables.read(spark, seg, InvertedIndex.DocsTable)
+      segments.map(seg => InvertedIndex.read(spark, seg, InvertedIndex.DocsTable)
         .where(col("dl") >= rlo && col("dl") < rhi).select("docId"))
         .reduce(_ unionByName _)
     }
@@ -658,7 +655,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   private def idScan(terms: Seq[String]): DataFrame =
     segments.zip(segBuckets).map { case (seg, b) =>
       val tb = terms.map(t => InvertedIndex.termBucket(t, b)).distinct
-      Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.PostingsTable)
         .where(col("tbucket").isin(tb: _*) && col("term").isin(terms: _*))
         .select(col("firstDocId"), col("count"), col("docDeltas"))
     }.reduce(_ unionByName _)
@@ -699,7 +696,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def expandPrefix(prefix: String): Array[String] = {
     val (lo, hi) = prefixBounds(prefix)
     segments.flatMap { seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term") >= lo && col("term") < hi)
         .select("term").collect().map(_.getString(0))
     }.distinct.sorted.toArray
@@ -746,7 +743,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     // every term: the parameter IS the scale lever ES documents it as.
     val pfx = q.take(prefixLength)
     segments.map { seg =>
-      val dict = Tables.read(spark, seg, InvertedIndex.DictTable)
+      val dict = InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
       val pruned =
         if (pfx.isEmpty) dict
         else dict.where(col("term") >= pfx && col("term") < (pfx.init + (pfx.last + 1).toChar))
@@ -788,7 +785,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def expandPrefixCapped(prefix: String, maxExpansions: Int): Array[String] = {
     val (lo, hi) = prefixBounds(prefix)
     cappedByDf(segments.map(seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term") >= lo && col("term") < hi)
         .select(col("term"), col("df"))), maxExpansions)
   }
@@ -810,7 +807,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       s"wildcard literals must be analyzer charset [a-z0-9_], got '$c' in '$pattern'"))
     val rx = pat.split("\\*", -1).map(java.util.regex.Pattern.quote).mkString("^", ".*", "$")
     cappedByDf(segments.map { seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term").rlike(rx))
         .select(col("term"), col("df"))
     }, maxExpansions)
@@ -833,7 +830,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def expandRegexp(pattern: String, maxExpansions: Int = 128): Array[String] = {
     val pat = validateRegexp(pattern)
     cappedByDf(segments.map { seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term").rlike(pat))
         .select(col("term"), col("df"))
     }, maxExpansions)
@@ -930,7 +927,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val candTerms = cand.keys.toSeq.sorted
     val dfAcc = scala.collection.mutable.Map.empty[String, Long]
     for (seg <- segments)
-      Tables.read(spark, seg, InvertedIndex.DictTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term").isin(candTerms: _*))
         .select("term", "df").collect()
         .foreach(r => dfAcc.update(r.getString(0), dfAcc.getOrElse(r.getString(0), 0L) + r.getLong(1)))
@@ -956,7 +953,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def termsAggDf(size: Int): DataFrame = {
     require(size > 0, "size must be positive")
     val scans = segments.map(seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
     val merged =
       if (segments.size == 1) scans.head
       else scans.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"))
@@ -980,7 +977,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     require(maxDocCount >= 1L && maxDocCount <= 100L,
       s"max_doc_count must be in [1, 100] (the ES bound), got $maxDocCount")
     val scans = segments.map(seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
     val merged =
       if (segments.size == 1) scans.head
       else scans.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"))
@@ -1008,13 +1005,13 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def unigramLogProbDf(): DataFrame = {
     import spark.implicits._
     val dictScans = segments.map(seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("cf")))
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("cf")))
     val cfByTerm =
       if (segments.size == 1) dictScans.head
       else dictScans.reduce(_ unionByName _).groupBy("term").agg(sum("cf").as("cf"))
     val total = cfByTerm.agg(sum("cf")).head.getLong(0)
     val rows = segments.map { seg =>
-      Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.PostingsTable)
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"),
           col("tfs"), col("dls"))
     }.reduce(_ unionByName _)
@@ -1044,7 +1041,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def termsCompositeDf(size: Int, afterKey: Option[String] = None): DataFrame = {
     require(size > 0, "size must be positive")
     val scans = segments.map { seg =>
-      val base = Tables.read(spark, seg, InvertedIndex.DictTable)
+      val base = InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .select(col("term"), col("df"))
       afterKey.fold(base)(a => base.where(col("term") > a))
     }
@@ -1119,7 +1116,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def histogramAggDf(width: Long): DataFrame = {
     require(width > 0, "histogram width must be positive")
     segments.map(seg =>
-      Tables.read(spark, seg, InvertedIndex.DocsTable).select(col("dl")))
+      InvertedIndex.read(spark, seg, InvertedIndex.DocsTable).select(col("dl")))
       .reduce(_ unionByName _)
       .groupBy((floor(col("dl") / width) * width).cast("long").as("bucket_lo"))
       .agg(count(lit(1)).as("n"))
@@ -1152,7 +1149,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     import spark.implicits._
     // foreground size = df(q): the same tiny dictionary lookup termMeta does
     val fgN = segments.map { seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term") === q).select("df").collect()
         .map(_.getLong(0)).sum
     }.sum
@@ -1163,7 +1160,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       .flatMap { case (f, c, d) => PostingsCodec.decodeDocIds(f, c, d) }
       .toDF("docId").distinct()
     val pairs = segments.map { seg =>
-      Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.PostingsTable)
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"))
     }.reduce(_ unionByName _)
       .as[(String, Long, Int, Array[Byte])]
@@ -1174,7 +1171,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val fgCounts = pairs.join(fgIds, Seq("docId")).groupBy("term")
       .agg(count(lit(1)).as("fg"))
     val bgScans = segments.map(seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
     val bg =
       if (segments.size == 1) bgScans.head
       else bgScans.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"))
@@ -1221,7 +1218,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       return spark.emptyDataset[(String, Long, Long, Double)]
         .toDF("term", "fg", "bg", "score")
     val pairs = segments.map { seg =>
-      Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.PostingsTable)
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"))
     }.reduce(_ unionByName _)
       .as[(String, Long, Int, Array[Byte])]
@@ -1232,7 +1229,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val fgCounts = pairs.join(fgIds, Seq("docId")).groupBy("term")
       .agg(count(lit(1)).as("fg"))
     val bgScans = segments.map(seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable).select(col("term"), col("df")))
     val bg =
       if (segments.size == 1) bgScans.head
       else bgScans.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"))
@@ -1312,7 +1309,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val inputDf: Long =
       if (mode == "always") 0L
       else segments.map(seg =>
-          Tables.read(spark, seg, InvertedIndex.DictTable)
+          InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
             .where(col("term") === q).select("df")
             .collect().headOption.map(_.getLong(0)).getOrElse(0L)).sum
     if (mode == "missing" && inputDf > 0L) {
@@ -1323,7 +1320,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
           StructField("dist", LongType), StructField("df", LongType))))
     }
     val scans = segments.map { seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(length(col("term")).between(q.length - maxEdits, q.length + maxEdits))
         .withColumn("dist", levenshtein(col("term"), lit(q)).cast("long"))
         .where(col("dist") <= maxEdits && col("dist") >= 1)
@@ -1351,7 +1348,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     require(size > 0, "size must be positive")
     val (lo, hi) = prefixBounds(prefix)
     val scans = segments.map(seg =>
-      Tables.read(spark, seg, InvertedIndex.DictTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term") >= lo && col("term") < hi)
         .select(col("term"), col("df")))
     val merged =
@@ -1380,7 +1377,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     require(size > 0, "size must be positive")
     import spark.implicits._
     val pairs = segments.map { seg =>
-      Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.PostingsTable)
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"))
     }.reduce(_ unionByName _)
       .as[(String, Long, Int, Array[Byte])]
@@ -1469,7 +1466,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
         if (prefixProbeCache.size >= PrefixProbeCacheMax) prefixProbeCache.clear()
         prefixProbeCache.computeIfAbsent((lo, pruneCap), _ => {
           val per = segments.map(seg =>
-            Tables.read(spark, seg, InvertedIndex.DictTable)
+            InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
               .where(col("term") >= lo && col("term") < hi)
               .select("term").limit(pruneCap + 1).collect().map(_.getString(0)))
           val terms = per.flatten.distinct.toArray
@@ -1485,7 +1482,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
           col("tbucket").isin(tbs: _*) && rangePred
         case None => rangePred
       }
-      Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.PostingsTable)
         .where(pred)
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"))
     }
@@ -1615,7 +1612,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   private def idScanWithTerm(terms: Seq[String]): DataFrame =
     segments.zip(segBuckets).map { case (seg, b) =>
       val tb = terms.map(t => InvertedIndex.termBucket(t, b)).distinct
-      Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      InvertedIndex.read(spark, seg, InvertedIndex.PostingsTable)
         .where(col("tbucket").isin(tb: _*) && col("term").isin(terms: _*))
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"))
     }.reduce(_ unionByName _)
@@ -1938,7 +1935,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val meta = termMeta(tokens.distinct.sorted)
     if (tokens.distinct.exists(t => !meta.contains(t))) return emptyHits
     val idfSum = tokens.foldLeft(0.0)((acc, t) => acc + meta(t).idf)
-    val dl = segments.map(seg => Tables.read(spark, seg, InvertedIndex.DocsTable)
+    val dl = segments.map(seg => InvertedIndex.read(spark, seg, InvertedIndex.DocsTable)
       .select(col("docId"), col("dl"))).reduce(_ unionByName _)
     matchPhraseDf(phrase, slop).join(dl, Seq("docId"))
       .select(col("docId"),

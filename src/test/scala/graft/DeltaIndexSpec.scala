@@ -102,6 +102,26 @@ class DeltaIndexSpec extends SparkSpec {
     assert(fresh > before.size.toLong, "a fresh (unpinned) reader must see the delta docs")
   }
 
+  test("a third delta continues the docId space of the base and both earlier deltas") {
+    val dir = "/tmp/graft_delta_third"
+    Tables.delete(spark, "/tmp", "graft_delta_third")
+    InvertedIndex.build(spark, docsRange(0, 300), dir, cfg, "b")
+    val bounds = Seq((300L, 340L), (340L, 400L), (400L, 430L))
+    val dirs = bounds.zipWithIndex.map { case ((lo, hi), i) =>
+      DeltaIndex.addDocuments(spark, dir, docsRange(lo, hi), cfg, s"d$i")
+    }
+    assert(dirs == (0 to 2).map(i => f"$dir/deltas/d$i%04d"))
+    assert(DeltaIndex.segmentDirs(spark, dir).map(new org.apache.hadoop.fs.Path(_).getName) ==
+      Seq("graft_delta_third", "d0000", "d0001", "d0002"))
+    // each delta's docIds are dense from the docs committed before it
+    for (((lo, hi), d) <- bounds.zip(dirs)) {
+      val ids = Tables.read(spark, d, InvertedIndex.DocsTable).select("docId").as[Long].collect().sorted
+      assert(ids.toSeq == (lo until hi), s"docIds of $d")
+    }
+    assert(DeltaIndex.totalDocs(spark, dir) == 430L)
+    assert(new IndexReader(spark, dir).stats.numDocs == 430L)
+  }
+
   test("addDocuments rejects a key that already exists in any segment") {
     built
     val boom = intercept[IllegalArgumentException] {
