@@ -1,7 +1,9 @@
 package graft.ops
 
+import graft.functions.{HammingHex64, Md5Each, Md5Kernels, MinHashSig}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for training-data pipelines: exact (hash-groupBy),
   * MinHash+LSH banding, n-gram Jaccard verification, SimHash.
@@ -24,17 +26,26 @@ object DedupOps {
     df.select(col(id), md5(col(text)).as("fp"))
       .groupBy("fp").agg(min(col(id)).as("keeper"), count(lit(1)).as("group_size"))
 
-  /** (id, shingle) pairs: word 5-gram shingles, duplicates preserved.
-    * The source is fanned out first (Par.fanOut): the shingle consumers all
-    * do per-row CPU work (md5 per shingle per hash slot) that a byte-sized
-    * scan split would serialize on one core at small physical input sizes.
+  /** (id, arr): each row's lowercase whitespace-split words. The source is
+    * fanned out first (Par.fanOut): the shingle consumers all do per-row CPU
+    * work (md5 per shingle per hash slot) that a byte-sized scan split would
+    * serialize on one core at small physical input sizes.
     */
-  def shingles(df: DataFrame, id: String = "doc_id", text: String = "text"): DataFrame =
+  private def words(df: DataFrame, id: String, text: String): DataFrame =
     Par.fanOut(df.select(col(id), col(text)))
       .select(col(id), split(trim(lower(col(text))), "\\s+").as("arr"))
-      .select(col(id), explode(expr(
-        "transform(sequence(1, greatest(size(arr) - 4, 1)), i -> array_join(slice(arr, i, 5), ' '))"))
-        .as("shingle"))
+
+  /** A row's word 5-gram shingles over `arr` as one array, duplicates
+    * preserved; NULL text yields one NULL shingle. Consumers apply it
+    * inline: exploding it as a projected column would let the optimizer
+    * infer a `size(..) > 0` filter and evaluate the array twice.
+    */
+  private def shingleArray: Column =
+    expr("transform(sequence(1, greatest(size(arr) - 4, 1)), i -> array_join(slice(arr, i, 5), ' '))")
+
+  /** (id, shingle) pairs: word 5-gram shingles, duplicates preserved. */
+  def shingles(df: DataFrame, id: String = "doc_id", text: String = "text"): DataFrame =
+    words(df, id, text).select(col(id), explode(shingleArray).as("shingle"))
 
   /** Per-doc DISTINCT shingle set, aggregated ONCE (collect_set dedups in
     * the map-side partial aggregate): the shared source the n-gram Jaccard
@@ -54,20 +65,26 @@ object DedupOps {
     * shingle sets — same arrays the old collect_list(md5) aggregation built.
     */
   private def setFps(docSets: DataFrame, id: String): DataFrame =
-    docSets.select(col(id), sort_array(transform(col("shset"), s => md5(s))).as("set"))
+    docSets.select(col(id), sort_array(Md5Each(col("shset"))).as("set"))
 
   /** MinHash signatures banded for LSH: (id, band, bucket). The j-th hash
     * function is min(md5(shingle || '#' || j)); a band bucket is the md5 of
     * its 4 minhashes concatenated in hash order.
     *
-    * Shape: the 16 hash slots are 16 min-aggregates over ONE pass of the
-    * shingle stream (map-side partial agg), not a 16x row explode — at
-    * corpus scale the shuffle carries one row per doc, not 16 per shingle.
+    * Shape: each source row's 16-slot signature is ONE [[MinHashSig]] call
+    * over its shingle array, before any explode: one thread-local digest,
+    * raw 16-byte minima, hex only for the 16 winners. The groupBy(id) then
+    * takes a per-slot min (a min of minima, so rows sharing an id merge
+    * exactly as the per-shingle aggregate did) in the map-side partial
+    * aggregate; the exchange carries one fixed-width row per doc. The 16
+    * `sig(j)` reads do not re-run the kernel: the optimizer only inlines an
+    * expensive projection into a consumer that references it once.
     */
   def minhashBands(df: DataFrame, id: String = "doc_id", text: String = "text"): DataFrame = {
-    val aggs = (0 until NumHashes).map(j =>
-      min(md5(concat(col("shingle"), lit("#"), lit(j.toString)))).as(s"mh$j"))
-    val sig = shingles(df, id, text).groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
+    val aggs = (0 until NumHashes).map(j => min(col("sig")(j)).as(s"mh$j"))
+    val sig = words(df, id, text)
+      .select(col(id), MinHashSig(shingleArray, NumHashes).as("sig"))
+      .groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
     val bandStructs = (0 until NumHashes / BandSize).map { b =>
       val mhs = (b * BandSize until (b + 1) * BandSize).map(j => col(s"mh$j"))
       struct(lit(b).as("band"), md5(concat(mhs: _*)).as("bucket"))
@@ -79,11 +96,10 @@ object DedupOps {
   /** LSH candidate pairs (a < b sharing any band bucket) verified with EXACT
     * shingle-set Jaccard >= minJaccard.
     *
-    * Shape note (r07): the band side deliberately stays on [[minhashBands]]'
-    * 16-min-aggregate form — the 16 md5 evaluations per shingle run in the
-    * MAP-SIDE partial aggregate (parallel over scan/fan-out partitions) and
-    * the exchange carries 16 fixed-width partials per doc. A shared
-    * set-aggregate formulation was tried and measured SLOWER: the post-
+    * Shape: the band side stays on [[minhashBands]]' per-row signature —
+    * the md5 work runs BEFORE the exchange, parallel over the scan/fan-out
+    * partitions, and the exchange carries 16 fixed-width minima per doc.
+    * Hashing after a shared set-aggregate was measured SLOWER: the post-
     * shuffle final aggregate is AQE-coalesced to one task at small shuffle
     * sizes, serializing the hash work.
     */
@@ -94,12 +110,11 @@ object DedupOps {
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col(s"x.$id") < col(s"y.$id"))
       .select(col(s"x.$id").as("a"), col(s"y.$id").as("b")).distinct()
+    // each row's shingles are fingerprinted by one Md5Each call, then
     // collect_set dedups inside the (map-side partial) aggregate, so the
-    // verify arrays build in ONE exchange — the old distinct()-then-
-    // collect_list shape exchanged the full shingle stream twice. Dedup on
-    // md5 == dedup on shingle; sorted arrays identical.
-    val sets = shingles(df, id, text)
-      .groupBy(col(id)).agg(sort_array(collect_set(md5(col("shingle")))).as("set"))
+    // verify arrays build in ONE exchange. Dedup on md5 == dedup on shingle.
+    val sets = words(df, id, text).select(col(id), explode(Md5Each(shingleArray)).as("fp"))
+      .groupBy(col(id)).agg(sort_array(collect_set(col("fp"))).as("set"))
     verifyJaccardSets(sets, cand, minJaccard, id)
   }
 
@@ -118,7 +133,7 @@ object DedupOps {
   def ngramJaccardPairs(df: DataFrame, minJaccard: Double, maxShingleDf: Long = 20,
       id: String = "doc_id", text: String = "text"): DataFrame = {
     val docSets = docShingleSets(df, id, text)
-    val fps = docSets.select(col(id), explode(transform(col("shset"), s => md5(s))).as("fp"))
+    val fps = docSets.select(col(id), explode(Md5Each(col("shset"))).as("fp"))
     val rare = fps.groupBy("fp").agg(count(lit(1)).as("sdf"))
       .where(col("sdf") > 1 && col("sdf") <= maxShingleDf)
     val shRare = fps.join(rare.select("fp"), Seq("fp"))
@@ -140,11 +155,11 @@ object DedupOps {
     * Shape: each doc's distinct shingle set is aggregated ONCE into a sorted
     * array of md5 fingerprints (fixed 32 chars — bounds the row width; 128-bit
     * fingerprints make collisions impossible in practice, so set Jaccard over
-    * fingerprints equals set Jaccard over shingles). Each candidate pair then
-    * intersects two arrays in ONE narrow pass — the verify cost is linear in
-    * the candidate count, never a second shingle-equality join over the
-    * corpus (which re-scanned + re-shuffled the whole shingle stream twice
-    * and was the round-1 bench hot spot at 46% of total wall).
+    * fingerprints equals set Jaccard over shingles), hashed by the native
+    * [[Md5Each]] kernel per source row before the set aggregate or per set
+    * after it. Each candidate pair then intersects two arrays in ONE narrow
+    * pass — the verify cost is linear in the candidate count, never a second
+    * shingle-equality join over the corpus.
     */
   private def verifyJaccardSets(sets: DataFrame, cand: DataFrame, minJaccard: Double,
       id: String): DataFrame = {
@@ -159,7 +174,8 @@ object DedupOps {
   }
 
   /** 64-bit SimHash over the analyzer term stream, tf-weighted. Bits come
-    * from the first 16 hex chars of md5(term). Pure narrow map (no shuffle);
+    * from the first 16 hex chars of md5(term), read straight from the digest
+    * ([[Md5Kernels.md5Prefix64]]). Pure narrow map (no shuffle);
     * Spark-only (bit-twiddling has no compact SQL twin — driver does the
     * rows-only check).
     */
@@ -169,8 +185,7 @@ object DedupOps {
       val (m, _) = graft.tokenize.CodeTokenizer.tfMap(t)
       val acc = new Array[Long](64)
       m.foreach { case (term, tf) =>
-        val h = java.lang.Long.parseUnsignedLong(
-          org.apache.commons.codec.digest.DigestUtils.md5Hex(term).substring(0, 16), 16)
+        val h = Md5Kernels.md5Prefix64(term)
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) acc(b) += tf else acc(b) -= tf
@@ -199,34 +214,11 @@ object DedupOps {
           col(s"x.$id") < col(s"y.$id"))
       .select(col(s"x.$id").as("a"), col(s"y.$id").as("b"),
         col("x.simhash").as("ha"), col("y.simhash").as("hb")).distinct()
-    // Hamming distance piecewise over 16-bit quarters: conv of a 4-hex-char
-    // piece always fits an int, so ANSI-mode casts never overflow (a full
-    // 64-bit conv of e.g. "ffff..." would).
-    cand.withColumn("dist",
-        expr("""aggregate(sequence(0, 3), 0, (acc, q) ->
-          acc + bit_count(cast(conv(substring(ha, q*4 + 1, 4), 16, 10) as int) ^
-                          cast(conv(substring(hb, q*4 + 1, 4), 16, 10) as int)))"""))
+    cand.withColumn("dist", HammingHex64(col("ha"), col("hb")))
       .where(col("dist") <= maxDist)
       .select("a", "b", "dist")
   }
 
-  /** Near-dup CLUSTERING — the step every dedup pipeline runs after pair
-    * generation: connected components over the (a, b) near-dup pair graph,
-    * each doc labeled with its component's MINIMUM doc id (`cluster`) and
-    * the canonical keeper flagged (`canonical` = doc == cluster min — the
-    * deterministic survivor-selection rule; a quality-ranked keeper swaps
-    * one orderBy). Min-label propagation to fixpoint: labels start at the
-    * node id, each round takes min(own, neighbors') over ONE exchange
-    * (map-side-combined min per node), stop when no label changes. Rounds
-    * are bounded by the component DIAMETER — near-dup components are
-    * band-join cliques-ish, so 2-4 rounds in practice; the iteration cap
-    * makes a pathological chain loud instead of silent. This is the
-    * standard iterative-join CC formulation (large-star/small-star's
-    * simple core) — every round is embarrassingly parallel, driver sees
-    * ONE convergence count per round. Output covers docs that appear in
-    * at least one pair (singletons are their own trivial cluster —
-    * callers union them back if they want full coverage).
-    */
   /** Benchmark-contamination check — the decontamination step every
     * training-data pipeline runs before a model ships: corpus docs that
     * share at least one word-5-gram shingle with the benchmark/eval set
@@ -274,13 +266,37 @@ object DedupOps {
     */
   private val CcDriverMaxEndpoints = 2000000L
 
-  /** Ids must be INTEGRAL (they are cast to long — the engine's doc_id
-    * grain); a string-keyed caller must map ids first. maxRounds bounds the
-    * distributed iteration only (the gated driver path always converges).
+  /** Near-dup CLUSTERING — the step every dedup pipeline runs after pair
+    * generation: connected components over the (a, b) near-dup pair graph,
+    * each doc labeled with its component's MINIMUM doc id (`cluster`) and
+    * the canonical keeper flagged (`canonical` = doc == cluster min — the
+    * deterministic survivor-selection rule; a quality-ranked keeper swaps
+    * one orderBy). Min-label propagation to fixpoint: labels start at the
+    * node id, each round takes min(own, neighbors') over ONE exchange
+    * (map-side-combined min per node), stop when no label changes. Rounds
+    * are bounded by the component DIAMETER — near-dup components are
+    * band-join cliques-ish, so 2-4 rounds in practice; the iteration cap
+    * makes a pathological chain loud instead of silent. This is the
+    * standard iterative-join CC formulation (large-star/small-star's
+    * simple core) — every round is embarrassingly parallel, driver sees
+    * ONE convergence count per round. Output covers docs that appear in
+    * at least one pair (singletons are their own trivial cluster —
+    * callers union them back if they want full coverage).
+    *
+    * Input contract: pair columns `a` and `b` must be INTEGRAL ids (they are
+    * cast to long — the engine's doc_id grain); a string-keyed caller must
+    * map ids first. maxRounds bounds the distributed iteration only (the
+    * gated driver path always converges).
     */
   def nearDupClusters(pairs: DataFrame, maxRounds: Int = 20,
       driverMaxEndpoints: Long = CcDriverMaxEndpoints): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
+    Seq("a", "b").foreach { c =>
+      val t = pairs.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"nearDupClusters: pair column '$c' must hold integral ids, got ${t.simpleString} " +
+          "(input contract in the nearDupClusters scaladoc: map non-integral ids to longs first)")
+    }
     val spark = pairs.sparkSession
     import spark.implicits._
     val sc = spark.sparkContext

@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Scan-parallelism guard for CPU-bound narrow pipelines (tokenize / md5 /
   * shingle streams): Spark sizes scan splits by BYTES (`maxPartitionBytes`
@@ -15,18 +17,23 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * unchanged.
   */
 object Par {
-  // CALL-SITE CONTRACT: pass scan-level frames only (projections over a
-  // source read, nothing with an exchange upstream). Reading the partition
-  // count goes through df.rdd, which finalizes the adaptive plan — over a
-  // frame with upstream shuffles that would EXECUTE them just to count
-  // partitions and then re-run them in the real query.
+  /** Widens `df` to defaultParallelism when its plan is scan-level and has
+    * fewer partitions. A frame whose planned physical plan has an exchange
+    * upstream comes back unchanged: counting its partitions would finalize
+    * the adaptive plan, i.e. EXECUTE the upstream shuffles just to count and
+    * then re-run them in the real query. The check only plans; the
+    * partition count comes from the same plan's RDD, so no job runs here.
+    */
   def fanOut(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
-  def fanOutDs[T](ds: Dataset[T]): Dataset[T] = {
-    val par = ds.sparkSession.sparkContext.defaultParallelism
-    if (ds.rdd.getNumPartitions < par) ds.repartition(par) else ds
+    val qe = df.queryExecution
+    val physical = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    if (physical.exists(_.isInstanceOf[Exchange])) df
+    else {
+      val par = df.sparkSession.sparkContext.defaultParallelism
+      if (qe.toRdd.getNumPartitions < par) df.repartition(par) else df
+    }
   }
 }

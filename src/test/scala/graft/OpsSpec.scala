@@ -301,4 +301,25 @@ class OpsSpec extends SparkSpec {
     val e = intercept[Exception](bad.select(native).collect())
     assert(e.getMessage != null)
   }
+
+  test("Par.fanOut: a frame with an upstream exchange comes back untouched, no job runs") {
+    val agg = spark.range(0, 1000, 1, 3).groupBy((col("id") % 7).as("k")).count()
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(countJobs { out = Par.fanOut(agg) } == 0)
+    assert(out eq agg)
+    // a one-split scan still widens to defaultParallelism
+    val par = spark.sparkContext.defaultParallelism
+    val oneSplit = spark.range(0, 100, 1, 1).toDF("id")
+    assert(Par.fanOut(oneSplit).rdd.getNumPartitions == par)
+  }
+
+  test("nearDupClusters input contract: non-integral ids fail fast with the contract message") {
+    val byName = Seq(("x", "y"), ("y", "z")).toDF("a", "b")
+    val e = intercept[IllegalArgumentException](DedupOps.nearDupClusters(byName).collect())
+    assert(e.getMessage.contains("pair column 'a' must hold integral ids, got string"), e.getMessage)
+    assert(e.getMessage.contains("nearDupClusters scaladoc"))
+    // narrower integral ids are accepted and widen to long
+    val ints = Seq((1, 2), (2, 3)).toDF("a", "b")
+    assert(DedupOps.nearDupClusters(ints).collect().map(_.getLong(1)).toSet == Set(1L))
+  }
 }

@@ -73,23 +73,6 @@ class TableSchemaSpec extends SparkSpec {
     assert(committed.nonEmpty && committed == reference, s"$dir lineage/$stage")
   }
 
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // listener delivery is async — poll until the count stabilizes
-      var prev = -1; var cur = jobs.get
-      while (cur != prev) { Thread.sleep(300); prev = cur; cur = jobs.get }
-      cur
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("declared schemas == inferred: positions on/off, empty corpus, delta segment") {
     val (on, off, empty) = (fresh("on"), fresh("off"), fresh("empty"))
     InvertedIndex.build(spark, docsRange(0, 400), on, cfg, "on")
