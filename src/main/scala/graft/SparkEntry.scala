@@ -2516,8 +2516,8 @@ object SparkEntry {
         |fd AS (SELECT user_id, min(cast(ts AS date)) AS day FROM events GROUP BY 1),
         |nb AS (SELECT day, count(*) AS n_new FROM fd GROUP BY 1)
         |SELECT d.day, coalesce(nb.n_new, 0) AS n_new,
-        |       sum(coalesce(nb.n_new, 0)) OVER
-        |         (ORDER BY d.day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_keys
+        |       CAST(sum(coalesce(nb.n_new, 0)) OVER
+        |         (ORDER BY d.day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_keys
         |FROM days d LEFT JOIN nb USING (day) ORDER BY d.day""".stripMargin,
     "a54_t_test" ->
       """SELECT round(
