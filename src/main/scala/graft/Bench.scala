@@ -12,9 +12,8 @@ import org.apache.spark.sql.SparkSession
   * throughput over the warm index is reported as `bm25_qps`.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The bench session on `cpus` local cores (BenchExtra measures with it too). */
+  def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -29,6 +28,13 @@ object Bench {
       .config("spark.memory.offHeap.size", (1024L * 1024 * 1024 * cpus.toLong).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = session(cpus)
 
     // fresh, timed engine build (docs -> registry/stats/postings/dictionary);
     // the delta-served pair (b15's base + delta segment) is timed apart so

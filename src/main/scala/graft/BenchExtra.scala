@@ -2,7 +2,6 @@ package graft
 
 import graft.driver.DocumentsIndex
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement-only harness for the optimization rounds (guide §1): times
   * individual SparkEntry.queries entries with the SAME session config and
@@ -38,15 +37,7 @@ object BenchExtra {
     val explainTag = args.drop(1).headOption.getOrElse("")
       .filter(c => c.isLetterOrDigit || c == '_' || c == '-' || c == '.')
     val names = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", (1024L * 1024 * 1024 * cpus.toLong).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
 
     val counts = new Counts
     spark.sparkContext.addSparkListener(counts)

@@ -1,19 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev utility: run a SUBSET of contract rows (graft.Verify runs all of
   * them) — `runMain graft.Scratch <sfDir> <outDir> <name>...` writes each
   * row's parquet plus the matching oracle_sql.json slice, ready for
-  * tools/check_oracle.py. Keeps the add-one-row loop to seconds.
+  * tools/check_oracle.py. Keeps the add-one-row loop to seconds. Runs in
+  * Verify's session (same `SPARK_GRAFT_CPUS`), so a subset reproduces what
+  * Verify would write.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Verify.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val t0 = System.nanoTime()

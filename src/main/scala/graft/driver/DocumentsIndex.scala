@@ -4,7 +4,8 @@ import graft.fixtures.CodeFile
 import graft.index.{DeltaIndex, IndexConfig, InvertedIndex}
 import graft.lineage.Manifests
 import graft.query.IndexReader
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.tokenize.Analyzer
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Engine facade over the driver's `documents` parquet table: builds (once
@@ -20,158 +21,193 @@ import org.apache.spark.sql.functions._
   * rounded re-sort so the rounded boundary is stable.
   */
 object DocumentsIndex {
-  private val cache = scala.collection.mutable.Map[String, String]()
-  private val readers = scala.collection.mutable.Map[String, IndexReader]()
-
-  def dirFor(sfDir: String): String =
-    "/tmp/graft_docidx_" + graft.fixtures.CorpusGen.sha256Hex(sfDir).substring(0, 12)
-
-  /** Drop the cached index for this sf dir and rebuild it, returning build
-    * wall-seconds (Bench uses this so builds are never hidden in query
-    * timings).
+  /** The stopword list the driver's stop-analyzed index pins (both corpus
+    * terms, so the filter visibly changes dl/avgdl and hence every score).
+    * SparkEntry's twin SQL derives its NOT IN fragment from the SAME
+    * Analyzer value — one source of truth.
     */
-  def rebuild(spark: SparkSession, sfDir: String): Double = synchronized {
-    for (idx <- Seq(dirFor(sfDir), dirFor(sfDir) + "_tags", dirFor(sfDir) + "_stop")) {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      readers.remove(idx)
-    }
-    cache.remove(sfDir)
-    cache.remove(s"$sfDir#tags")
-    cache.remove(s"$sfDir#stop")
-    val t0 = System.nanoTime()
-    // The three sub-index builds are INDEPENDENT (distinct dirs; the docId
-    // assignment is a pure function of (key set, partitions, idBase), so
-    // build order cannot change any output). Submit them from a small
-    // thread pool (optimization guide §2.6): each build alternates serial
-    // driver phases (docId-plan collect, heavy-term collect, manifest
-    // commits) with short parallel jobs, and overlapping the three fills
-    // those gaps with another build's tasks — measured ~2x on build_sec.
-    // Spark's scheduler handles concurrent job submission; FIFO scheduling
-    // gives exactly the back-fill behaviour wanted.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      val futs = Seq[(String, () => String)](
-        sfDir -> (() => buildTextIdx(spark, sfDir)),
-        s"$sfDir#tags" -> (() => buildTagsIdx(spark, sfDir)),
-        s"$sfDir#stop" -> (() => buildStopIdx(spark, sfDir))
-      ).map { case (key, body) =>
-        key -> pool.submit(new java.util.concurrent.Callable[String] {
-          def call(): String = body()
-        })
+  val StopwordSet: Set[String] = Set("the", "a")
+
+  /** One on-disk sub-index over the documents table: the column it indexes
+    * and how. Every sub-index shares one lifecycle ([[ensure]], [[served]],
+    * [[rebuildAll]]); only [[build]] differs per row, and a test may
+    * override it.
+    *
+    * `deltaEvery = Some(n)` serves the corpus THROUGH the segment model
+    * (SURVEY.md §2.3 B14): a base segment over all docs with doc_id % n != 0,
+    * plus one delta segment (DeltaIndex.addDocuments) holding the rest — so
+    * the driver's DuckDB oracle (which scores the FULL table) checks the
+    * composite base-∪-delta read path: merged df/N/avgdl at query compile
+    * and recomputed block bounds.
+    */
+  private[graft] case class SubIndex(suffix: String, content: Column, storePositions: Boolean,
+      analyzer: Analyzer = Analyzer.default, deltaEvery: Option[Int] = None) {
+    private def runId = "driver" + suffix.replace('_', '-')
+
+    /** Build into the empty dir `idx` from the documents table of `sfDir`. */
+    def build(spark: SparkSession, sfDir: String, idx: String): Unit = {
+      val src = source(spark, sfDir, content)
+      val cfg = IndexConfig(partitions = spark.sessionState.conf.numShufflePartitions,
+        heavyDfThreshold = 1000L, saltRunDocs = 1000L, storePositions = storePositions,
+        analyzer = analyzer)
+      deltaEvery match {
+        case None => InvertedIndex.build(spark, src, idx, cfg, runId)
+        case Some(n) =>
+          val id = col("path").cast("long")
+          InvertedIndex.build(spark, src.where(id % n =!= 0), idx, cfg, s"$runId-base")
+          DeltaIndex.addDocuments(spark, idx, src.where(id % n === 0), cfg, s"$runId-add")
       }
-      futs.foreach { case (key, f) =>
-        // unwrap so the caller sees the build's own exception type, not
-        // ExecutionException
-        val idx =
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        cache.update(key, idx)
-      }
-    } finally {
-      // On a failed sibling build, do NOT leave the other builds running
-      // detached — a retrying caller would delete directories under live
-      // writers. shutdownNow interrupts; the bounded await keeps the
-      // failure path from returning while writers are still in flight.
-      pool.shutdownNow()
-      pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
       ()
     }
-    (System.nanoTime() - t0) / 1e9
   }
 
-  /** Drop and rebuild the delta-served index pair (base + one delta
-    * segment), timed separately from [[rebuild]] so the bench's `build_sec`
-    * stays comparable across rounds.
+  private[graft] val Text = SubIndex("", col("text"), storePositions = true)
+  /** `tags` = concat(lang, ' ', source): the driver table's categorical
+    * metadata as an analyzed field (the reference's schema.org entities
+    * carry many such fields next to the main text). Tiny: ~2 tokens/doc;
+    * frequency queries only, so no positions.
     */
-  def rebuildDelta(spark: SparkSession, sfDir: String): Double = synchronized {
-    val idx = dirFor(sfDir) + "_delta"
-    val p = new org.apache.hadoop.fs.Path(idx)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    readers.remove(idx)
-    cache.remove(s"$sfDir#delta")
-    val t0 = System.nanoTime()
-    deltaIndexDir(spark, sfDir)
-    (System.nanoTime() - t0) / 1e9
-  }
+  private[graft] val Tags =
+    SubIndex("_tags", concat_ws(" ", col("lang"), col("source")), storePositions = false)
+  /** The SAME text built through Analyzer(StopwordSet) (SURVEY.md §7.8) —
+    * ES's standard analyzer with a stop filter.
+    */
+  private[graft] val Stop =
+    SubIndex("_stop", col("text"), storePositions = true, analyzer = Analyzer(StopwordSet))
+  /** Frequency-only: this pair exists to exercise delta serving, not phrase. */
+  private[graft] val Delta =
+    SubIndex("_delta", col("text"), storePositions = false, deltaEvery = Some(17))
 
-  /** The documents table as the engine's `code_files` source shape (doc_id
-    * carried through path AND commit — the registry locator).
+  /** The documents table as the engine's `code_files` source shape, indexing
+    * `content` (doc_id carried through path AND commit — the registry
+    * locator).
     */
-  private def docsSource(spark: SparkSession, sfDir: String): Dataset[CodeFile] = {
+  private def source(spark: SparkSession, sfDir: String, content: Column): Dataset[CodeFile] = {
     import spark.implicits._
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(lit("corpus").as("repo"), col("doc_id").cast("string").as("path"),
-        col("doc_id").cast("string").as("commit"), col("lang"), col("text").as("content"))
+        col("doc_id").cast("string").as("commit"), col("lang"), content.as("content"))
       .as[CodeFile]
   }
 
-  private def driverCfg(spark: SparkSession, storePositions: Boolean = true): IndexConfig =
-    IndexConfig(partitions = spark.sessionState.conf.numShufflePartitions,
-      heavyDfThreshold = 1000L, saltRunDocs = 1000L, storePositions = storePositions)
+  /** Cache dir of `sub` over `sfDir`. It names the build's only
+    * session-dependent input, the shuffle-partition count (it fixes the
+    * docId plan), so the text and tags dirs one session serves always share
+    * PLAN_GEOMETRY, and sessions with different counts never rebuild over
+    * each other's dirs.
+    */
+  private def dirFor(spark: SparkSession, sfDir: String, sub: SubIndex): String =
+    "/tmp/graft_docidx_" + graft.fixtures.CorpusGen.sha256Hex(sfDir).substring(0, 12) +
+      "_p" + spark.sessionState.conf.numShufflePartitions + sub.suffix
 
-  def indexDir(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(sfDir, buildTextIdx(spark, sfDir))
+  /** A validated sub-index dir and its reader, made on first use. */
+  private final class Served(spark: SparkSession, val dir: String) {
+    lazy val reader: IndexReader = new IndexReader(spark, dir)
   }
 
-  /** Unsynchronized build body (idempotent: skips when already committed) —
-    * [[rebuild]] runs the three sub-index bodies concurrently, so they must
-    * not re-enter this object's monitor.
+  /** Cache dir -> its sub-index, once this process has validated or built it. */
+  private val memo = scala.collection.mutable.Map[String, Served]()
+
+  /** The cache dir of `sub`, resumed when committed, complete, of this
+    * build's format version and analyzer (and, for a delta-served row,
+    * holding its delta); otherwise (or when `force`) deleted and built
+    * afresh. Unsynchronized: [[rebuildAll]]'s pool threads run it and must
+    * never re-enter this object's monitor.
     */
-  private def buildTextIdx(spark: SparkSession, sfDir: String): String = {
-    val idx = dirFor(sfDir)
-    if (!Manifests.isComplete(spark, idx, "dictionary") ||
-        !InvertedIndex.formatVersionOk(spark, idx)) {
+  private def ensure(spark: SparkSession, sfDir: String, sub: SubIndex, force: Boolean): String = {
+    val idx = dirFor(spark, sfDir, sub)
+    val valid = !force && Manifests.isComplete(spark, idx, "dictionary") &&
+      InvertedIndex.formatVersionOk(spark, idx) &&
+      InvertedIndex.readAnalyzer(spark, idx) == sub.analyzer &&
+      (sub.deltaEvery.isEmpty || DeltaIndex.deltaDirs(spark, idx).nonEmpty)
+    if (!valid) {
       val p = new org.apache.hadoop.fs.Path(idx)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      InvertedIndex.build(spark, docsSource(spark, sfDir), idx, driverCfg(spark),
-        runId = "driver")
-      ()
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      sub.build(spark, sfDir, idx)
     }
     idx
   }
 
-  /** The same corpus served THROUGH the segment model (SURVEY.md §2.3 B14):
-    * a base segment over all docs with doc_id % 17 != 0, plus one delta
-    * segment (DeltaIndex.addDocuments) holding the doc_id % 17 == 0 rest —
-    * so the driver's DuckDB oracle (which scores the FULL table) checks the
-    * composite base-∪-delta read path: merged df/N/avgdl at query compile
-    * and recomputed block bounds. Frequency-only (positions off): this pair
-    * exists to exercise delta serving, not phrase.
+  private def served(spark: SparkSession, sfDir: String, sub: SubIndex): Served = synchronized {
+    memo.getOrElseUpdate(dirFor(spark, sfDir, sub),
+      new Served(spark, ensure(spark, sfDir, sub, force = false)))
+  }
+
+  /** Drop and rebuild the text, tags and stop sub-indexes for this sf dir
+    * concurrently, returning build wall-seconds (Bench uses this so builds
+    * are never hidden in query timings).
+    *
+    * Cancellation: the first build to fail is rethrown as its own exception
+    * (not ExecutionException), and no build or Spark job of the others
+    * outlives the call — each build runs under its own Spark job group,
+    * whose active and future jobs are cancelled (tasks interrupted) before
+    * the builds are awaited, so a retrying caller never deletes a dir under
+    * a live writer.
     */
-  def deltaIndexDir(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(s"$sfDir#delta", {
-      val idx = dirFor(sfDir) + "_delta"
-      val served = Manifests.isComplete(spark, idx, "dictionary") &&
-        InvertedIndex.formatVersionOk(spark, idx) &&
-        DeltaIndex.deltaDirs(spark, idx).nonEmpty
-      if (!served) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-        val all = docsSource(spark, sfDir)
-        val cfg = driverCfg(spark, storePositions = false)
-        InvertedIndex.build(spark, all.where(col("path").cast("long") % 17 =!= 0), idx,
-          cfg, runId = "driver-delta-base")
-        DeltaIndex.addDocuments(spark, idx,
-          all.where(col("path").cast("long") % 17 === 0), cfg, runId = "driver-delta-add")
+  def rebuild(spark: SparkSession, sfDir: String): Double =
+    rebuildAll(spark, sfDir, Seq(Text, Tags, Stop))
+
+  /** Drop and rebuild the delta-served index (base + one delta segment),
+    * timed separately from [[rebuild]] so the bench's `build_sec` stays
+    * comparable across rounds. Same cancellation contract as [[rebuild]].
+    */
+  def rebuildDelta(spark: SparkSession, sfDir: String): Double =
+    rebuildAll(spark, sfDir, Seq(Delta))
+
+  /** The one rebuild path: delete and rebuild `subs` concurrently under
+    * [[rebuild]]'s cancellation contract, returning wall-seconds.
+    *
+    * The builds are INDEPENDENT (distinct dirs; the docId assignment is a
+    * pure function of (key set, partitions, idBase), so build order cannot
+    * change any output). Each alternates serial driver phases (docId-plan
+    * collect, heavy-term collect, manifest commits) with short parallel
+    * jobs; a pool sized to `subs` overlaps them so one build's tasks fill
+    * another's gaps (optimization guide §2.6) — measured ~2x on build_sec.
+    */
+  private[graft] def rebuildAll(spark: SparkSession, sfDir: String, subs: Seq[SubIndex]): Double =
+    synchronized {
+      val sc = spark.sparkContext
+      subs.foreach(sub => memo.remove(dirFor(spark, sfDir, sub)))
+      val t0 = System.nanoTime()
+      val groups = subs.map(sub => s"graft-rebuild${sub.suffix}-${java.util.UUID.randomUUID()}")
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(subs.size)
+      try {
+        val done = new java.util.concurrent.ExecutorCompletionService[String](pool)
+        subs.zip(groups).foreach { case (sub, g) =>
+          done.submit(new java.util.concurrent.Callable[String] {
+            def call(): String = {
+              sc.setJobGroup(g, s"rebuild ${sub.suffix} of $sfDir", interruptOnCancel = true)
+              try ensure(spark, sfDir, sub, force = true) finally sc.clearJobGroup()
+            }
+          })
+        }
+        subs.foreach { _ =>
+          val idx =
+            try done.take().get()
+            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+          memo.update(idx, new Served(spark, idx))
+        }
+      } finally {
+        // Cancel, then await WITHOUT interrupting: a build blocked on a job
+        // returns only once the scheduler has failed that job, so none
+        // outlives this call (an interrupt would return it while the
+        // cancellation is still queued). Interrupt only a build stuck
+        // outside Spark.
+        groups.foreach(sc.cancelJobGroupAndFutureJobs)
+        pool.shutdown()
+        if (!pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)) pool.shutdownNow()
       }
-      idx
-    })
-  }
+      (System.nanoTime() - t0) / 1e9
+    }
 
-  def reader(spark: SparkSession, sfDir: String): IndexReader = synchronized {
-    val idx = indexDir(spark, sfDir)
-    readers.getOrElseUpdate(idx, new IndexReader(spark, idx))
-  }
-
-  def deltaReader(spark: SparkSession, sfDir: String): IndexReader = synchronized {
-    val idx = deltaIndexDir(spark, sfDir)
-    readers.getOrElseUpdate(idx, new IndexReader(spark, idx))
-  }
+  def indexDir(spark: SparkSession, sfDir: String): String = served(spark, sfDir, Text).dir
+  def tagsIndexDir(spark: SparkSession, sfDir: String): String = served(spark, sfDir, Tags).dir
+  def stopIndexDir(spark: SparkSession, sfDir: String): String = served(spark, sfDir, Stop).dir
+  def deltaIndexDir(spark: SparkSession, sfDir: String): String = served(spark, sfDir, Delta).dir
+  def reader(spark: SparkSession, sfDir: String): IndexReader = served(spark, sfDir, Text).reader
+  def tagsReader(spark: SparkSession, sfDir: String): IndexReader = served(spark, sfDir, Tags).reader
+  def stopReader(spark: SparkSession, sfDir: String): IndexReader = served(spark, sfDir, Stop).reader
+  def deltaReader(spark: SparkSession, sfDir: String): IndexReader = served(spark, sfDir, Delta).reader
 
   /** Engine stats table in oracle-comparable form. */
   def statsDf(spark: SparkSession, sfDir: String): DataFrame =
@@ -1233,6 +1269,23 @@ object DocumentsIndex {
         transpositions = transpositions),
       indexDir(spark, sfDir))
 
+  /** Whether the text and tags sub-indexes may be merged by raw docId:
+    * both single-segment with EQUAL PLAN_GEOMETRY sidecars. The docId
+    * assignment is a pure function of (key set, partitions, docIdBase), all
+    * three captured in the fingerprint, so equality PROVES alignment — equal
+    * numDocs alone would pass two indexes built under different partition
+    * counts and silently merge UNRELATED documents.
+    */
+  private def fieldsAligned(spark: SparkSession, sfDir: String): Boolean = {
+    val geoms = Seq(indexDir(spark, sfDir), tagsIndexDir(spark, sfDir))
+      .map(InvertedIndex.readPlanGeometry(spark, _))
+    Seq(reader(spark, sfDir), tagsReader(spark, sfDir)).forall(_.segments.size == 1) &&
+      geoms.forall(_.isDefined) && geoms.distinct.size == 1
+  }
+
+  private val MisalignedFields = "text and tags are merged by docId — the sub-indexes must " +
+    "share PLAN_GEOMETRY (rebuild both in one session)"
+
   /** `combined_fields` (BM25F) over this driver table's two analyzed
     * fields — see MultiFieldIndex.combinedFieldsScoreAll for the pinned
     * term-centric semantics. Accepts the same `fields` boost specs as
@@ -1250,17 +1303,8 @@ object DocumentsIndex {
     val rs = Seq(reader(spark, sfDir), tagsReader(spark, sfDir))
     val ws = Seq(boostOf("text"), boostOf("tags"))
     // BM25F merges tf/dl PER DOCUMENT across the fields' frames by raw
-    // docId, so — exactly like cross_fields — the sub-indexes must prove
-    // docId alignment (equal numDocs alone would pass two indexes built
-    // under different partition counts, silently summing across UNRELATED
-    // documents). Geometry mismatch fails loudly; rebuild both in one
-    // build to realign.
-    val geoms = Seq(indexDir(spark, sfDir), tagsIndexDir(spark, sfDir))
-      .map(InvertedIndex.readPlanGeometry(spark, _))
-    require(rs.forall(_.segments.size == 1) &&
-      geoms.forall(_.isDefined) && geoms.distinct.size == 1,
-      "combined_fields merges fields by docId — sub-indexes must share " +
-        "PLAN_GEOMETRY (rebuild both fields in one build)")
+    // docId, so — exactly like cross_fields — it needs proven alignment
+    require(fieldsAligned(spark, sfDir), MisalignedFields)
     rankedByDocId(spark,
       graft.index.MultiFieldIndex.combinedFieldsScoreAll(spark, rs, ws, query),
       indexDir(spark, sfDir))
@@ -1353,81 +1397,6 @@ object DocumentsIndex {
   def termsAgg(spark: SparkSession, sfDir: String, size: Int): DataFrame =
     tagsReader(spark, sfDir).termsAggDf(size).select(col("term"), col("df"))
 
-  /** Second-field index over the documents table: `tags` =
-    * concat(lang, ' ', source) — the driver table's categorical metadata as
-    * an analyzed field (the reference's schema.org entities carry many such
-    * fields next to the main text). Cached + manifest-resumable like the
-    * text index. Tiny: ~2 tokens/doc.
-    */
-  def tagsIndexDir(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(s"$sfDir#tags", buildTagsIdx(spark, sfDir))
-  }
-
-  private def buildTagsIdx(spark: SparkSession, sfDir: String): String = {
-    val idx = dirFor(sfDir) + "_tags"
-    if (!Manifests.isComplete(spark, idx, "dictionary") ||
-        !InvertedIndex.formatVersionOk(spark, idx)) {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      import spark.implicits._
-      val src = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(lit("corpus").as("repo"), col("doc_id").cast("string").as("path"),
-          col("doc_id").cast("string").as("commit"), col("lang"),
-          concat_ws(" ", col("lang"), col("source")).as("content"))
-        .as[graft.fixtures.CodeFile]
-      // categorical field: frequency queries only — skip positions (the
-      // IndexConfig scaladoc's canonical storePositions = false case)
-      InvertedIndex.build(spark, src, idx, driverCfg(spark, storePositions = false),
-        runId = "driver-tags")
-      ()
-    }
-    idx
-  }
-
-  def tagsReader(spark: SparkSession, sfDir: String): IndexReader = synchronized {
-    val idx = tagsIndexDir(spark, sfDir)
-    readers.getOrElseUpdate(idx, new IndexReader(spark, idx))
-  }
-
-  /** The stopword list the driver's stop-analyzed index pins (both corpus
-    * terms, so the filter visibly changes dl/avgdl and hence every score).
-    * SparkEntry's twin SQL derives its NOT IN fragment from the SAME
-    * Analyzer value — one source of truth.
-    */
-  val StopwordSet: Set[String] = Set("the", "a")
-
-  /** Stopword-analyzed text index (SURVEY.md §7.8): the SAME documents
-    * source built through Analyzer(StopwordSet) — ES's standard analyzer
-    * with a stop filter. The resume check includes the ANALYZER sidecar: a
-    * cached dir built with a DIFFERENT stopword set is rebuilt, never
-    * silently served.
-    */
-  def stopIndexDir(spark: SparkSession, sfDir: String): String = synchronized {
-    cache.getOrElseUpdate(s"$sfDir#stop", buildStopIdx(spark, sfDir))
-  }
-
-  private def buildStopIdx(spark: SparkSession, sfDir: String): String = {
-    val idx = dirFor(sfDir) + "_stop"
-    val want = graft.tokenize.Analyzer(StopwordSet)
-    if (!Manifests.isComplete(spark, idx, "dictionary") ||
-        !InvertedIndex.formatVersionOk(spark, idx) ||
-        InvertedIndex.readAnalyzer(spark, idx) != want) {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      InvertedIndex.build(spark, docsSource(spark, sfDir), idx,
-        driverCfg(spark).copy(analyzer = want), runId = "driver-stop")
-      ()
-    }
-    idx
-  }
-
-  def stopReader(spark: SparkSession, sfDir: String): IndexReader = synchronized {
-    val idx = stopIndexDir(spark, sfDir)
-    readers.getOrElseUpdate(idx, new IndexReader(spark, idx))
-  }
-
   /** BM25 match THROUGH the stopword-analyzed index: query text is analyzed
     * by the index's own analyzer (sidecar-loaded), so stopwords in the
     * query drop out exactly as at build time; scores differ from the
@@ -1451,18 +1420,14 @@ object DocumentsIndex {
     * (its own df/avgdl) + tags-field BM25 (its own df/avgdl) — Lucene
     * BooleanQuery SHOULD across fielded clauses.
     *
-    * Serving path (top-k): when BOTH sub-indexes are single-segment and
-    * their PLAN_GEOMETRY sidecars are EQUAL — the docId assignment is a
-    * pure function of (key set, partitions, docIdBase), all three captured
-    * in the fingerprint, so equality PROVES docId alignment — the query
-    * runs through the exact bounded cross-field WAND
-    * (MultiFieldIndex.multiMatchTopKReaders): one job, θ-pruned, never
-    * scoring the full match union. The scores are bit-exact vs the rank-all
-    * form (per-field partial sums in cursor order — sbt-gated), so the
-    * shared 6-dp over-fetch stability protocol applies unchanged. Geometry
-    * mismatch (sub-indexes built in different sessions with different
-    * partition counts) or k <= 0 falls back to rank-all joined on the
-    * STABLE doc_id key, which needs no alignment.
+    * Serving path (top-k): when the fields are docId-aligned
+    * ([[fieldsAligned]]) the query runs through the exact bounded
+    * cross-field WAND (MultiFieldIndex.multiMatchTopKReaders): one job,
+    * θ-pruned, never scoring the full match union. The scores are bit-exact
+    * vs the rank-all form (per-field partial sums in cursor order —
+    * sbt-gated), so the shared 6-dp over-fetch stability protocol applies
+    * unchanged. Misaligned fields or k <= 0 fall back to rank-all joined on
+    * the STABLE doc_id key, which needs no alignment.
     */
   def multiMatch(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
     multiMatch(spark, sfDir, query, k, Seq("text", "tags"))
@@ -1495,12 +1460,11 @@ object DocumentsIndex {
     val boostOf = parsed.toMap
     val (textB, tagsB) = (boostOf("text"), boostOf("tags"))
     val textIdx = indexDir(spark, sfDir)
-    val tagsIdx = tagsIndexDir(spark, sfDir)
     def rankAll: DataFrame = {
       val text = reader(spark, sfDir).scoreAllDf(query, textB)
         .join(docIdMap(spark, sfDir), Seq("docId")).select(col("doc_id"), col("score").as("s_text"))
       val tags = tagsReader(spark, sfDir).scoreAllDf(query, tagsB)
-        .join(docIdMapOf(spark, tagsIdx), Seq("docId"))
+        .join(docIdMapOf(spark, tagsIndexDir(spark, sfDir)), Seq("docId"))
         .select(col("doc_id"), col("score").as("s_tags"))
       // field order (text, tags) == the WAND path's group order
       val perCol = Seq(coalesce(col("s_text"), lit(0.0)), coalesce(col("s_tags"), lit(0.0)))
@@ -1515,11 +1479,7 @@ object DocumentsIndex {
     }
     val rs = Seq(reader(spark, sfDir), tagsReader(spark, sfDir))
     val boosts = Seq(textB, tagsB)
-    val aligned = rs.forall(_.segments.size == 1) && {
-      val geoms = Seq(textIdx, tagsIdx).map(InvertedIndex.readPlanGeometry(spark, _))
-      geoms.forall(_.isDefined) && geoms.distinct.size == 1
-    }
-    if (k > 0 && aligned)
+    if (k > 0 && fieldsAligned(spark, sfDir))
       stableTopK(spark, textIdx, k,
         f => graft.index.MultiFieldIndex.multiMatchTopKReaders(spark, rs, query, f,
           boosts, tieBreaker),
@@ -1542,15 +1502,8 @@ object DocumentsIndex {
   def multiMatchCross(spark: SparkSession, sfDir: String, query: String,
       k: Int, tieBreaker: Double = 0.0): DataFrame = {
     val textIdx = indexDir(spark, sfDir)
-    val tagsIdx = tagsIndexDir(spark, sfDir)
     val rs = Seq(reader(spark, sfDir), tagsReader(spark, sfDir))
-    val aligned = rs.forall(_.segments.size == 1) && {
-      val geoms = Seq(textIdx, tagsIdx).map(InvertedIndex.readPlanGeometry(spark, _))
-      geoms.forall(_.isDefined) && geoms.distinct.size == 1
-    }
-    require(aligned,
-      "cross_fields blending joins fields by docId — sub-indexes must share " +
-        "PLAN_GEOMETRY (rebuild both fields in one build)")
+    require(fieldsAligned(spark, sfDir), MisalignedFields)
     def rankAll: DataFrame = {
       val out = rankedByDocId(spark,
         graft.index.MultiFieldIndex.crossFieldsScoreAllReaders(spark, rs, query,

@@ -96,7 +96,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
 
   // memo for matchPrefixDf's bounded expansion probe — see the HOT-PREFIX
   // MEMO note there. @transient: driver-side cache, never shipped.
-  // BOUNDED: readers are cached process-wide (DocumentsIndex.readers), so a
+  // BOUNDED: readers are cached process-wide (DocumentsIndex.memo), so a
   // serving process answering arbitrary user prefixes would otherwise grow
   // this map forever — at the cap the map resets wholesale (hot prefixes
   // re-memoize within one probe; an LRU would buy little over that here).
