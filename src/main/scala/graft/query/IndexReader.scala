@@ -16,7 +16,9 @@ import org.apache.spark.util.LongAccumulator
   * eliminates postings directories at the catalog, and the term predicate's
   * min/max row-group stats prune within a bucket's term-sorted files);
   * per-bucket scoring (= per-shard); one global TakeOrderedAndProject merge
-  * (= coordinator merge).
+  * (= coordinator merge). A top-k query whose query-term postings are small
+  * skips the bucketing: its blocks are collected in one job and scored on
+  * the driver as a single bucket (see `topKHits`).
   *
   * A reader serves the BASE SEGMENT plus every delta segment committed under
   * `<indexDir>/deltas/` (graft.index.DeltaIndex) as ONE logical index —
@@ -151,20 +153,34 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       segments.map { seg =>
         InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
           .where(col("term").isin(missing.toSeq: _*))
-          .select("term", "df", "maxTfn", "maxTf", "minDl")
+          .select(DictMetaCols.map(col): _*)
       }.reduce(_ unionByName _)
         .collect()
         .foreach { r =>
-          val t = r.getString(0)
+          val (t, (df, mtfn, mtf, mdl)) = dictMetaRow(r)
           val (df0, mtfn0, mtf0, mdl0) = acc.getOrElse(t, (0L, 0.0, 0, Int.MaxValue))
-          acc.update(t, (df0 + r.getLong(1), math.max(mtfn0, r.getDouble(2)),
-            math.max(mtf0, r.getInt(3)), math.min(mdl0, r.getInt(4))))
+          acc.update(t, (df0 + df, math.max(mtfn0, mtfn), math.max(mtf0, mtf), math.min(mdl0, mdl)))
         }
-      if (dictMemo.size() + missing.length > DictMemoMax) dictMemo.clear()
-      missing.foreach(t => dictMemo.put(t, acc.get(t)))
+      memoizeDict(missing.map(t => t -> acc.get(t)).toSeq)
       known ++= acc
     }
     known.toMap
+  }
+
+  /** The dictionary columns every term-meta lookup reads, in the order
+    * [[dictMetaRow]] decodes them.
+    */
+  private val DictMetaCols = Seq("term", "df", "maxTfn", "maxTf", "minDl")
+
+  private def dictMetaRow(r: org.apache.spark.sql.Row): (String, (Long, Double, Int, Int)) =
+    (r.getString(0), (r.getLong(1), r.getDouble(2), r.getInt(3), r.getInt(4)))
+
+  /** Records merged dictionary rows (None = proven absent) in the memo,
+    * resetting it wholesale at the cap.
+    */
+  private def memoizeDict(entries: Seq[(String, Option[(Long, Double, Int, Int)])]): Unit = {
+    if (dictMemo.size() + entries.length > DictMemoMax) dictMemo.clear()
+    entries.foreach { case (t, v) => dictMemo.put(t, v) }
   }
 
   private def cookMeta(merged: Map[String, (Long, Double, Int, Int)])
@@ -242,14 +258,17 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     }.toDF("docId", "term", "contrib")
   }
 
-  /** The bucketize skeleton every distributed query path shares (BMW,
-    * batch, phrase, bool): query-term blocks re-bucket by docId range —
-    * a block spanning bucket boundaries is replicated and masked by the
-    * [lo, hi) the scorer receives — and each bucket scores locally. The
-    * group-span arithmetic is correctness-critical and lives ONLY here;
-    * so does the per-term firstDocId block sort (`sortBlocks`) that every
+  /** The bucketize skeleton every distributed query path shares (batch
+    * BMW, the phrase / phrase-prefix / phrase-suggest and span frames, and
+    * top-k BMW and bool above [[topKHits]]' driver-scoring gate or when
+    * `nBuckets > 0` asks for buckets): query-term blocks re-bucket by docId
+    * range — a block spanning bucket boundaries is replicated and masked by
+    * the [lo, hi) the scorer receives — and each bucket scores locally. The
+    * group-span arithmetic is correctness-critical and lives ONLY here; so
+    * does the per-term firstDocId block sort (`sortBlocks`) that every
     * presorted-contract consumer (batch BMW, PhraseMatcher, BoolMatcher)
-    * depends on — a call site must opt out, never remember to opt in.
+    * depends on — a call site must opt out, never remember to opt in
+    * (topKHits' single driver bucket sorts the same way).
     */
   private def bucketedBlocks[T: org.apache.spark.sql.Encoder](terms: Seq[String],
       nBuckets: Int = 0, withPositions: Boolean = false, sortBlocks: Boolean = true)(
@@ -284,15 +303,33 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       .collect()
   }
 
-  /** Distributed Block-Max WAND (SURVEY.md §2.3 B9): query-term blocks are
-    * re-bucketed by docId range (a block spanning multiple buckets is
-    * replicated and masked — only query-term data moves, never the corpus);
-    * each bucket runs exact BMW with a local threshold (= one ES shard);
-    * the global merge is Catalyst's TakeOrderedAndProject.
+  /** Block-Max WAND top-k (SURVEY.md §2.3 B9) over the query terms'
+    * postings, served by [[topKHits]]: when the terms' merged df sum is at
+    * most `DriverScoreMaxPostings` the blocks are collected in one job and
+    * scored on the driver as one bucket under one global threshold;
+    * otherwise (or when `nBuckets > 0` asks for the bucketed plan) the
+    * blocks are re-bucketed by docId range (a block spanning multiple
+    * buckets is replicated and masked — only query-term data moves, never
+    * the corpus), each bucket runs exact BMW with a local threshold (= one
+    * ES shard) and Catalyst's TakeOrderedAndProject merges the buckets.
+    * Both forms return the same exact top-k under (score desc, docId asc).
+    * `k` must be >= 1; [[scoreAllDf]] ranks every match.
     */
-  def searchBmw(query: String, k: Int, nBuckets: Int = 0): Array[SearchHit] =
+  def searchBmw(query: String, k: Int, nBuckets: Int = 0): Array[SearchHit] = {
+    requireTopK(k, "scoreAllDf")
     bmwTopK(termMeta(analyze(query)), k, nBuckets)
+  }
 
+  /** A top-k entry point's `k` check, made before any job runs: k <= 0 is
+    * not a top-k, and each entry point names its rank-all form.
+    */
+  private def requireTopK(k: Int, rankAll: String): Unit =
+    require(k >= 1, s"top-k needs k >= 1, got $k — rank every match with $rankAll")
+
+  /** The shared BMW top-k of every match-shaped entry point (searchBmw,
+    * fuzzyTopK, wildcardTopK, mltTopK, searchBool's match route); the BMW
+    * skip counters receive each scored bucket's stats on either plan.
+    */
   private def bmwTopK(meta: Map[String, BlockMaxWand.TermMeta], k: Int,
       nBuckets: Int = 0): Array[SearchHit] = {
     if (meta.isEmpty) return Array.empty
@@ -302,15 +339,54 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val kk = k
     val (decAcc, skipAcc, scoredAcc) = (decodedBlocksAcc, skippedBlocksAcc, scoredDocsAcc)
 
-    bucketedBlocks[SearchHit](meta.keys.toSeq.sorted, nBuckets) { (lo, hi, byTerm) =>
+    topKHits(meta.keys.toSeq.sorted, k, nBuckets) { (lo, hi, byTerm) =>
       val st = BlockMaxWand.BucketStats()
       val hits = BlockMaxWand.scoreBucket(byTerm, metaB.value, lo, hi, kk, avgDl, pp, st,
         presorted = true)
       decAcc.add(st.decoded); skipAcc.add(st.skipped); scoredAcc.add(st.scoredDocs)
       hits.iterator
     }
-      .orderBy(desc("score"), asc("docId")).limit(k)
-      .collect()
+  }
+
+  /** Query-term postings (merged df, summed over the scanned terms) at or
+    * under which a top-k query is scored on the driver. Set from a measured
+    * crossover: on 4 cores (local[4], 4 docId buckets, CorpusGen indexes of
+    * 150k and 400k docs, BMW match and must + should bool, k = 10), the
+    * driver plan was faster at every df sum up to ~1.5M postings (about 2x
+    * under 50k, 1.2-1.3x near 2^20) and slower from ~1.8M on, where the
+    * buckets' parallel scoring outweighs the saved jobs. The collected
+    * blocks are ~2.8 bytes per posting, ~3 MB of driver heap at 2^20.
+    * More cores favour the buckets, so the bound sits below the crossover.
+    */
+  private val DriverScoreMaxPostings = 1L << 20
+
+  /** Exact top-k of a bucket scorer over `terms`' postings, in one of two
+    * plans with identical results (each doc's score is folded over
+    * term-sorted cursors whatever its bucket, and both cut under the pinned
+    * (score desc, docId asc) tie-break):
+    *  - at or under `DriverScoreMaxPostings` merged postings (the dfs come
+    *    from the dictionary memo the caller's `termMeta` just filled, so
+    *    the gate costs no job), ONE job: the blocks are collected, grouped
+    *    by term, sorted by firstDocId and scored on the driver as the
+    *    single bucket [0, Long.MaxValue). [[bucketedBlocks]] would pay a
+    *    scan, a docId exchange and a TakeOrderedAndProject — two jobs under
+    *    AQE — to score the same few hundred postings;
+    *  - above the gate, or when `nBuckets > 0` asks for it, the bucketed
+    *    plan and a TakeOrderedAndProject merge.
+    * `score` receives (lo, hi, term -> blocks sorted by firstDocId).
+    */
+  private def topKHits(terms: Seq[String], k: Int, nBuckets: Int)(
+      score: (Long, Long, Map[String, Array[PostingBlock]]) => Iterator[SearchHit])
+      : Array[SearchHit] = {
+    val postings = mergedDictRows(terms.toArray).valuesIterator.map(_._1).sum
+    if (nBuckets <= 0 && postings <= DriverScoreMaxPostings) {
+      val byTerm = postingsFor(terms).collect().groupBy(_.term)
+        .map { case (t, bs) => t -> bs.sortBy(_.firstDocId) }
+      score(0L, Long.MaxValue, byTerm).toArray.sortBy(h => (-h.score, h.docId)).take(k)
+    } else
+      bucketedBlocks[SearchHit](terms, nBuckets)(score)
+        .orderBy(desc("score"), asc("docId")).limit(k)
+        .collect()
   }
 
   /** Batch mode: N queries in ONE Spark job (SURVEY.md §2.3 B9/B10). All
@@ -331,6 +407,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     */
   def searchBmwBatch(queriesIn: Seq[String], k: Int, nBuckets: Int = 0,
       driverMergeMaxRows: Long = 1L << 20): Map[String, Array[SearchHit]] = {
+    requireTopK(k, "scoreAllDf per query")
     val analyzed = queriesIn.map(q => q -> analyze(q))
     val allTerms = analyzed.flatMap(_._2).distinct.sorted.toArray
     val meta = termMeta(allTerms)
@@ -472,16 +549,30 @@ final class IndexReader(spark: SparkSession, indexDir: String,
 
   /** ES `bool` query top-k (SURVEY.md §2.3 B16): must = conjunction, should
     * contributes when present, must_not excludes; score = Σ idf·tfNorm over
-    * (must ∪ should) terms present, pinned ascending-term order. Bucketed
-    * like BMW; within a bucket the conjunction drives candidate generation
-    * and payloads decode lazily (BoolMatcher). Only the clause terms'
-    * postings are scanned.
+    * (must ∪ should) terms present, pinned ascending-term order. Only the
+    * clause terms' postings are scanned (scoring, must_not and filter
+    * terms), and they are scored under the same gate as [[searchBmw]]: on
+    * the driver as one bucket when their merged df sum is at most
+    * `DriverScoreMaxPostings`, bucketed by docId range above it. Within a
+    * bucket the conjunction drives candidate generation and payloads decode
+    * lazily (BoolMatcher). `k` must be >= 1; [[searchBoolDf]] ranks every
+    * match.
     */
   def searchBool(must: Seq[String], should: Seq[String] = Nil,
       mustNot: Seq[String] = Nil, k: Int = 10, minShould: Int = 0,
       boosts: Map[String, Double] = Map.empty,
       filter: Seq[String] = Nil,
-      dlRange: Option[(Long, Long)] = None): Array[SearchHit] = {
+      dlRange: Option[(Long, Long)] = None): Array[SearchHit] =
+    boolTopK(must, should, mustNot, k, minShould, boosts, filter, dlRange, nBuckets = 0)
+
+  /** [[searchBool]]'s body; `nBuckets > 0` forces the bucketed plan with
+    * that many docId buckets (on the match route too).
+    */
+  private[graft] def boolTopK(must: Seq[String], should: Seq[String],
+      mustNot: Seq[String], k: Int, minShould: Int, boosts: Map[String, Double],
+      filter: Seq[String], dlRange: Option[(Long, Long)],
+      nBuckets: Int): Array[SearchHit] = {
+    requireTopK(k, "searchBoolDf")
     requireRangeHasTerms(dlRange, must, should, filter)
     val clauses = boolClauses(must, should, mustNot, filter).getOrElse(return Array.empty)
     val (mustT, shouldT, notT, filterT, meta0, shouldCredit) = clauses
@@ -502,7 +593,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     // and from the other path exactly where the filter semantics bite.
     if (dlRange.isDefined && mustT.isEmpty && filterT.isEmpty && effShould == 0)
       throw new IllegalArgumentException(
-        "bucketed bool with only optional should clauses + a range filter " +
+        "top-k bool with only optional should clauses + a range filter " +
           "matches range-only docs at score 0 — use searchBoolDf for this shape")
     // a bool with no must and no must_not IS a `match` (pure SHOULD-OR with
     // identical scoring) — serve it through Block-Max WAND so it gets
@@ -512,7 +603,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     // it a dl-range check, so an active range disables it the same way.
     if (mustT.isEmpty && notT.isEmpty && filterT.isEmpty && effShould <= 1 &&
         dlRange.isEmpty)
-      return bmwTopK(meta, k)
+      return bmwTopK(meta, k, nBuckets)
     val scoring = (mustT ++ shouldT).distinct.sorted.map(t => (t, meta(t).idf))
     val scanTerms = ((mustT ++ shouldT).toSeq ++ notT.toSeq ++ filterT.toSeq).distinct.sorted
     val (scoringB, mustB, notB, filterB) =
@@ -523,12 +614,10 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val kk = k
     val ms = effShould
     val (dlLo, dlHi) = dlRange.getOrElse((0L, Long.MaxValue))
-    bucketedBlocks[SearchHit](scanTerms) { (lo, hi, byTerm) =>
+    topKHits(scanTerms, k, nBuckets) { (lo, hi, byTerm) =>
       BoolMatcher.scoreBucket(byTerm, scoringB.value, mustB.value, notB.value,
         lo, hi, kk, avgDl, pp, ms, filterB.value, dlLo, dlHi).iterator
     }
-      .orderBy(desc("score"), asc("docId")).limit(k)
-      .collect()
   }
 
   /** The range-only-bool pin shared by both bool paths: a `range` filter
@@ -759,24 +848,31 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       pruned
         .where(length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
           dist <= maxEdits)
-        .select(col("term"), col("df"))
+        .select(DictMetaCols.map(col): _*)
     }
   }
 
   /** df-ranked expansion cap as a PLAN, not a driver sort: merge per-segment
-    * (term, df), take the global top-maxExpansions by (df desc, term asc)
-    * via TakeOrderedAndProject — the driver receives exactly the capped
+    * dictionary rows, take the global top-maxExpansions by (df desc, term
+    * asc) via TakeOrderedAndProject — the driver receives exactly the capped
     * list, never the full candidate set (a pathological pattern over a
-    * corpus-scale dictionary must not collect before capping).
+    * corpus-scale dictionary must not collect before capping). `scans`
+    * carry [[DictMetaCols]], merged across segments by the same fold as
+    * [[mergedDictRows]] (sum, max, max, min), and the capped rows seed the
+    * dictionary memo — so the `termMeta` that scores the expansion next
+    * runs no job.
     */
   private def cappedByDf(scans: Seq[DataFrame], maxExpansions: Int): Array[String] = {
     // single segment: the dictionary has one row per term already — skip
     // the merge agg (same special case termsAggDf takes)
     val merged =
       if (scans.size == 1) scans.head
-      else scans.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"))
-    merged.orderBy(desc("df"), asc("term")).limit(maxExpansions)
-      .select("term").collect().map(_.getString(0)).sorted
+      else scans.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"),
+        max("maxTfn").as("maxTfn"), max("maxTf").as("maxTf"), min("minDl").as("minDl"))
+    val rows = merged.orderBy(desc("df"), asc("term")).limit(maxExpansions)
+      .select(DictMetaCols.map(col): _*).collect().map(dictMetaRow)
+    memoizeDict(rows.map { case (t, v) => t -> Some(v) }.toSeq)
+    rows.map(_._1).sorted
   }
 
   /** Capped df-ranked form of [[expandPrefix]] — the expansion
@@ -787,7 +883,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     cappedByDf(segments.map(seg =>
       InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term") >= lo && col("term") < hi)
-        .select(col("term"), col("df"))), maxExpansions)
+        .select(DictMetaCols.map(col): _*)), maxExpansions)
   }
 
   /** Dictionary terms matching a glob `pattern` over the analyzer charset
@@ -809,7 +905,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     cappedByDf(segments.map { seg =>
       InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term").rlike(rx))
-        .select(col("term"), col("df"))
+        .select(DictMetaCols.map(col): _*)
     }, maxExpansions)
   }
 
@@ -832,7 +928,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     cappedByDf(segments.map { seg =>
       InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term").rlike(pat))
-        .select(col("term"), col("df"))
+        .select(DictMetaCols.map(col): _*)
     }, maxExpansions)
   }
 
@@ -1412,22 +1508,28 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * Lucene's blended-idf rewrite, documented at [[matchFuzzyDf]]).
     */
   def fuzzyTopK(term: String, maxEdits: Int = 2, k: Int = 10,
-      maxExpansions: Int = 50, prefixLength: Int = 0): Array[SearchHit] =
+      maxExpansions: Int = 50, prefixLength: Int = 0): Array[SearchHit] = {
+    requireTopK(k, "matchFuzzyDf")
     bmwTopK(termMeta(expandFuzzy(term, maxEdits, maxExpansions, prefixLength)), k)
+  }
 
   /** Bounded top-k over the wildcard expansion, scored as a term OR (the
     * constant_score membership form stays [[matchWildcardDf]]).
     */
   def wildcardTopK(pattern: String, k: Int = 10,
-      maxExpansions: Int = 128): Array[SearchHit] =
+      maxExpansions: Int = 128): Array[SearchHit] = {
+    requireTopK(k, "scoreAllTerms(expandWildcard(pattern))")
     bmwTopK(termMeta(expandWildcard(pattern, maxExpansions)), k)
+  }
 
   /** Bounded top-k over the more_like_this term selection — note the
     * SOURCE DOC is not excluded here (the caller filters it, as
     * DocumentsIndex.moreLikeThis does); fetch k+1 when excluding.
     */
-  def mltTopK(likeText: String, k: Int = 10, maxQueryTerms: Int = 25): Array[SearchHit] =
+  def mltTopK(likeText: String, k: Int = 10, maxQueryTerms: Int = 25): Array[SearchHit] = {
+    requireTopK(k, "scoreAllTerms(selectMltTerms(likeText))")
     bmwTopK(termMeta(selectMltTerms(likeText, maxQueryTerms)), k)
+  }
 
   /** ES `prefix` query (SURVEY.md §2.3 B17): docs containing at least one
     * term starting with `prefix`, with `n_terms` = the distinct matching

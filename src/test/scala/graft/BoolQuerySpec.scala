@@ -620,6 +620,68 @@ class BoolQuerySpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("bool top-k plans: driver-scored == bucketed on every clause shape, k = 1, 10, N + 1") {
+    // searchBool scores these small postings on the driver as one bucket;
+    // boolTopK(nBuckets = 7) forces the docId-bucketed plan. The other
+    // tests pin searchBool to the oracle; this pins the two plans together.
+    val docDls = oracle.rows.collect().map(_._4.toLong).distinct.sorted
+    val mid = Some((docDls(docDls.size / 4), docDls(3 * docDls.size / 4)))
+    val shapes: Seq[(Seq[String], Seq[String], Seq[String], Int, Map[String, Double],
+        Seq[String], Option[(Long, Long)])] =
+      cases.map { case (m, sh, n) => (m, sh, n, 0, Map.empty[String, Double], Nil, None) } ++ Seq(
+        (Seq("def"), Seq("val", "class", "import"), Nil, 2, Map.empty[String, Double], Nil, None),
+        (Nil, Seq("def", "val", "class"), Nil, 2, Map.empty[String, Double], Nil, None),
+        (Seq("def"), Seq("val", "class"), Nil, 0, Map("val" -> 2.5, "def" -> 0.5), Nil, None),
+        (Nil, Seq("val", "class"), Nil, 0, Map("class" -> 3.0), Nil, None),
+        (Seq("def"), Seq("val"), Nil, 0, Map.empty[String, Double], Seq("class"), None),
+        (Nil, Seq("z100_id"), Nil, 0, Map.empty[String, Double], Seq("def"), None),
+        (Nil, Nil, Nil, 0, Map.empty[String, Double], Seq("buf_buf"), None),
+        (Seq("def"), Seq("val"), Nil, 0, Map.empty[String, Double], Nil, mid),
+        (Nil, Seq("def", "val"), Nil, 1, Map.empty[String, Double], Nil, mid),
+        (Seq("def"), Nil, Seq("return"), 0, Map.empty[String, Double], Seq("class"), mid))
+    var nonEmpty = 0
+    for ((m, sh, n, ms, b, f, r) <- shapes; k <- Seq(1, 10, N.toInt + 1)) {
+      val driver = reader.searchBool(m, sh, n, k, ms, b, f, r).toSeq
+      val bucketed = reader.boolTopK(m, sh, n, k, ms, b, f, r, nBuckets = 7).toSeq
+      assert(driver == bucketed, s"bool plans diverge for ($m, $sh, $n, ms=$ms, $b, $f, $r, k=$k)")
+      if (driver.nonEmpty) nonEmpty += 1
+    }
+    assert(nonEmpty >= 3 * 14, s"only $nonEmpty non-empty runs — fixture too sparse for the gate")
+  }
+
+  test("job guards: memo-hit bool and fuzzy top-k") {
+    reader.searchBool(Seq("def"), Seq("val"), Seq("class"), 10) // fills the dictionary memo
+    val boolJobs = countJobs(reader.searchBool(Seq("def"), Seq("val"), Seq("class"), 10))
+    assert(boolJobs == 1, s"memo-hit searchBool ran $boolJobs jobs")
+    val r = new IndexReader(spark, dir)
+    r.stats
+    // expansion (1) + postings scan (1); termMeta is served by the memo the
+    // expansion seeded
+    val fuzzyJobs = countJobs(r.fuzzyTopK("deff", 2, 10))
+    assert(fuzzyJobs <= 2, s"single-segment fuzzyTopK ran $fuzzyJobs jobs")
+  }
+
+  test("expansions seed the dictionary memo: termMeta after them runs no job") {
+    assertExpansionsSeedMemo(dir)
+  }
+
+  test("top-k entry points reject k < 1 before any job") {
+    val r = new IndexReader(spark, dir)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "searchBmw" -> (() => r.searchBmw("def", 0)),
+      "searchBool" -> (() => r.searchBool(Seq("def"), Nil, Nil, 0)),
+      "fuzzyTopK" -> (() => r.fuzzyTopK("deff", 2, 0)),
+      "wildcardTopK" -> (() => r.wildcardTopK("*uf*", -1)),
+      "mltTopK" -> (() => r.mltTopK("def val class", 0)),
+      "searchBmwBatch" -> (() => r.searchBmwBatch(Seq("def", "val"), 0)))
+    for ((name, call) <- calls) {
+      var msg = ""
+      val jobs = countJobs { msg = intercept[IllegalArgumentException](call()).getMessage }
+      assert(jobs == 0, s"$name ran $jobs jobs before rejecting k")
+      assert(msg.contains("k >= 1") && msg.contains("rank every match"), s"$name: $msg")
+    }
+  }
+
   test("bool across base ∪ delta segments") {
     val ddir = "/tmp/graft_test_bool_delta"
     Tables.delete(spark, "/tmp", "graft_test_bool_delta")

@@ -64,9 +64,22 @@ class DeltaIndexSpec extends SparkSpec {
   test("composite BMW == composite naive (recomputed bounds are safe)") {
     built
     val rd = new IndexReader(spark, dirDelta)
-    for (q <- Seq("def z100_id", "val buf_buf", "z103_id z104_id", "def val class"))
-      assert(rd.searchBmw(q, QuerySet.K).toSeq == rd.searchNaive(q, QuerySet.K).toSeq,
-        s"composite BMW diverges from exhaustive decode for '$q' — a block bound must be violated")
+    // both top-k plans (driver-scored as one bucket at nBuckets = 0, docId
+    // buckets at 7) at k = 1, K and N + M + 1; naive(k) is the prefix of the
+    // full naive ranking
+    val kAll = (N + M).toInt + 1
+    for (q <- QuerySet.all) {
+      val naiveAll = rd.searchNaive(q, kAll).toSeq
+      for (nBuckets <- Seq(0, 7); k <- Seq(1, QuerySet.K, kAll))
+        assert(rd.searchBmw(q, k, nBuckets).toSeq == naiveAll.take(k),
+          s"composite BMW (nBuckets = $nBuckets) top-$k diverges from exhaustive decode for '$q' — " +
+            "a block bound must be violated")
+    }
+  }
+
+  test("composite expansions seed the dictionary memo: termMeta after them runs no job") {
+    built
+    assertExpansionsSeedMemo(dirDelta)
   }
 
   test("merged dictionary stats equal the rebuild's (df/cf per query term)") {

@@ -148,19 +148,31 @@ class IndexEndToEndSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("rank identity: naive DAAT == BMW == exhaustive oracle, all 20 queries") {
+    // BMW runs on both top-k plans (nBuckets = 0 scores these small postings
+    // on the driver as one bucket, 7 forces the docId-bucketed plan) and at
+    // k = 1, K and N + 1 (ties, k beyond the matches). naive(k) is the
+    // (score desc, docId asc) prefix of the full naive ranking, so naive
+    // runs once per query at k = N + 1 and is cut.
+    val kAll = N.toInt + 1
     for (q <- QuerySet.all) {
       val want = oracle.topK(q, QuerySet.K)
-      val naive = reader.searchNaive(q, QuerySet.K)
-      val bmw = reader.searchBmw(q, QuerySet.K)
-      assert(naive.map(_.docId).toSeq == want.map(_.docId).toSeq, s"naive ranks for '$q'")
+      val naiveAll = reader.searchNaive(q, kAll).toSeq
+      val naive = naiveAll.take(QuerySet.K)
+      assert(naive.map(_.docId) == want.map(_.docId).toSeq, s"naive ranks for '$q'")
       naive.zip(want).foreach { case (g, w) =>
         assert(math.abs(g.score - w.score) <= 1e-9 * math.max(1.0, math.abs(w.score)), s"naive score for '$q'")
       }
-      assert(bmw.map(_.docId).toSeq == want.map(_.docId).toSeq, s"BMW ranks for '$q'")
-      bmw.zip(naive).foreach { case (b, n) =>
-        assert(b.score == n.score, s"BMW score must be bit-identical to naive for '$q'")
-      }
+      // SearchHit equality: same docIds, scores bit-identical to naive
+      for (nBuckets <- Seq(0, 7); k <- Seq(1, QuerySet.K, kAll))
+        assert(reader.searchBmw(q, k, nBuckets).toSeq == naiveAll.take(k),
+          s"BMW (nBuckets = $nBuckets) top-$k for '$q'")
     }
+  }
+
+  test("job guard: a memo-hit searchBmw runs one job (the postings scan)") {
+    reader.searchBmw("def z100_id", QuerySet.K) // fills the dictionary memo
+    val jobs = countJobs(reader.searchBmw("def z100_id", QuerySet.K))
+    assert(jobs == 1, s"memo-hit searchBmw ran $jobs jobs")
   }
 
   test("rank-all distributed path == naive full ranking, scores bit-identical") {

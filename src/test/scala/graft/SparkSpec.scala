@@ -1,5 +1,6 @@
 package graft
 
+import graft.query.{BlockMaxWand, IndexReader}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,6 +26,27 @@ trait SparkSpec extends AnyFunSuite {
       while (cur != prev) { Thread.sleep(300); prev = cur; cur = jobs.get }
       cur
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** On a fresh reader over the index at `dir`, `termMeta` of a fuzzy and of
+    * a wildcard expansion submits no job (the expansion seeded the
+    * dictionary memo) and equals, bit for bit, a fresh reader's `termMeta`.
+    * The index's vocabulary must be CorpusGen's.
+    */
+  def assertExpansionsSeedMemo(dir: String): Unit = {
+    def bits(m: Map[String, BlockMaxWand.TermMeta]) =
+      m.map { case (t, x) =>
+        t -> (java.lang.Double.doubleToRawLongBits(x.idf), java.lang.Double.doubleToRawLongBits(x.maxImpact))
+      }
+    val r = new IndexReader(spark, dir)
+    r.stats
+    for (terms <- Seq(r.expandFuzzy("deff", 2), r.expandWildcard("*uf*"))) {
+      assert(terms.nonEmpty)
+      val jobs = countJobs(r.termMeta(terms))
+      assert(jobs == 0, s"termMeta after the expansion ran $jobs jobs")
+      assert(bits(r.termMeta(terms)) == bits(new IndexReader(spark, dir).termMeta(terms)),
+        "memo seeded by the expansion differs from a fresh dictionary lookup")
+    }
   }
 }
 
