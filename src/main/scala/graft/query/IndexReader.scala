@@ -16,9 +16,12 @@ import org.apache.spark.util.LongAccumulator
   * eliminates postings directories at the catalog, and the term predicate's
   * min/max row-group stats prune within a bucket's term-sorted files);
   * per-bucket scoring (= per-shard); one global TakeOrderedAndProject merge
-  * (= coordinator merge). A top-k query whose query-term postings are small
-  * skips the bucketing: its blocks are collected in one job and scored on
-  * the driver as a single bucket (see `topKHits`).
+  * (= coordinator merge). A query whose query-term postings are small
+  * skips the bucketing (see `singleBucket`): a top-k query collects its
+  * blocks in one job and scores them on the driver as a single bucket
+  * (`topKHits`), and a positional, batch or membership frame scores them
+  * in one narrow partition with no exchange (`bucketedBlocks`,
+  * `membershipCounts`).
   *
   * A reader serves the BASE SEGMENT plus every delta segment committed under
   * `<indexDir>/deltas/` (graft.index.DeltaIndex) as ONE logical index —
@@ -96,15 +99,34 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   val skippedBlocksAcc: LongAccumulator = spark.sparkContext.longAccumulator("graft.bmw.skippedBlocks")
   val scoredDocsAcc: LongAccumulator = spark.sparkContext.longAccumulator("graft.bmw.scoredDocs")
 
-  // memo for matchPrefixDf's bounded expansion probe — see the HOT-PREFIX
-  // MEMO note there. @transient: driver-side cache, never shipped.
-  // BOUNDED: readers are cached process-wide (DocumentsIndex.memo), so a
-  // serving process answering arbitrary user prefixes would otherwise grow
-  // this map forever — at the cap the map resets wholesale (hot prefixes
-  // re-memoize within one probe; an LRU would buy little over that here).
-  private val PrefixProbeCacheMax = 4096
-  @transient private lazy val prefixProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Option[Array[String]]]()
+  // Capped dictionary expansions (fuzzy, prefix, wildcard, regexp and
+  // matchPrefixDf's bounded probe), keyed by (kind, pattern, cap, params):
+  // each is a pure function of its key over this reader's segment set,
+  // which is FIXED for the reader's lifetime (a delta commit is served by a
+  // new reader), so a repeated expansion runs no job. None = the probe
+  // found more than cap terms. @transient: driver-side cache, never
+  // shipped. BOUNDED: readers are cached process-wide
+  // (DocumentsIndex.memo), so a serving process answering arbitrary user
+  // patterns would otherwise grow this map forever — at the cap the map
+  // resets wholesale (hot patterns re-memoize within one expansion; an LRU
+  // would buy little over that here).
+  private val ExpansionMemoMax = 4096
+  @transient private lazy val expansionMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, List[Any]), Option[Array[String]]]()
+
+  /** The memoized `expand` under (kind, pattern, cap, params). A throwing
+    * `expand` (a rejected pattern) records nothing.
+    */
+  private def memoExpansion(kind: String, pattern: String, cap: Int, params: Any*)(
+      expand: => Option[Array[String]]): Option[Array[String]] = {
+    val key = (kind, pattern, cap, params.toList)
+    Option(expansionMemo.get(key)).getOrElse {
+      val v = expand
+      if (expansionMemo.size() >= ExpansionMemoMax) expansionMemo.clear()
+      expansionMemo.put(key, v)
+      v
+    }
+  }
 
   def analyze(query: String): Array[String] =
     CodeTokenizer.tokenize(query, analyzer).distinct.sorted
@@ -124,7 +146,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   // query-sized term lists. Sound because a reader's `segments` list is
   // FIXED at construction and committed segments are immutable (the same
   // argument PIT serving rests on). None records a term PROVEN absent, so
-  // absent terms don't re-probe. BOUNDED like prefixProbeCache: wholesale
+  // absent terms don't re-probe. BOUNDED like expansionMemo: wholesale
   // reset at the cap. @transient: driver-side cache, never shipped.
   private val DictMemoMax = 65536
   @transient private lazy val dictMemo =
@@ -148,24 +170,25 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       }
     }
     if (missing.nonEmpty) {
-      // (df, maxTfn, maxTf, minDl) per term, merged across segments
-      val acc = scala.collection.mutable.Map.empty[String, (Long, Double, Int, Int)]
-      segments.map { seg =>
+      val acc = foldDictRows(segments.map { seg =>
         InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
           .where(col("term").isin(missing.toSeq: _*))
           .select(DictMetaCols.map(col): _*)
-      }.reduce(_ unionByName _)
-        .collect()
-        .foreach { r =>
-          val (t, (df, mtfn, mtf, mdl)) = dictMetaRow(r)
-          val (df0, mtfn0, mtf0, mdl0) = acc.getOrElse(t, (0L, 0.0, 0, Int.MaxValue))
-          acc.update(t, (df0 + df, math.max(mtfn0, mtfn), math.max(mtf0, mtf), math.min(mdl0, mdl)))
-        }
+      }.reduce(_ unionByName _).collect().map(dictMetaRow))
       memoizeDict(missing.map(t => t -> acc.get(t)).toSeq)
       known ++= acc
     }
     known.toMap
   }
+
+  /** Per-segment dictionary rows merged per term: (df, maxTfn, maxTf,
+    * minDl) fold as (sum, max, max, min) — order-independent.
+    */
+  private def foldDictRows(rows: Seq[(String, (Long, Double, Int, Int))])
+      : Map[String, (Long, Double, Int, Int)] =
+    rows.groupMapReduce(_._1)(_._2) { case ((df0, mtfn0, mtf0, mdl0), (df, mtfn, mtf, mdl)) =>
+      (df0 + df, math.max(mtfn0, mtfn), math.max(mtf0, mtf), math.min(mdl0, mdl))
+    }
 
   /** The dictionary columns every term-meta lookup reads, in the order
     * [[dictMetaRow]] decodes them.
@@ -258,32 +281,45 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     }.toDF("docId", "term", "contrib")
   }
 
-  /** The bucketize skeleton every distributed query path shares (batch
-    * BMW, the phrase / phrase-prefix / phrase-suggest and span frames, and
-    * top-k BMW and bool above [[topKHits]]' driver-scoring gate or when
-    * `nBuckets > 0` asks for buckets): query-term blocks re-bucket by docId
-    * range — a block spanning bucket boundaries is replicated and masked by
-    * the [lo, hi) the scorer receives — and each bucket scores locally. The
-    * group-span arithmetic is correctness-critical and lives ONLY here; so
-    * does the per-term firstDocId block sort (`sortBlocks`) that every
-    * presorted-contract consumer (batch BMW, PhraseMatcher, BoolMatcher)
-    * depends on — a call site must opt out, never remember to opt in
-    * (topKHits' single driver bucket sorts the same way).
+  /** The bucketize skeleton every positional and batch query path shares
+    * (batch BMW, the phrase / phrase-prefix / phrase-suggest and span
+    * frames, and top-k BMW and bool above the [[singleBucket]] gate or when
+    * `nBuckets > 0` asks for buckets), in one of two plans with identical
+    * rows:
+    *  - under the gate (the merged df summed over `work`, by default the
+    *    scanned terms, is at most `SingleBucketMaxPostings`), ONE narrow
+    *    partition: the postings scan coalesces to one task and `score` runs
+    *    once over the single bucket [0, Long.MaxValue) — no exchange, so a
+    *    `.count()` or `.collect()` of the frame is one job, and the frame
+    *    stays lazy;
+    *  - otherwise query-term blocks re-bucket by docId range — a block
+    *    spanning bucket boundaries is replicated and masked by the [lo, hi)
+    *    the scorer receives — through one groupBy exchange, and each bucket
+    *    scores locally.
+    * A doc's blocks all reach one bucket in either plan, so each doc's row
+    * is the same. The group-span arithmetic is correctness-critical and
+    * lives ONLY here; so does the per-term firstDocId block sort
+    * ([[IndexReader.blocksByTerm]]) that every presorted-contract consumer
+    * (batch BMW, PhraseMatcher, BoolMatcher) depends on (topKHits' driver
+    * bucket sorts the same way).
     */
   private def bucketedBlocks[T: org.apache.spark.sql.Encoder](terms: Seq[String],
-      nBuckets: Int = 0, withPositions: Boolean = false, sortBlocks: Boolean = true)(
+      nBuckets: Int = 0, withPositions: Boolean = false, work: Option[Seq[String]] = None)(
       score: (Long, Long, Map[String, Array[PostingBlock]]) => Iterator[T]): Dataset[T] = {
+    if (singleBucket(work.getOrElse(terms), nBuckets, SingleBucketMaxPostings))
+      return postingsFor(terms, withPositions).coalesce(1).mapPartitions { it =>
+        // no blocks, no bucket — as in the grouped plan, where an empty
+        // bucket never forms a group
+        if (it.hasNext) score(0L, Long.MaxValue, IndexReader.blocksByTerm(it.toArray))
+        else Iterator.empty
+      }
     val buckets = if (nBuckets > 0) nBuckets else spark.sessionState.conf.numShufflePartitions
     val w = math.max(1L, (stats.numDocs + buckets - 1) / buckets)
     postingsFor(terms, withPositions)
       .flatMap(b => ((b.firstDocId / w) to (b.lastDocId / w)).iterator.map(g => (g, b)))
       .groupByKey(_._1)
       .flatMapGroups { (g, it) =>
-        val byTerm0 = it.map(_._2).toArray.groupBy(_.term)
-        val byTerm = if (sortBlocks)
-          byTerm0.map { case (t, bs) => t -> bs.sortBy(_.firstDocId) }
-        else byTerm0
-        score(g * w, g * w + w, byTerm)
+        score(g * w, g * w + w, IndexReader.blocksByTerm(it.map(_._2).toArray))
       }
   }
 
@@ -349,53 +385,98 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   }
 
   /** Query-term postings (merged df, summed over the scanned terms) at or
-    * under which a top-k query is scored on the driver. Set from a measured
-    * crossover: on 4 cores (local[4], 4 docId buckets, CorpusGen indexes of
-    * 150k and 400k docs, BMW match and must + should bool, k = 10), the
-    * driver plan was faster at every df sum up to ~1.5M postings (about 2x
-    * under 50k, 1.2-1.3x near 2^20) and slower from ~1.8M on, where the
-    * buckets' parallel scoring outweighs the saved jobs. The collected
-    * blocks are ~2.8 bytes per posting, ~3 MB of driver heap at 2^20.
-    * More cores favour the buckets, so the bound sits below the crossover.
+    * under which a top-k query collects its blocks and scores them on the
+    * driver ([[topKHits]]). Measured on 4 cores (local[4], 4 docId buckets,
+    * CorpusGen indexes of 150k and 400k docs without positions; driver
+    * collect vs bucketed plan, BMW and bool): the driver plan won up to
+    * ~1.5M postings (1.2-1.3x between 1M and 1.5M) and lost from ~1.8M on;
+    * more cores favour the buckets, so the bound sits below that
+    * crossover. The collected blocks are ~2.8 bytes per posting.
     */
   private val DriverScoreMaxPostings = 1L << 20
+
+  /** Estimated one-task postings work at or under which [[bucketedBlocks]]
+    * and [[membershipCounts]] read the postings in one narrow partition
+    * instead of bucketing them by docId. Measured on 4 cores (local[4],
+    * one partition vs 4 docId buckets, CorpusGen indexes of 150k and 400k
+    * docs with positions):
+    *  - positional (`matchPhraseDf(..).count()`, 2- to 9-token phrases):
+    *    one partition won at every df sum up to ~530k (1.2-1.9x under
+    *    300k), tied at 433k (150k docs) and 634k (400k docs), and lost from
+    *    ~740k on, where one task decoding every candidate's positions
+    *    outweighs the saved exchange;
+    *  - ids-only membership (`termsSetDf`-shaped term sets of 10-50 terms
+    *    and `matchPrefixDf` over 4-309 expansion terms, 400k docs): one
+    *    partition won at every df sum measured, up to 2.7M (1.1-2x);
+    *  - batch BMW (`searchBmwBatch(qs, 10)`, 400k docs), against the work
+    *    estimate (per-query df sums added over the queries): with 4
+    *    queries one task won up to 376k (1.15-1.2x); with 8 it won or tied
+    *    within 4% up to 156k and lost by 5-8% from 470k on; from 12
+    *    queries on it lost (1.06-1.6x) at every work size from 19k to
+    *    9.9M — one task scans and scores every query in turn
+    *    (`SingleBucketMaxQueries`).
+    * More cores favour the buckets, so the bound sits below the positional
+    * tie. Top-k keeps its own, higher bound (`DriverScoreMaxPostings`): its
+    * driver collect is a different plan with its own crossover.
+    */
+  private val SingleBucketMaxPostings = 400000L
+
+  /** Queries at or under which a [[searchBmwBatch]] round may take the
+    * one-task plan (measured with `SingleBucketMaxPostings` above).
+    */
+  private val SingleBucketMaxQueries = 8
+
+  /** The small-scan gate of every query plan that buckets by docId
+    * ([[topKHits]], [[bucketedBlocks]], [[membershipCounts]]): true when
+    * `nBuckets` is unset and the merged dfs summed over `work` (a term
+    * listed twice counts twice) are at most `maxPostings`. The dfs come
+    * through the dictionary memo, so the choice depends only on the query:
+    * a call site that has looked its terms up (termMeta, the capped
+    * expansions, matchPrefixDf's probe) runs no job here, and one that has
+    * not pays the one dictionary lookup it would otherwise have skipped.
+    */
+  private def singleBucket(work: Seq[String], nBuckets: Int, maxPostings: Long): Boolean =
+    nBuckets <= 0 && {
+      val dfs = mergedDictRows(work.distinct.toArray)
+      work.iterator.map(t => dfs.get(t).fold(0L)(_._1)).sum <= maxPostings
+    }
 
   /** Exact top-k of a bucket scorer over `terms`' postings, in one of two
     * plans with identical results (each doc's score is folded over
     * term-sorted cursors whatever its bucket, and both cut under the pinned
     * (score desc, docId asc) tie-break):
-    *  - at or under `DriverScoreMaxPostings` merged postings (the dfs come
-    *    from the dictionary memo the caller's `termMeta` just filled, so
-    *    the gate costs no job), ONE job: the blocks are collected, grouped
-    *    by term, sorted by firstDocId and scored on the driver as the
-    *    single bucket [0, Long.MaxValue). [[bucketedBlocks]] would pay a
+    *  - under the [[singleBucket]] gate at `DriverScoreMaxPostings`, ONE
+    *    job: the blocks are collected, grouped by term, sorted by
+    *    firstDocId and scored on the driver as the single bucket
+    *    [0, Long.MaxValue). [[bucketedBlocks]]' grouped plan would pay a
     *    scan, a docId exchange and a TakeOrderedAndProject — two jobs under
-    *    AQE — to score the same few hundred postings;
+    *    AQE — to score the same few hundred postings, and its one-task plan
+    *    measured slower than this driver collect;
     *  - above the gate, or when `nBuckets > 0` asks for it, the bucketed
     *    plan and a TakeOrderedAndProject merge.
     * `score` receives (lo, hi, term -> blocks sorted by firstDocId).
     */
   private def topKHits(terms: Seq[String], k: Int, nBuckets: Int)(
       score: (Long, Long, Map[String, Array[PostingBlock]]) => Iterator[SearchHit])
-      : Array[SearchHit] = {
-    val postings = mergedDictRows(terms.toArray).valuesIterator.map(_._1).sum
-    if (nBuckets <= 0 && postings <= DriverScoreMaxPostings) {
-      val byTerm = postingsFor(terms).collect().groupBy(_.term)
-        .map { case (t, bs) => t -> bs.sortBy(_.firstDocId) }
-      score(0L, Long.MaxValue, byTerm).toArray.sortBy(h => (-h.score, h.docId)).take(k)
-    } else
+      : Array[SearchHit] =
+    if (singleBucket(terms, nBuckets, DriverScoreMaxPostings))
+      score(0L, Long.MaxValue, IndexReader.blocksByTerm(postingsFor(terms).collect()))
+        .toArray.sortBy(h => (-h.score, h.docId)).take(k)
+    else
       bucketedBlocks[SearchHit](terms, nBuckets)(score)
         .orderBy(desc("score"), asc("docId")).limit(k)
         .collect()
-  }
 
   /** Batch mode: N queries in ONE Spark job (SURVEY.md §2.3 B9/B10). All
     * queries' terms are fetched in a single dictionary lookup and a single
     * postings scan; every docId bucket runs BMW once per query against its
-    * local blocks; per-bucket top-k lists are then merged into per-query
-    * global top-k. This amortizes job-scheduling and scan overhead across
-    * the whole query set — the shape a 100 TB deployment serves query
-    * batches with.
+    * local blocks ([[bucketedBlocks]]: one bucket in one narrow partition
+    * when the batch has at most `SingleBucketMaxQueries` queries and their
+    * per-query df sums, added up, are under the small-scan gate, so a
+    * small batch is one job); per-bucket
+    * top-k lists are then merged into per-query global top-k. This
+    * amortizes job-scheduling and scan overhead across the whole query set
+    * — the shape a 100 TB deployment serves query batches with.
     *
     * The merge has two gated paths producing identical results (pinned by a
     * test): when buckets x queries x k <= `driverMergeMaxRows` the per-bucket
@@ -425,7 +506,13 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val (decAcc, skipAcc, scoredAcc) = (decodedBlocksAcc, skippedBlocksAcc, scoredDocsAcc)
 
     val presentTerms = perQuery.flatMap(_._2).distinct.sorted
-    val perBucketTops = bucketedBlocks[(Int, Long, Double)](presentTerms.toSeq, nBuckets) {
+    // one task scans and scores every query in turn: its work grows with
+    // the per-query dfs (a shared term counts once per query), and past
+    // `SingleBucketMaxQueries` queries the buckets win whatever the dfs
+    val planBuckets =
+      if (nBuckets <= 0 && perQuery.length > SingleBucketMaxQueries) buckets else nBuckets
+    val perBucketTops = bucketedBlocks[(Int, Long, Double)](presentTerms.toSeq, planBuckets,
+        work = Some(perQuery.flatMap(_._2).toSeq)) {
       (lo, hi, byTerm) => // blocks pre-sorted once per bucket, shared by all queries
         val st = BlockMaxWand.BucketStats()
         val cache = new BlockCache() // queries share block decodes
@@ -661,7 +748,8 @@ final class IndexReader(spark: SparkSession, indexDir: String,
           PostingsCodec.decodeDocIds(f, c, d).iterator.map(id => (id, t))
         }
         .toDF("docId", "term")
-        .groupBy("docId").agg(countDistinct("term").as("fcnt"))
+        // one row per (term, doc): the plain count IS the distinct count
+        .groupBy("docId").agg(count(lit(1)).as("fcnt"))
         .where(col("fcnt") === filterT.length)
         .select("docId"))
     // ES numeric `range` in filter context, relationally: the registry scan
@@ -811,8 +899,8 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def expandFuzzy(term: String, maxEdits: Int = 2, maxExpansions: Int = 50,
       prefixLength: Int = 0, transpositions: Boolean = false): Array[String] = {
     require(maxExpansions > 0, s"maxExpansions must be > 0, got $maxExpansions")
-    cappedByDf(fuzzyExpansionScans(term, maxEdits, prefixLength, transpositions),
-      maxExpansions)
+    cappedByDf("fuzzy", term, maxExpansions, maxEdits, prefixLength, transpositions)(
+      fuzzyExpansionScans(term, maxEdits, prefixLength, transpositions))
   }
 
   /** The per-segment UNCAPPED expansion frames expandFuzzy caps — public so
@@ -860,30 +948,34 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * carry [[DictMetaCols]], merged across segments by the same fold as
     * [[mergedDictRows]] (sum, max, max, min), and the capped rows seed the
     * dictionary memo — so the `termMeta` that scores the expansion next
-    * runs no job.
+    * runs no job. The expansion is memoized under (kind, pattern, cap,
+    * params), so a repeated one runs no job either.
     */
-  private def cappedByDf(scans: Seq[DataFrame], maxExpansions: Int): Array[String] = {
-    // single segment: the dictionary has one row per term already — skip
-    // the merge agg (same special case termsAggDf takes)
-    val merged =
-      if (scans.size == 1) scans.head
-      else scans.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"),
-        max("maxTfn").as("maxTfn"), max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-    val rows = merged.orderBy(desc("df"), asc("term")).limit(maxExpansions)
-      .select(DictMetaCols.map(col): _*).collect().map(dictMetaRow)
-    memoizeDict(rows.map { case (t, v) => t -> Some(v) }.toSeq)
-    rows.map(_._1).sorted
-  }
+  private def cappedByDf(kind: String, pattern: String, maxExpansions: Int, params: Any*)(
+      scans: => Seq[DataFrame]): Array[String] =
+    memoExpansion(kind, pattern, maxExpansions, params: _*) {
+      val ss = scans
+      // single segment: the dictionary has one row per term already — skip
+      // the merge agg (same special case termsAggDf takes)
+      val merged =
+        if (ss.size == 1) ss.head
+        else ss.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"),
+          max("maxTfn").as("maxTfn"), max("maxTf").as("maxTf"), min("minDl").as("minDl"))
+      val rows = merged.orderBy(desc("df"), asc("term")).limit(maxExpansions)
+        .select(DictMetaCols.map(col): _*).collect().map(dictMetaRow)
+      memoizeDict(rows.map { case (t, v) => t -> Some(v) }.toSeq)
+      Some(rows.map(_._1).sorted)
+    }.get.clone() // callers own the returned array; the memo keeps its own
 
   /** Capped df-ranked form of [[expandPrefix]] — the expansion
     * `match_phrase_prefix` serves its last slot with.
     */
   def expandPrefixCapped(prefix: String, maxExpansions: Int): Array[String] = {
     val (lo, hi) = prefixBounds(prefix)
-    cappedByDf(segments.map(seg =>
+    cappedByDf("prefix", lo, maxExpansions)(segments.map(seg =>
       InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term") >= lo && col("term") < hi)
-        .select(DictMetaCols.map(col): _*)), maxExpansions)
+        .select(DictMetaCols.map(col): _*)))
   }
 
   /** Dictionary terms matching a glob `pattern` over the analyzer charset
@@ -902,11 +994,11 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_',
       s"wildcard literals must be analyzer charset [a-z0-9_], got '$c' in '$pattern'"))
     val rx = pat.split("\\*", -1).map(java.util.regex.Pattern.quote).mkString("^", ".*", "$")
-    cappedByDf(segments.map { seg =>
+    cappedByDf("wildcard", rx, maxExpansions)(segments.map { seg =>
       InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term").rlike(rx))
         .select(DictMetaCols.map(col): _*)
-    }, maxExpansions)
+    })
   }
 
   /** ES `regexp` term query (Lucene: automaton ∩ term dictionary): terms
@@ -925,11 +1017,11 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     */
   def expandRegexp(pattern: String, maxExpansions: Int = 128): Array[String] = {
     val pat = validateRegexp(pattern)
-    cappedByDf(segments.map { seg =>
+    cappedByDf("regexp", pat, maxExpansions)(segments.map { seg =>
       InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
         .where(col("term").rlike(pat))
         .select(DictMetaCols.map(col): _*)
-    }, maxExpansions)
+    })
   }
 
   /** Validate the safe regexp subset and return the anchored java pattern.
@@ -999,7 +1091,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def matchRegexpDf(pattern: String, maxExpansions: Int = 128): DataFrame = {
     val terms = expandRegexp(pattern, maxExpansions)
     if (terms.isEmpty) return emptyMembership
-    membershipCounts(idScanWithTerm(terms.toSeq))
+    membershipCounts(idScanWithTerm(terms.toSeq), Some(terms.toSeq))
   }
 
   /** ES `more_like_this` term selection (Lucene MoreLikeThis): rank the
@@ -1359,13 +1451,19 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * idf pin). Longer inputs are a rejected shape, not a silent truncation.
     *
     * Plan shape: ONE positional scan of all candidate terms (the same
-    * bucketize skeleton every phrase path uses); each bucket counts every
+    * [[bucketedBlocks]] skeleton every phrase path uses; the expansions
+    * fill the memo its small-scan gate reads); each bucket counts every
     * candidate pair in one pass (PhraseMatcher.bigramDfBucket), and the
     * only exchange moves ((l, r), partial-df) rows — pairs × buckets, never
     * documents. At 100 TB the suggester costs one phrase-shaped scan.
     */
   def suggestPhraseDf(input: String, maxEdits: Int = 1, maxExpansions: Int = 32,
-      size: Int = 5): DataFrame = {
+      size: Int = 5): DataFrame =
+    suggestPhraseDf(input, maxEdits, maxExpansions, size, nBuckets = 0)
+
+  /** [[suggestPhraseDf]]'s body; `nBuckets > 0` forces the bucketed plan. */
+  private[graft] def suggestPhraseDf(input: String, maxEdits: Int, maxExpansions: Int,
+      size: Int, nBuckets: Int): DataFrame = {
     requirePositions("phrase suggest")
     require(maxEdits >= 1 && size > 0, "maxEdits >= 1 and size > 0")
     val toks = graft.tokenize.CodeTokenizer.tokenize(input, analyzer)
@@ -1382,8 +1480,9 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val pairs = for { a <- c0; b <- c1 } yield (a, b)
     val pairsB = spark.sparkContext.broadcast(pairs)
     val allTerms = (c0 ++ c1).distinct.sorted.toSeq
-    bucketedBlocks[((String, String), Long)](allTerms, withPositions = true) { (lo, hi, byTerm) =>
-      PhraseMatcher.bigramDfBucket(byTerm, pairsB.value, lo, hi)
+    bucketedBlocks[((String, String), Long)](allTerms, nBuckets, withPositions = true) {
+      (lo, hi, byTerm) =>
+        PhraseMatcher.bigramDfBucket(byTerm, pairsB.value, lo, hi)
     }
       .toDF("pair", "df")
       .groupBy("pair").agg(sum("df").as("freq"))
@@ -1540,42 +1639,25 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * within each term-sorted bucket file. (Catalog-level tbucket pruning is
     * inherently unavailable to prefix queries: hash bucketing scatters a
     * term RANGE across all buckets — the documented trade of the v4 layout;
-    * the range rides the row-group stats instead.) One ids-only decode
-    * flatMap, one groupBy(docId) exchange, distributed end-to-end.
+    * the range rides the row-group stats instead.) One ids-only decode into
+    * [[membershipCounts]]: when the probe below found the complete
+    * expansion under the small-scan gate, one narrow partition and no
+    * exchange; otherwise one groupBy(docId) exchange, distributed
+    * end-to-end.
     */
-  def matchPrefixDf(prefix: String, pruneCap: Int = 64): DataFrame = {
+  def matchPrefixDf(prefix: String, pruneCap: Int = 64): DataFrame =
+    matchPrefixDf(prefix, pruneCap, nBuckets = 0)
+
+  /** [[matchPrefixDf]]'s body; `nBuckets > 0` forces the exchange plan. */
+  private[graft] def matchPrefixDf(prefix: String, pruneCap: Int, nBuckets: Int): DataFrame = {
     val (lo, hi) = prefixBounds(prefix)
     // ES maxExpansions analog as a PRUNING lever: when the dictionary says
     // the range expands to <= pruneCap terms, those terms' tbuckets become a
     // catalog-level partition filter next to the range (a selective prefix
     // then reads a handful of bucket directories instead of paying
     // O(buckets) footer reads); above the cap — or at pruneCap <= 0 — the
-    // pure range scan stands, pruned by row-group term stats only. The
-    // probe is BOUNDED (limit cap+1 per segment, never expandPrefix's full
-    // collect): a stopword-scale prefix at corpus scale must not land its
-    // whole expansion on the driver just to learn it exceeded the cap —
-    // a segment returning cap+1 rows marks its list incomplete and the
-    // range scan stands.
-    // HOT-PREFIX MEMO: the probe result is a pure function of (prefix
-    // range, cap) over this reader's segment set, which is FIXED for the
-    // reader's lifetime (`segments` is a construction-time val; a delta
-    // commit is served by a new reader) — so a repeated prefix query skips
-    // the probe job entirely and pays only the postings scan. Bounded:
-    // one Option[Array[<= cap terms]] per distinct queried prefix.
-    val expanded: Option[Array[String]] =
-      if (pruneCap <= 0) None
-      else {
-        if (prefixProbeCache.size >= PrefixProbeCacheMax) prefixProbeCache.clear()
-        prefixProbeCache.computeIfAbsent((lo, pruneCap), _ => {
-          val per = segments.map(seg =>
-            InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-              .where(col("term") >= lo && col("term") < hi)
-              .select("term").limit(pruneCap + 1).collect().map(_.getString(0)))
-          val terms = per.flatten.distinct.toArray
-          if (per.forall(_.length <= pruneCap) && terms.length <= pruneCap) Some(terms)
-          else None
-        })
-      }
+    // pure range scan stands, pruned by row-group term stats only.
+    val expanded = if (pruneCap <= 0) None else prefixProbe(lo, hi, pruneCap)
     val scans = segments.zip(segBuckets).map { case (seg, b) =>
       val rangePred = col("term") >= lo && col("term") < hi
       val pred = expanded match {
@@ -1588,8 +1670,39 @@ final class IndexReader(spark: SparkSession, indexDir: String,
         .where(pred)
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"))
     }
-    membershipCounts(scans.reduce(_ unionByName _))
+    membershipCounts(scans.reduce(_ unionByName _), expanded.map(_.toSeq), nBuckets)
   }
+
+  /** The complete expansion of [lo, hi) when it holds at most `cap` terms,
+    * else None. BOUNDED: each segment's range scan stops at cap + 1 rows
+    * (never expandPrefix's full collect — a stopword-scale prefix at
+    * corpus scale must not land its whole expansion on the driver just to
+    * learn it exceeded the cap), and `coalesce(1)` keeps that limit to one
+    * job per segment instead of a partition scale-up over several. That
+    * one task reads the segment's dictionary files one after another, and
+    * a selective range never reaches the limit early: the gain is measured
+    * only on 4-partition dictionaries (6,000 docs), not on a segment with
+    * hundreds of dictionary files. A
+    * complete expansion's dictionary rows seed the dictionary memo (the
+    * small-scan gate reads its df sum there), and the result is memoized
+    * like every capped expansion, so a repeated prefix skips the probe.
+    */
+  private def prefixProbe(lo: String, hi: String, cap: Int): Option[Array[String]] =
+    memoExpansion("prefix_probe", lo, cap) {
+      val per = segments.map(seg =>
+        InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
+          .where(col("term") >= lo && col("term") < hi)
+          .select(DictMetaCols.map(col): _*)
+          .coalesce(1).limit(cap + 1).collect().map(dictMetaRow))
+      val merged = foldDictRows(per.flatten)
+      if (per.exists(_.length > cap) || merged.size > cap) None
+      else {
+        // every segment's whole range is in hand, so the fold is each
+        // term's complete merged row
+        memoizeDict(merged.iterator.map { case (t, v) => t -> Some(v) }.toSeq)
+        Some(merged.keys.toArray.sorted)
+      }
+    }
 
   /** ES `wildcard` query (non-anchored — `*substr*` and friends): docs
     * containing at least one dictionary term matching the glob, with the
@@ -1600,7 +1713,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def matchWildcardDf(pattern: String, maxExpansions: Int = 128): DataFrame = {
     val terms = expandWildcard(pattern, maxExpansions)
     if (terms.isEmpty) return emptyMembership
-    membershipCounts(idScanWithTerm(terms.toSeq))
+    membershipCounts(idScanWithTerm(terms.toSeq), Some(terms.toSeq))
   }
 
   /** (term, firstDocId, count, docDeltas) blocks of an explicit term list,
@@ -1611,13 +1724,13 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * containing AT LEAST ONE of the given terms, with `n_matched` = how
     * many distinct ones hit (ES scores a terms query constant per match —
     * the count is the richer superset both forms cut from). Ids-only
-    * postings scan of exactly these terms, one groupBy(docId) exchange —
-    * the B17/B20 membership tail over an explicit list.
+    * postings scan of exactly these terms into [[membershipCounts]] — the
+    * B17/B20 membership tail over an explicit list.
     */
   def termsSetDf(terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "terms query needs at least one term")
     val norm = terms.map(singleTerm(_, "terms query term")).distinct
-    membershipCounts(idScanWithTerm(norm)).withColumnRenamed("n_terms", "n_matched")
+    membershipCounts(idScanWithTerm(norm), Some(norm)).withColumnRenamed("n_terms", "n_matched")
   }
 
   /** ES `_explain` in batch form — the score breakdown the explain API
@@ -1719,38 +1832,38 @@ final class IndexReader(spark: SparkSession, indexDir: String,
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"))
     }.reduce(_ unionByName _)
 
-  /** Shared membership tail of the prefix/wildcard family: ids-only decode
-    * flatMap, one groupBy(docId) exchange, distributed end-to-end.
+  /** Shared membership tail of the prefix/wildcard/regexp/terms family:
+    * (docId, n_terms = the distinct scanned terms in the doc). Under the
+    * [[singleBucket]] gate at `SingleBucketMaxPostings` over `terms` (the
+    * scan's exact term list, when known) the scan coalesces to ONE narrow partition that decodes the ids
+    * and counts them per doc — no exchange, so a `.count()` of the frame is
+    * one job; otherwise (or when `nBuckets > 0`) an ids-only decode flatMap
+    * and one groupBy(docId) exchange. Postings hold one row per (term, doc)
+    * and segment docId ranges are disjoint, so a plain count per doc IS the
+    * distinct-term count in both plans.
     */
-  private def membershipCounts(scan: DataFrame): DataFrame = {
+  private def membershipCounts(scan: DataFrame, terms: Option[Seq[String]],
+      nBuckets: Int = 0): DataFrame = {
     import spark.implicits._
-    scan.as[(String, Long, Int, Array[Byte])]
-      .flatMap { case (t, f, c, d) =>
-        PostingsCodec.decodeDocIds(f, c, d).iterator.map(id => (id, t))
-      }
-      .toDF("docId", "term")
-      .groupBy("docId")
-      .agg(countDistinct("term").as("n_terms"))
+    val blocks = scan.as[(String, Long, Int, Array[Byte])]
+    if (terms.exists(singleBucket(_, nBuckets, SingleBucketMaxPostings)))
+      blocks.coalesce(1).mapPartitions { it =>
+        val n = scala.collection.mutable.LongMap.empty[Long]
+        it.foreach { case (_, f, c, d) =>
+          PostingsCodec.decodeDocIds(f, c, d).foreach(id => n.update(id, n.getOrElse(id, 0L) + 1L))
+        }
+        n.iterator
+      }.toDF("docId", "n_terms")
+    else
+      blocks.flatMap { case (_, f, c, d) => PostingsCodec.decodeDocIds(f, c, d) }
+        .toDF("docId")
+        .groupBy("docId")
+        .agg(count(lit(1)).as("n_terms"))
   }
 
   private def emptyMembership: DataFrame =
     emptyResult("n_terms", org.apache.spark.sql.types.LongType)
 
-  /** Positional phrase match (SURVEY.md §2.3 B15; ES `match_phrase` with
-    * `slop`, exact positions): every doc where the analyzed phrase's tokens
-    * occur in order within `slop` extra positions of slack (slop = 0 =
-    * consecutive; semantics pinned in PhraseMatcher — ordered only), with
-    * `phrase_tf` = the matching-start count —
-    * distributed end-to-end (no top-k cut: phrase hit sets are small by
-    * nature, and callers compose scoring/limits relationally).
-    *
-    * Plan shape: ONLY the phrase terms' blocks are scanned (tbucket + term
-    * pruning), WITH their `pos` column — the one path that reads it; blocks
-    * re-bucket by docId range exactly like BMW; each bucket intersects
-    * docIds first and decodes positions lazily per candidate block
-    * (PhraseMatcher). A term absent from every segment short-circuits to
-    * empty — phrase is conjunctive.
-    */
   /** Shared preamble of every positional query: the index must store
     * positions, and the empty result carries (docId, <countCol>: int).
     */
@@ -1782,7 +1895,27 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     toks
   }
 
-  def matchPhraseDf(phrase: String, slop: Int = 0): DataFrame = {
+  /** Positional phrase match (SURVEY.md §2.3 B15; ES `match_phrase` with
+    * `slop`, exact positions): every doc where the analyzed phrase's tokens
+    * occur in order within `slop` extra positions of slack (slop = 0 =
+    * consecutive; semantics pinned in PhraseMatcher — ordered only), with
+    * `phrase_tf` = the matching-start count (no top-k cut: phrase hit sets
+    * are small by nature, and callers compose scoring/limits relationally).
+    *
+    * Plan shape: ONLY the phrase terms' blocks are scanned (tbucket + term
+    * pruning), WITH their `pos` column — the one path that reads it — into
+    * [[bucketedBlocks]]: under the small-scan gate (the termMeta below fills
+    * the memo it reads) one narrow partition, so a `.count()` is one job;
+    * above it the blocks re-bucket by docId range through one exchange.
+    * Each bucket intersects docIds first and decodes positions lazily per
+    * candidate block (PhraseMatcher). A term absent from every segment
+    * short-circuits to empty — phrase is conjunctive.
+    */
+  def matchPhraseDf(phrase: String, slop: Int = 0): DataFrame =
+    matchPhraseDf(phrase, slop, nBuckets = 0)
+
+  /** [[matchPhraseDf]]'s body; `nBuckets > 0` forces the bucketed plan. */
+  private[graft] def matchPhraseDf(phrase: String, slop: Int, nBuckets: Int): DataFrame = {
     requirePositions("phrase")
     val emptyOut = emptyPositional("phrase_tf")
     val tokens = positionalTokens(phrase, "match_phrase")
@@ -1792,7 +1925,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     if (distinct.exists(t => !meta.contains(t))) return emptyOut
     val tokensB = spark.sparkContext.broadcast(tokens)
     val sl = slop
-    bucketedBlocks[(Long, Int)](distinct, withPositions = true) { (lo, hi, byTerm) =>
+    bucketedBlocks[(Long, Int)](distinct, nBuckets, withPositions = true) { (lo, hi, byTerm) =>
       // a bucket missing any distinct term can't host a conjunctive match
       if (tokensB.value.exists(t => !byTerm.contains(t))) Iterator.empty
       else PhraseMatcher.matchBucket(byTerm, tokensB.value, lo, hi, sl).iterator
@@ -1807,7 +1940,11 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * [[matchPhraseDf]] with slop. Same positional plan shape: only the
     * terms' blocks (with pos), bucketed, candidate-then-payload.
     */
-  def matchSpanNearDf(query: String, slop: Int): DataFrame = {
+  def matchSpanNearDf(query: String, slop: Int): DataFrame =
+    matchSpanNearDf(query, slop, nBuckets = 0)
+
+  /** [[matchSpanNearDf]]'s body; `nBuckets > 0` forces the bucketed plan. */
+  private[graft] def matchSpanNearDf(query: String, slop: Int, nBuckets: Int): DataFrame = {
     requirePositions("span")
     val emptyOut = emptyPositional("min_gap")
     val terms = positionalTokens(query, "span_near").distinct.sorted
@@ -1816,7 +1953,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     if (terms.exists(t => !meta.contains(t))) return emptyOut // conjunctive
     val termsB = spark.sparkContext.broadcast(terms)
     val sl = slop
-    bucketedBlocks[(Long, Int)](terms.toSeq, withPositions = true) { (lo, hi, byTerm) =>
+    bucketedBlocks[(Long, Int)](terms.toSeq, nBuckets, withPositions = true) { (lo, hi, byTerm) =>
       if (termsB.value.exists(t => !byTerm.contains(t))) Iterator.empty
       else PhraseMatcher.matchNearBucket(byTerm, termsB.value, lo, hi, sl).iterator
     }
@@ -1841,7 +1978,14 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * postings scan, never a position decode of the whole expansion.
     */
   def matchSpanMultiNearDf(prefix: String, other: String, slop: Int,
-      maxExpansions: Int = 128): DataFrame = {
+      maxExpansions: Int = 128): DataFrame =
+    matchSpanMultiNearDf(prefix, other, slop, maxExpansions, nBuckets = 0)
+
+  /** [[matchSpanMultiNearDf]]'s body; `nBuckets > 0` forces the bucketed
+    * plan.
+    */
+  private[graft] def matchSpanMultiNearDf(prefix: String, other: String, slop: Int,
+      maxExpansions: Int, nBuckets: Int): DataFrame = {
     import spark.implicits._
     requirePositions("span_multi")
     require(slop >= 0, s"slop must be >= 0, got $slop")
@@ -1852,8 +1996,9 @@ final class IndexReader(spark: SparkSession, indexDir: String,
         "overlapping spans would cover themselves (shape pinned away)")
     if (exp.isEmpty) return emptyPositional("min_gap")
     val (expB, othB, sl) = (exp, oth, slop)
-    bucketedBlocks[(Long, Int)]((exp :+ oth).toSeq, withPositions = true) { (lo, hi, byTerm) =>
-      PhraseMatcher.spanMultiNearBucket(byTerm, expB, othB, lo, hi, sl)
+    bucketedBlocks[(Long, Int)]((exp :+ oth).toSeq, nBuckets, withPositions = true) {
+      (lo, hi, byTerm) =>
+        PhraseMatcher.spanMultiNearBucket(byTerm, expB, othB, lo, hi, sl)
     }
       .toDF("docId", "min_gap")
   }
@@ -1866,10 +2011,15 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * gates — sbt-gated); include == exclude is rejected (every occurrence
     * excludes itself at any pre/post ≥ 0 — always empty, a shape error).
     * Plan: the b16-family positional scan of BOTH terms' blocks, the walk
-    * bucket-local (PhraseMatcher.spanNotBucket), one groupBy(bucket)
-    * exchange — exclude positions decode only at candidate docs.
+    * bucket-local (PhraseMatcher.spanNotBucket) in [[bucketedBlocks]] —
+    * exclude positions decode only at candidate docs.
     */
-  def matchSpanNotDf(include: String, exclude: String, pre: Int, post: Int): DataFrame = {
+  def matchSpanNotDf(include: String, exclude: String, pre: Int, post: Int): DataFrame =
+    matchSpanNotDf(include, exclude, pre, post, nBuckets = 0)
+
+  /** [[matchSpanNotDf]]'s body; `nBuckets > 0` forces the bucketed plan. */
+  private[graft] def matchSpanNotDf(include: String, exclude: String, pre: Int, post: Int,
+      nBuckets: Int): DataFrame = {
     import spark.implicits._
     requirePositions("span_not")
     require(pre >= 0 && post >= 0, s"pre/post must be >= 0, got ($pre, $post)")
@@ -1878,7 +2028,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     require(inc != exc, "span_not include == exclude always matches nothing")
     val (prN, poN) = (pre, post)
     val (incB, excB) = (inc, exc)
-    bucketedBlocks[(Long, Int)](Seq(inc, exc), withPositions = true) { (lo, hi, byTerm) =>
+    bucketedBlocks[(Long, Int)](Seq(inc, exc), nBuckets, withPositions = true) { (lo, hi, byTerm) =>
       PhraseMatcher.spanNotBucket(byTerm, incB, excB, prN, poN, lo, hi)
     }
       .toDF("docId", "n_spans")
@@ -1892,11 +2042,11 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * window trivially holds its own endpoints). Plan: ONE positional scan
     * of the three terms' blocks, the containment walk bucket-local
     * (PhraseMatcher.spanContainBucket — a-driven, b/little probed at
-    * candidate docs only), one groupBy(bucket) exchange.
+    * candidate docs only) in [[bucketedBlocks]].
     */
   def matchSpanContainingDf(a: String, b: String, slop: Int,
       little: String): DataFrame =
-    spanContainOf(a, b, slop, little, within = false)
+    spanContainOf(a, b, slop, little, within = false, nBuckets = 0)
 
   /** Lucene `SpanWithinQuery` (ES `span_within`) — the inverse of
     * [[matchSpanContainingDf]]: little occurrences that sit inside ≥ 1 big
@@ -1904,10 +2054,13 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     */
   def matchSpanWithinDf(a: String, b: String, slop: Int,
       little: String): DataFrame =
-    spanContainOf(a, b, slop, little, within = true)
+    spanContainOf(a, b, slop, little, within = true, nBuckets = 0)
 
-  private def spanContainOf(a: String, b: String, slop: Int, little: String,
-      within: Boolean): DataFrame = {
+  /** The span_containing / span_within body; `nBuckets > 0` forces the
+    * bucketed plan.
+    */
+  private[graft] def spanContainOf(a: String, b: String, slop: Int, little: String,
+      within: Boolean, nBuckets: Int): DataFrame = {
     import spark.implicits._
     requirePositions(if (within) "span_within" else "span_containing")
     require(slop >= 0, s"slop must be >= 0, got $slop")
@@ -1917,7 +2070,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     require(tc != ta && tc != tb,
       "little ∈ big's terms holds trivially in every window — a shape error")
     val (aN, bN, cN, sl, w) = (ta, tb, tc, slop, within)
-    bucketedBlocks[(Long, Int)](Seq(ta, tb, tc).distinct.sorted, withPositions = true) {
+    bucketedBlocks[(Long, Int)](Seq(ta, tb, tc).distinct.sorted, nBuckets, withPositions = true) {
       (lo, hi, byTerm) =>
         PhraseMatcher.spanContainBucket(byTerm, aN, bN, sl, cN, lo, hi, w)
     }
@@ -1992,7 +2145,14 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * .matchBucketAlts).
     */
   def matchPhrasePrefixDf(phrase: String, maxExpansions: Int = 32,
-      slop: Int = 0): DataFrame = {
+      slop: Int = 0): DataFrame =
+    matchPhrasePrefixDf(phrase, maxExpansions, slop, nBuckets = 0)
+
+  /** [[matchPhrasePrefixDf]]'s body; `nBuckets > 0` forces the bucketed
+    * plan.
+    */
+  private[graft] def matchPhrasePrefixDf(phrase: String, maxExpansions: Int, slop: Int,
+      nBuckets: Int): DataFrame = {
     requirePositions("phrase")
     val emptyOut = emptyPositional("phrase_tf")
     val tokens = positionalTokens(phrase, "match_phrase_prefix")
@@ -2009,7 +2169,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val slotsB = spark.sparkContext.broadcast(slots)
     val sl = slop
     val scanTerms = (fixed ++ expansion).distinct.sorted.toSeq
-    bucketedBlocks[(Long, Int)](scanTerms, withPositions = true) { (blo, bhi, byTerm) =>
+    bucketedBlocks[(Long, Int)](scanTerms, nBuckets, withPositions = true) { (blo, bhi, byTerm) =>
       PhraseMatcher.matchBucketAlts(byTerm, slotsB.value, blo, bhi, sl).iterator
     }
       .toDF("docId", "phrase_tf")
@@ -2363,4 +2523,12 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val hits = if (useBmw) searchBmw(query, k) else searchNaive(query, k)
     spark.createDataFrame(hits.toSeq).toDF("docId", "score")
   }
+}
+
+object IndexReader {
+  /** Blocks grouped by term, each term's blocks sorted by firstDocId — the
+    * presorted contract the bucket scorers read.
+    */
+  private def blocksByTerm(blocks: Array[PostingBlock]): Map[String, Array[PostingBlock]] =
+    blocks.groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.firstDocId) }
 }

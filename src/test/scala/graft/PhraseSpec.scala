@@ -6,6 +6,7 @@ import graft.index.{DeltaIndex, IndexConfig, InvertedIndex}
 import graft.io.Tables
 import graft.query.IndexReader
 import graft.tokenize.CodeTokenizer
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
@@ -20,6 +21,8 @@ import org.scalatest.BeforeAndAfterAll
 class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
   val N = 800L
   val dir = "/tmp/graft_test_phrase"
+  // the same corpus split into a base segment and one delta segment
+  val ddir = "/tmp/graft_test_phrase_delta"
   // salting forced on (low threshold) so phrase terms cross salted runs
   val cfg: IndexConfig = IndexConfig(partitions = 8, heavyDfThreshold = 200L, saltRunDocs = 200L)
 
@@ -41,8 +44,18 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     super.beforeAll()
     Tables.delete(spark, "/tmp", "graft_test_phrase")
     InvertedIndex.build(spark, corpus, dir, cfg, runId = "phrase")
+    Tables.delete(spark, "/tmp", "graft_test_phrase_delta")
+    InvertedIndex.build(spark, corpus.filter(f => math.abs(f.path.hashCode % 5) != 0), ddir, cfg,
+      runId = "phrase-base")
+    DeltaIndex.addDocuments(spark, ddir, corpus.filter(f => math.abs(f.path.hashCode % 5) == 0),
+      cfg, runId = "phrase-delta")
     ()
   }
+
+  /** The docId-bucketed query plans: 0 lets the small-scan gate choose
+    * (one narrow partition on these fixtures), 7 forces the docId exchange.
+    */
+  val planBuckets = Seq(0, 7)
 
   def slideCount(tokens: Array[String], phrase: Array[String]): Int = {
     var c = 0
@@ -95,12 +108,6 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("phrase across base ∪ delta segments (positions in composite serving)") {
     import spark.implicits._
-    val ddir = "/tmp/graft_test_phrase_delta"
-    Tables.delete(spark, "/tmp", "graft_test_phrase_delta")
-    val base = corpus.filter(f => math.abs(f.path.hashCode % 5) != 0)
-    val extra = corpus.filter(f => math.abs(f.path.hashCode % 5) == 0)
-    InvertedIndex.build(spark, base, ddir, cfg, runId = "phrase-base")
-    DeltaIndex.addDocuments(spark, ddir, extra, cfg, runId = "phrase-delta")
     val r = new IndexReader(spark, ddir)
     // compare doc SETS via the stable (repo,path,commit)-independent count
     // per phrase: composite docIds differ from the single build's, so
@@ -179,8 +186,11 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     var nonTrivial = 0
     for (ph <- Seq("def val", "def def", "def val class", "return if"); sl <- Seq(0, 1, 2)) {
       val exp = slopOracle(ph, sl)
-      val got = reader.matchPhraseDf(ph, sl).as[(Long, Int)].collect().toMap
-      assert(got == exp, s"phrase '$ph' slop $sl: engine ${got.size} docs vs oracle ${exp.size}")
+      for (n <- planBuckets) {
+        val got = reader.matchPhraseDf(ph, sl, n).as[(Long, Int)].collect().toMap
+        assert(got == exp,
+          s"phrase '$ph' slop $sl nBuckets $n: engine ${got.size} docs vs oracle ${exp.size}")
+      }
       // the gate is vacuous unless slop actually ADMITS new matches somewhere
       if (sl > 0 && exp != slopOracle(ph, 0)) nonTrivial += 1
     }
@@ -213,9 +223,10 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
       val exp = tokensById.iterator
         .map { case (id, ts) => id -> prefixSlopCount(ts, fixed, prefix, sl) }
         .filter(_._2 > 0).toMap
-      val got = reader.matchPhrasePrefixDf(ph, maxExpansions = 1000, slop = sl)
-        .as[(Long, Int)].collect().toMap
-      assert(got == exp, s"phrase_prefix '$ph' slop $sl: ${got.size} vs ${exp.size} docs")
+      for (n <- planBuckets) {
+        val got = reader.matchPhrasePrefixDf(ph, 1000, sl, n).as[(Long, Int)].collect().toMap
+        assert(got == exp, s"phrase_prefix '$ph' slop $sl nBuckets $n: ${got.size} vs ${exp.size} docs")
+      }
       if (exp.nonEmpty) nonEmpty += 1
     }
     assert(nonEmpty >= 4, "phrase-prefix gate near-vacuous — fixture too sparse")
@@ -239,8 +250,10 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
       val exp = tokensById.iterator.flatMap { case (id, ts) =>
         bruteGap(ts, terms).filter(_ <= sl).map(id -> _)
       }.toMap
-      val got = reader.matchSpanNearDf(q, sl).as[(Long, Int)].collect().toMap
-      assert(got == exp, s"span_near '$q' slop $sl: ${got.size} vs ${exp.size} docs")
+      for (n <- planBuckets) {
+        val got = reader.matchSpanNearDf(q, sl, n).as[(Long, Int)].collect().toMap
+        assert(got == exp, s"span_near '$q' slop $sl nBuckets $n: ${got.size} vs ${exp.size} docs")
+      }
       if (exp.nonEmpty) nonEmpty += 1
     }
     assert(nonEmpty >= 6, "span-near gate near-vacuous")
@@ -270,16 +283,20 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
         val n = wins.count { case (s, e) => pc.exists(p => s <= p && p <= e) }
         if (n > 0) Some(id -> n) else None
       }.toMap
-      val gotC = reader.matchSpanContainingDf(a, b, sl, c).as[(Long, Int)].collect().toMap
-      assert(gotC == expC, s"containing ($a,$b,$c,$sl): ${gotC.size} vs ${expC.size}")
+      for (n <- planBuckets) {
+        val gotC = reader.spanContainOf(a, b, sl, c, within = false, n).as[(Long, Int)].collect().toMap
+        assert(gotC == expC, s"containing ($a,$b,$c,$sl) nBuckets $n: ${gotC.size} vs ${expC.size}")
+      }
       val expW = tokensById.iterator.flatMap { case (id, ts) =>
         val wins = bruteSpans(ts, a, b, sl)
         val n = ts.zipWithIndex.filter(_._1 == c).map(_._2)
           .count(p => wins.exists { case (s, e) => s <= p && p <= e })
         if (n > 0) Some(id -> n) else None
       }.toMap
-      val gotW = reader.matchSpanWithinDf(a, b, sl, c).as[(Long, Int)].collect().toMap
-      assert(gotW == expW, s"within ($a,$b,$c,$sl): ${gotW.size} vs ${expW.size}")
+      for (n <- planBuckets) {
+        val gotW = reader.spanContainOf(a, b, sl, c, within = true, n).as[(Long, Int)].collect().toMap
+        assert(gotW == expW, s"within ($a,$b,$c,$sl) nBuckets $n: ${gotW.size} vs ${expW.size}")
+      }
       if (expC.nonEmpty) nzC += 1
       if (expW.nonEmpty) nzW += 1
     }
@@ -325,5 +342,109 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     val r = new IndexReader(spark, fdir)
     val e = intercept[IllegalArgumentException](r.matchPhraseDf("def val"))
     assert(e.getMessage.contains("storePositions"))
+  }
+
+  private def sortedRows(df: DataFrame): Seq[Row] =
+    df.orderBy(df.columns.map(col).toIndexedSeq: _*).collect().toSeq
+
+  private def hasExchange(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("Exchange")
+
+  /** Every DataFrame consumer of the docId-bucketed plans, by name, as a
+    * function of `nBuckets` (0 = the small-scan gate decides).
+    */
+  private def planFrames(r: IndexReader): Seq[(String, Int => DataFrame)] = Seq(
+    "phrase slop 0" -> (n => r.matchPhraseDf("def val", 0, n)),
+    "phrase slop 1" -> (n => r.matchPhraseDf("def val class", 1, n)),
+    "phrase_prefix" -> (n => r.matchPhrasePrefixDf("def va", 32, 0, n)),
+    "span_near" -> (n => r.matchSpanNearDf("def val", 3, n)),
+    "span_multi" -> (n => r.matchSpanMultiNearDf("buf", "def", 5, 128, n)),
+    "span_not" -> (n => r.matchSpanNotDf("def", "val", 1, 1, n)),
+    "span_containing" -> (n => r.spanContainOf("def", "val", 4, "class", within = false, n)),
+    "span_within" -> (n => r.spanContainOf("def", "val", 4, "class", within = true, n)),
+    "prefix, probe complete" -> (n => r.matchPrefixDf("de", 64, n)),
+    "prefix, probe over the cap" -> (n => r.matchPrefixDf("de", 1, n)))
+
+  for ((label, d) <- Seq("one segment" -> dir, "base + delta" -> ddir))
+    test(s"single-bucket plan == bucketed plan for every consumer ($label)") {
+      val r = new IndexReader(spark, d)
+      assert(r.segments.size == (if (d == dir) 1 else 2))
+      var nonEmpty = 0
+      for (i <- planFrames(r).indices) {
+        // a fresh reader per consumer: the gate must look its terms up itself
+        val (name, frame) = planFrames(new IndexReader(spark, d))(i)
+        val (one, grouped) = (frame(0), frame(7))
+        assert(hasExchange(grouped), s"$name: nBuckets = 7 did not plan the exchange")
+        assert(hasExchange(one) == name.endsWith("over the cap"),
+          s"$name: the gate chose the wrong plan:\n${one.queryExecution.executedPlan}")
+        assert(one.schema == grouped.schema, s"$name: schemas differ")
+        val rows = sortedRows(one)
+        assert(rows == sortedRows(grouped), s"$name: single-bucket rows != bucketed rows")
+        if (rows.nonEmpty) nonEmpty += 1
+      }
+      assert(nonEmpty == planFrames(r).size, s"only $nonEmpty consumers matched — fixture too sparse")
+
+      val suggest = sortedRows(r.suggestPhraseDf("deff vall", 1, 32, 5, 0))
+      assert(suggest.nonEmpty && suggest == sortedRows(r.suggestPhraseDf("deff vall", 1, 32, 5, 7)),
+        "suggestPhraseDf: single-bucket rows != bucketed rows")
+
+      // a small batch takes the one-task plan, a long one the buckets
+      for (batch <- Seq(smallBatch, longBatch)) {
+        val hits = r.searchBmwBatch(batch, 10)
+        assert(hits.values.count(_.nonEmpty) >= batch.size / 2)
+        assert(hits.map { case (q, h) => q -> h.toSeq } ==
+          r.searchBmwBatch(batch, 10, nBuckets = 7).map { case (q, h) => q -> h.toSeq },
+          s"searchBmwBatch (${batch.size} queries): gate-chosen hits != bucketed hits")
+      }
+    }
+
+  val smallBatch = Seq("def val", "buf_idx class", "z100_id return", "qqqzzznotfound")
+  val longBatch = smallBatch ++ Seq("import if", "else def", "class return", "val if",
+    "buf_buf import", "return else", "def class val")
+
+  test("job guards: memo-hit phrase, span_not and small batch, probe-memoized prefix and repeated fuzzy run one job") {
+    val r = new IndexReader(spark, dir)
+    r.matchPhraseDf("def val").count() // fills the dictionary memo
+    val phraseJobs = countJobs(r.matchPhraseDf("def val").count())
+    assert(phraseJobs == 1, s"memo-hit matchPhraseDf(..).count() ran $phraseJobs jobs")
+    r.matchSpanNotDf("def", "class", 1, 1).count()
+    val spanJobs = countJobs(r.matchSpanNotDf("def", "class", 1, 1).count())
+    assert(spanJobs == 1, s"memo-hit matchSpanNotDf(..).count() ran $spanJobs jobs")
+    val coldPrefix = countJobs(r.matchPrefixDf("de").count())
+    assert(coldPrefix == 2, s"cold matchPrefixDf(..).count() ran $coldPrefix jobs (probe + scan)")
+    val prefixJobs = countJobs(r.matchPrefixDf("de").count())
+    assert(prefixJobs == 1, s"probe-memoized matchPrefixDf(..).count() ran $prefixJobs jobs")
+    r.fuzzyTopK("deff", 2, 10)
+    val fuzzyJobs = countJobs(r.fuzzyTopK("deff", 2, 10))
+    assert(fuzzyJobs == 1, s"repeated single-segment fuzzyTopK ran $fuzzyJobs jobs")
+    r.searchBmwBatch(longBatch, 10) // looks up every batch term
+    val smallJobs = countJobs(r.searchBmwBatch(smallBatch, 10))
+    assert(smallJobs == 1, s"memo-hit 4-query searchBmwBatch ran $smallJobs jobs")
+    val longJobs = countJobs(r.searchBmwBatch(longBatch, 10))
+    assert(longJobs >= 2, s"memo-hit 11-query searchBmwBatch ran $longJobs job: not the bucketed plan")
+  }
+
+  test("membership counts: plain count == distinct-term count (base + delta)") {
+    import spark.implicits._
+    val r = new IndexReader(spark, ddir)
+    val pairs = r.segments.map(seg => Tables.read(spark, seg, InvertedIndex.PostingsTable)
+      .select("term", "firstDocId", "count", "docDeltas"))
+      .reduce(_ unionByName _)
+      .as[(String, Long, Int, Array[Byte])]
+      .flatMap { case (t, f, c, d) => PostingsCodec.decodeDocIds(f, c, d).iterator.map(id => (id, t)) }
+      .toDF("docId", "term")
+    def distinctCount(where: org.apache.spark.sql.Column): DataFrame =
+      pairs.where(where).groupBy("docId").agg(countDistinct("term").as("n_terms"))
+    val de = distinctCount(col("term") >= "de" && col("term") < "df")
+    assert(sortedRows(de).nonEmpty)
+    for (cap <- Seq(64, 1); n <- planBuckets)
+      assert(sortedRows(r.matchPrefixDf("de", cap, n)) == sortedRows(de), s"prefix (cap $cap, nBuckets $n)")
+    val set = Seq("def", "val", "buf_idx")
+    assert(sortedRows(r.termsSetDf(set).withColumnRenamed("n_matched", "n_terms")) ==
+      sortedRows(distinctCount(col("term").isin(set: _*))), "terms set")
+    val filterIds = distinctCount(col("term").isin("def", "val"))
+      .where(col("n_terms") === 2).select(col("docId"), lit(0.0).as("score"))
+    assert(sortedRows(r.searchBoolDf(Nil, filter = Seq("def", "val"))) == sortedRows(filterIds),
+      "bool filter conjunction")
   }
 }
