@@ -3,8 +3,9 @@ package graft.query
 import graft.codec.PostingsCodec
 import graft.index.{CorpusStats, DeltaIndex, InvertedIndex, PostingBlock}
 import graft.tokenize.CodeTokenizer
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.LongAccumulator
 
 /** Query entry points over a built index (SURVEY.md §2.3 B8–B10, §3.3).
@@ -35,11 +36,29 @@ import org.apache.spark.util.LongAccumulator
   * from the stats-independent (maxTf, minDl) impact material — valid
   * (slightly looser) under the merged avgdl; single-segment mode keeps the
   * exact stored bound.
+  *
+  * The term dictionary's first phase (point lookups and the fuzzy /
+  * prefix / wildcard / regexp expansions) is served on the driver from one
+  * resident copy of the merged dictionary while the segments' dictionary
+  * files stay under `ResidentDictMaxBytes` (see [[resident]]); above it
+  * every lookup and expansion runs as a dictionary scan.
   */
-final class IndexReader(spark: SparkSession, indexDir: String,
-    p: Bm25Params = Bm25.Default,
-    pinnedSegments: Option[Seq[String]] = None) extends Serializable {
+final class IndexReader private (spark: SparkSession, indexDir: String,
+    p: Bm25Params, pinnedSegments: Option[Seq[String]],
+    residentMaxBytes: Long) extends Serializable {
   import spark.implicits._
+
+  def this(spark: SparkSession, indexDir: String, p: Bm25Params = Bm25.Default,
+      pinnedSegments: Option[Seq[String]] = None) =
+    this(spark, indexDir, p, pinnedSegments, IndexReader.ResidentDictMaxBytes)
+
+  /** A reader over exactly these segments that never holds the resident
+    * dictionary: every lookup and expansion takes the scan form whatever
+    * the dictionary's size — the form readers over larger dictionaries
+    * serve, for tests that compare the two.
+    */
+  private[graft] def scanForm: IndexReader =
+    new IndexReader(spark, indexDir, p, Some(segments), residentMaxBytes = -1L)
 
   /** Base + committed delta segments, each a full index directory. When
     * `pinnedSegments` is given (ES point-in-time: the segment manifest
@@ -139,11 +158,10 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   def termMeta(qterms: Array[String]): Map[String, BlockMaxWand.TermMeta] =
     cookMeta(mergedDictRows(qterms))
 
-  // Per-term merged dictionary rows, memoized for the reader's lifetime —
-  // the FST-residency model: ES/Lucene hold the term dictionary's lookup
-  // structure in memory per segment, while the previous shape here ran one
-  // Spark job per query (per segment, even) for what is a point lookup of
-  // query-sized term lists. Sound because a reader's `segments` list is
+  // Per-term merged dictionary rows of a reader WITHOUT the resident table
+  // (above its bound, or the scan form), memoized for the reader's
+  // lifetime — the query-sized slice of the FST-residency model that
+  // [[resident]] follows whole. Sound because a reader's `segments` list is
   // FIXED at construction and committed segments are immutable (the same
   // argument PIT serving rests on). None records a term PROVEN absent, so
   // absent terms don't re-probe. BOUNDED like expansionMemo: wholesale
@@ -152,15 +170,47 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   @transient private lazy val dictMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Option[(Long, Double, Int, Int)]]()
 
-  /** The merged per-term dictionary material — at most ONE Spark job per
-    * call regardless of segment count (r07; previously one job per segment
-    * per query), and zero jobs when every term is memoized: the per-segment
-    * term-pruned dictionary scans UNION and collect together, and the
-    * driver-side fold is order-independent (sum/max/min), so results are
-    * identical to the per-segment loop.
+  /** The merged dictionary held on the driver — Lucene's resident terms
+    * index — when the segments' dictionary files total at most
+    * `ResidentDictMaxBytes` (a file listing decides, no job); None above
+    * it, or on a [[scanForm]] reader. Loaded on the first lookup by ONE
+    * union-collect job over every segment's [[DictMetaCols]], folded per
+    * term like every merged lookup ([[foldDictRows]]). While it is held,
+    * every point lookup ([[mergedDictRows]], hence termMeta, termDfs and
+    * the small-scan gate) and every expansion ([[cappedByDf]],
+    * [[expandPrefix]], [[prefixProbe]]) runs on the driver and submits no
+    * job; `dictMemo` stays empty. @transient: never shipped with a closure.
+    */
+  @transient private[graft] lazy val resident: Option[IndexReader.ResidentDict] =
+    if (residentMaxBytes < 0 || dictBytes > residentMaxBytes) None
+    else {
+      val rows = segments.map(seg =>
+        InvertedIndex.read(spark, seg, InvertedIndex.DictTable).select(DictMetaCols.map(col): _*))
+        .reduce(_ unionByName _).collect().map(dictMetaRow)
+      Some(IndexReader.ResidentDict(
+        if (segments.size == 1) rows else foldDictRows(rows.toSeq).toArray))
+    }
+
+  /** Bytes of every segment's dictionary data files. */
+  private def dictBytes: Long = segments.iterator.map { seg =>
+    val p = new org.apache.hadoop.fs.Path(seg, InvertedIndex.DictTable)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+  }.sum
+
+  /** The merged per-term dictionary material. Served by [[resident]] when
+    * it is held; otherwise at most ONE Spark job per call regardless of
+    * segment count (r07; previously one job per segment per query), and
+    * zero jobs when every term is memoized: the per-segment term-pruned
+    * dictionary scans UNION and collect together, and the driver-side
+    * fold is order-independent (sum/max/min), so results are identical to
+    * the per-segment loop.
     */
   private def mergedDictRows(qterms: Array[String]): Map[String, (Long, Double, Int, Int)] = {
     if (qterms.isEmpty) return Map.empty
+    resident match {
+      case Some(d) => return qterms.iterator.flatMap(t => d.get(t).map(t -> _)).toMap
+      case None =>
+    }
     val known = scala.collection.mutable.Map.empty[String, (Long, Double, Int, Int)]
     val missing = scala.collection.mutable.ArrayBuffer.empty[String]
     qterms.foreach { t =>
@@ -866,28 +916,36 @@ final class IndexReader(spark: SparkSession, indexDir: String,
 
   /** Dictionary terms starting with `prefix`, across all segments — a RANGE
     * scan of the term-sorted dictionary (row-group min/max pruning), the
-    * analog of Lucene's FST prefix walk. Building block for the wildcard /
-    * prefix query family; [[matchPrefixDf]] itself pushes the range straight
-    * into the postings scan and never materializes this list.
+    * analog of Lucene's FST prefix walk; while [[resident]] is held, a
+    * binary-searched range of the resident table. Building block for the
+    * wildcard / prefix query family; [[matchPrefixDf]] itself pushes the
+    * range straight into the postings scan and never materializes this list.
     */
   def expandPrefix(prefix: String): Array[String] = {
     val (lo, hi) = prefixBounds(prefix)
-    segments.flatMap { seg =>
-      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-        .where(col("term") >= lo && col("term") < hi)
-        .select("term").collect().map(_.getString(0))
-    }.distinct.sorted.toArray
+    resident match {
+      case Some(d) => d.inRange(lo, hi)
+      case None =>
+        segments.flatMap { seg =>
+          InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
+            .where(col("term") >= lo && col("term") < hi)
+            .select("term").collect().map(_.getString(0))
+        }.distinct.sorted.toArray
+    }
   }
 
   /** Dictionary terms within Levenshtein distance `maxEdits` of the query
     * term, across all segments, capped at `maxExpansions` picked by
     * (df desc, term asc) — ES `fuzzy` / `match` `fuzziness` with
     * `max_expansions` (Lucene's LevenshteinAutomata walk re-expressed as a
-    * length-banded dictionary scan: edit distance >= length difference, so
-    * the band is a correct prefilter, and the levenshtein verify runs as
-    * Spark's codegen'd built-in ON THE EXECUTORS — only matching terms ever
-    * reach the driver; the dictionary is postings-scale smaller than the
-    * corpus, the same economics as [[expandPrefix]]).
+    * length-banded dictionary filter: edit distance >= length difference,
+    * so the band is a correct prefilter). While [[resident]] is held the
+    * filter runs on the driver over the resident table; above its bound the
+    * levenshtein verify runs as Spark's codegen'd built-in ON THE EXECUTORS
+    * and only matching terms ever reach the driver (the dictionary is
+    * postings-scale smaller than the corpus, the same economics as
+    * [[expandPrefix]]). Both forms call the same distance kernel
+    * ([[fuzzyFilter]]).
     *
     * PINNED DISTANCE: classic Levenshtein (insert/delete/substitute — the
     * Spark built-in). ES/Lucene fuzziness defaults to Damerau-OSA, where a
@@ -900,71 +958,108 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       prefixLength: Int = 0, transpositions: Boolean = false): Array[String] = {
     require(maxExpansions > 0, s"maxExpansions must be > 0, got $maxExpansions")
     cappedByDf("fuzzy", term, maxExpansions, maxEdits, prefixLength, transpositions)(
-      fuzzyExpansionScans(term, maxEdits, prefixLength, transpositions))
+      fuzzyFilter(term, maxEdits, prefixLength, transpositions))
   }
 
-  /** The per-segment UNCAPPED expansion frames expandFuzzy caps — public so
-    * plan evidence (EXPLAINS.md) can show the dictionary scan with the
-    * distance verify in place, exactly as it executes.
+  /** The per-segment UNCAPPED expansion frames expandFuzzy caps above the
+    * resident bound — public so plan evidence (EXPLAINS.md) can show the
+    * dictionary scan with the distance verify in place, exactly as it
+    * executes there. Under the bound expandFuzzy applies the same filter to
+    * the resident table on the driver and builds none of these frames.
     */
   def fuzzyExpansionScans(term: String, maxEdits: Int, prefixLength: Int = 0,
-      transpositions: Boolean = false): Seq[DataFrame] = {
+      transpositions: Boolean = false): Seq[DataFrame] =
+    dictScans(fuzzyFilter(term, maxEdits, prefixLength, transpositions))
+
+  private def fuzzyFilter(term: String, maxEdits: Int, prefixLength: Int,
+      transpositions: Boolean): DictFilter = {
     val q = singleTerm(term, "fuzzy term")
     require(maxEdits >= 0, s"maxEdits must be >= 0, got $maxEdits")
     require(prefixLength >= 0, s"prefix_length must be >= 0, got $prefixLength")
     // ES `prefix_length`: the first P characters are EXACT — no edits spent
     // there (Lucene anchors the automaton walk after the common prefix).
-    // Here the exact prefix becomes a RANGE predicate on the term-sorted
-    // dictionary — the same row-group min/max pruning expandPrefix rides —
-    // so a prefix_length>0 fuzzy query scans a dictionary SLICE instead of
-    // every term: the parameter IS the scale lever ES documents it as.
+    // Here the exact prefix becomes a RANGE on the term-sorted dictionary —
+    // the same row-group min/max pruning expandPrefix rides, or a binary
+    // search of the resident table — so a prefix_length>0 fuzzy query
+    // filters a dictionary SLICE instead of every term: the parameter IS
+    // the scale lever ES documents it as.
     val pfx = q.take(prefixLength)
-    segments.map { seg =>
-      val dict = InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-      val pruned =
-        if (pfx.isEmpty) dict
-        else dict.where(col("term") >= pfx && col("term") < (pfx.init + (pfx.last + 1).toChar))
-      // Both distances bound |len(a) - len(b)| below, so the length band
-      // is a correct prefilter for either; the verify stays executor-side
-      // and codegen'd in both branches (transpositions routes through the
-      // native graft.functions.DamerauLevenshtein expression — the
-      // UNRESTRICTED variant the oracle engine computes; divergence from
-      // Lucene's OSA documented there).
-      val dist =
-        if (transpositions) graft.functions.DamerauLevenshtein(col("term"), lit(q))
-        else levenshtein(col("term"), lit(q))
-      pruned
-        .where(length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
-          dist <= maxEdits)
-        .select(DictMetaCols.map(col): _*)
-    }
+    val (minLen, maxLen) = (q.length - maxEdits, q.length + maxEdits)
+    // Both distances bound |len(a) - len(b)| below, so the length band is a
+    // correct prefilter for either; in the scan the verify stays
+    // executor-side and codegen'd in both branches (transpositions routes
+    // through the native graft.functions.DamerauLevenshtein expression —
+    // the UNRESTRICTED variant the oracle engine computes; divergence from
+    // Lucene's OSA documented there).
+    val dist =
+      if (transpositions) graft.functions.DamerauLevenshtein(col("term"), lit(q))
+      else levenshtein(col("term"), lit(q))
+    val qu = UTF8String.fromString(q)
+    DictFilter(
+      if (pfx.isEmpty) None else Some((pfx, pfx.init + (pfx.last + 1).toChar)),
+      Some(length(col("term")).between(minLen, maxLen) && dist <= maxEdits),
+      t => t.numChars >= minLen && t.numChars <= maxLen && (
+        if (transpositions) graft.functions.DamerauLevenshtein.distance(t.toString, q)
+        else t.levenshteinDistance(qu)) <= maxEdits)
   }
 
-  /** df-ranked expansion cap as a PLAN, not a driver sort: merge per-segment
-    * dictionary rows, take the global top-maxExpansions by (df desc, term
-    * asc) via TakeOrderedAndProject — the driver receives exactly the capped
-    * list, never the full candidate set (a pathological pattern over a
-    * corpus-scale dictionary must not collect before capping). `scans`
-    * carry [[DictMetaCols]], merged across segments by the same fold as
-    * [[mergedDictRows]] (sum, max, max, min), and the capped rows seed the
-    * dictionary memo — so the `termMeta` that scores the expansion next
-    * runs no job. The expansion is memoized under (kind, pattern, cap,
-    * params), so a repeated one runs no job either.
+  /** One dictionary filter in both its forms: an optional term range
+    * [lo, hi) (a range predicate the scan's row-group stats prune by, or a
+    * binary search of the resident table), then a per-term test — `scan`
+    * for the executors, `keep` for the driver, built around the same
+    * kernel (the Spark built-in's `UTF8String` method, the same static
+    * function, `Matcher.find` as `rlike` calls it), so both forms select
+    * the same terms. `scan` None: the range alone.
+    */
+  private case class DictFilter(range: Option[(String, String)], scan: Option[Column],
+      keep: UTF8String => Boolean)
+
+  /** A regex's driver test the way Spark's `rlike` evaluates it. */
+  private def rlikeKeep(rx: String): UTF8String => Boolean = {
+    val compiled = java.util.regex.Pattern.compile(rx)
+    t => compiled.matcher(t.toString).find(0)
+  }
+
+  /** The filter's per-segment dictionary scans, carrying [[DictMetaCols]]. */
+  private def dictScans(f: DictFilter): Seq[DataFrame] = segments.map { seg =>
+    val dict = InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
+    val ranged = f.range.fold(dict) { case (lo, hi) => dict.where(col("term") >= lo && col("term") < hi) }
+    f.scan.fold(ranged)(ranged.where).select(DictMetaCols.map(col): _*)
+  }
+
+  /** The terms `filter` selects, capped at `maxExpansions` by (df desc,
+    * term asc), sorted. While [[resident]] is held the filter and the cap
+    * run on the driver over the resident table. Otherwise the cap is a
+    * PLAN, not a driver sort: merge the per-segment dictionary rows, take
+    * the global top-maxExpansions via TakeOrderedAndProject — the driver
+    * receives exactly the capped list, never the full candidate set (a
+    * pathological pattern over a corpus-scale dictionary must not collect
+    * before capping). The scans carry [[DictMetaCols]], merged across
+    * segments by the same fold as [[mergedDictRows]] (sum, max, max, min),
+    * and the capped rows seed the dictionary memo — so the `termMeta` that
+    * scores the expansion next runs no job. Either way the expansion is
+    * memoized under (kind, pattern, cap, params), so a repeated one runs no
+    * job and no driver filter either.
     */
   private def cappedByDf(kind: String, pattern: String, maxExpansions: Int, params: Any*)(
-      scans: => Seq[DataFrame]): Array[String] =
+      filter: => DictFilter): Array[String] =
     memoExpansion(kind, pattern, maxExpansions, params: _*) {
-      val ss = scans
-      // single segment: the dictionary has one row per term already — skip
-      // the merge agg (same special case termsAggDf takes)
-      val merged =
-        if (ss.size == 1) ss.head
-        else ss.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"),
-          max("maxTfn").as("maxTfn"), max("maxTf").as("maxTf"), min("minDl").as("minDl"))
-      val rows = merged.orderBy(desc("df"), asc("term")).limit(maxExpansions)
-        .select(DictMetaCols.map(col): _*).collect().map(dictMetaRow)
-      memoizeDict(rows.map { case (t, v) => t -> Some(v) }.toSeq)
-      Some(rows.map(_._1).sorted)
+      val f = filter
+      resident match {
+        case Some(d) => Some(d.capped(f.range, maxExpansions)(f.keep))
+        case None =>
+          val ss = dictScans(f)
+          // single segment: the dictionary has one row per term already —
+          // skip the merge agg (same special case termsAggDf takes)
+          val merged =
+            if (ss.size == 1) ss.head
+            else ss.reduce(_ unionByName _).groupBy("term").agg(sum("df").as("df"),
+              max("maxTfn").as("maxTfn"), max("maxTf").as("maxTf"), min("minDl").as("minDl"))
+          val rows = merged.orderBy(desc("df"), asc("term")).limit(maxExpansions)
+            .select(DictMetaCols.map(col): _*).collect().map(dictMetaRow)
+          memoizeDict(rows.map { case (t, v) => t -> Some(v) }.toSeq)
+          Some(rows.map(_._1).sorted)
+      }
     }.get.clone() // callers own the returned array; the memo keeps its own
 
   /** Capped df-ranked form of [[expandPrefix]] — the expansion
@@ -972,18 +1067,16 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     */
   def expandPrefixCapped(prefix: String, maxExpansions: Int): Array[String] = {
     val (lo, hi) = prefixBounds(prefix)
-    cappedByDf("prefix", lo, maxExpansions)(segments.map(seg =>
-      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-        .where(col("term") >= lo && col("term") < hi)
-        .select(DictMetaCols.map(col): _*)))
+    cappedByDf("prefix", lo, maxExpansions)(DictFilter(Some((lo, hi)), None, _ => true))
   }
 
   /** Dictionary terms matching a glob `pattern` over the analyzer charset
     * (`*` = any run, including empty — ES `wildcard`, the non-anchored
     * family `b18_prefix` can't serve), capped at `maxExpansions` by
-    * (df desc, term asc). The scan predicate is a compiled regex evaluated
-    * distributed over the dictionary — the honest v1; the 100 TB upgrade
-    * path is an n-gram index over dictionary terms (intersect the pattern's
+    * (df desc, term asc). The filter is a compiled regex, evaluated on the
+    * driver over the resident table under its bound and distributed over
+    * the dictionary above it — the honest v1; the 100 TB upgrade path is
+    * an n-gram index over dictionary terms (intersect the pattern's
     * n-grams to a candidate set first), which changes only this expansion,
     * not the query serving below it.
     */
@@ -994,34 +1087,29 @@ final class IndexReader(spark: SparkSession, indexDir: String,
       (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_',
       s"wildcard literals must be analyzer charset [a-z0-9_], got '$c' in '$pattern'"))
     val rx = pat.split("\\*", -1).map(java.util.regex.Pattern.quote).mkString("^", ".*", "$")
-    cappedByDf("wildcard", rx, maxExpansions)(segments.map { seg =>
-      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-        .where(col("term").rlike(rx))
-        .select(DictMetaCols.map(col): _*)
-    })
+    cappedByDf("wildcard", rx, maxExpansions)(
+      DictFilter(None, Some(col("term").rlike(rx)), rlikeKeep(rx)))
   }
 
   /** ES `regexp` term query (Lucene: automaton ∩ term dictionary): terms
     * whose ENTIRE text matches `pattern` (ES regexp is anchored), expanded
-    * through the same capped df-ranked dictionary scan as wildcard — the
-    * automaton intersection re-expressed as a distributed rlike over the
-    * term-sorted dictionary, which is postings-scale smaller than the
+    * through the same capped df-ranked dictionary filter as wildcard — the
+    * automaton intersection re-expressed as an rlike over the term-sorted
+    * dictionary (on the driver over the resident table under its bound,
+    * distributed above it), which is postings-scale smaller than the
     * corpus. Only a VALIDATED-SAFE subset is accepted (literals over the
     * analyzer charset, `.`, classes `[...]`, quantifiers `* + ?` on single
     * atoms, alternation, grouping WITHOUT a quantifier on the group):
     * rejecting quantified groups makes catastrophic backtracking
-    * structurally impossible on executor threads — `(a+)+` over a 64-char
-    * term is exponential, and a query string must never be able to wedge
-    * an executor. Unsupported-but-safe constructs can widen the validator
+    * structurally impossible on driver and executor threads — `(a+)+` over
+    * a 64-char term is exponential, and a query string must never be able
+    * to wedge one. Unsupported-but-safe constructs can widen the validator
     * later; unsafe ones cannot.
     */
   def expandRegexp(pattern: String, maxExpansions: Int = 128): Array[String] = {
     val pat = validateRegexp(pattern)
-    cappedByDf("regexp", pat, maxExpansions)(segments.map { seg =>
-      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-        .where(col("term").rlike(pat))
-        .select(DictMetaCols.map(col): _*)
-    })
+    cappedByDf("regexp", pat, maxExpansions)(
+      DictFilter(None, Some(col("term").rlike(pat)), rlikeKeep(pat)))
   }
 
   /** Validate the safe regexp subset and return the anchored java pattern.
@@ -1101,9 +1189,9 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     * Pinned semantics: idf is OUR Bm25.idf (Lucene MLT's classic
     * log(N/df)+1 variant — documented divergence), selection score rounded
     * to 6 dp before ranking with a (score desc, term asc) tie-break so the
-    * cross-engine twin picks the identical set. Dictionary work is one
-    * per-segment collect over the candidate terms — the same tiny-lookup
-    * economics as termMeta.
+    * cross-engine twin picks the identical set. Dictionary work is the
+    * candidate terms' [[termDfs]] lookup — no job while [[resident]] is
+    * held.
     */
   def selectMltTerms(likeText: String, maxQueryTerms: Int = 25,
       minTermFreq: Int = 1, minDocFreq: Int = 1): Array[String] = {
@@ -1112,13 +1200,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     val (tfMap, _) = CodeTokenizer.tfMap(likeText)
     val cand = tfMap.iterator.filter(_._2 >= minTermFreq).toMap
     if (cand.isEmpty) return Array.empty
-    val candTerms = cand.keys.toSeq.sorted
-    val dfAcc = scala.collection.mutable.Map.empty[String, Long]
-    for (seg <- segments)
-      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-        .where(col("term").isin(candTerms: _*))
-        .select("term", "df").collect()
-        .foreach(r => dfAcc.update(r.getString(0), dfAcc.getOrElse(r.getString(0), 0L) + r.getLong(1)))
+    val dfAcc = termDfs(cand.keys.toArray.sorted)
     val n = stats.numDocs
     cand.iterator
       .flatMap { case (t, tf) =>
@@ -1335,12 +1417,8 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     require(size > 0, "size must be positive")
     val q = singleTerm(queryTerm, "significant_terms foreground")
     import spark.implicits._
-    // foreground size = df(q): the same tiny dictionary lookup termMeta does
-    val fgN = segments.map { seg =>
-      InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-        .where(col("term") === q).select("df").collect()
-        .map(_.getLong(0)).sum
-    }.sum
+    // foreground size = df(q): the dictionary lookup termMeta does
+    val fgN = termDfs(Array(q)).getOrElse(q, 0L)
     if (fgN == 0L) // absent foreground term -> empty agg, typed like the hit path
       return spark.emptyDataset[(String, Long, Long, Double)]
         .toDF("term", "fg", "bg", "score")
@@ -1501,12 +1579,7 @@ final class IndexReader(spark: SparkSession, indexDir: String,
     // frequent than the input; `missing` suggests only when the input is
     // absent from the index entirely (df 0 makes `popular` degrade to
     // `always`, exactly ES).
-    val inputDf: Long =
-      if (mode == "always") 0L
-      else segments.map(seg =>
-          InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-            .where(col("term") === q).select("df")
-            .collect().headOption.map(_.getLong(0)).getOrElse(0L)).sum
+    val inputDf: Long = if (mode == "always") 0L else termDfs(Array(q)).getOrElse(q, 0L)
     if (mode == "missing" && inputDf > 0L) {
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       return spark.createDataFrame(
@@ -1674,33 +1747,39 @@ final class IndexReader(spark: SparkSession, indexDir: String,
   }
 
   /** The complete expansion of [lo, hi) when it holds at most `cap` terms,
-    * else None. BOUNDED: each segment's range scan stops at cap + 1 rows
-    * (never expandPrefix's full collect — a stopword-scale prefix at
-    * corpus scale must not land its whole expansion on the driver just to
-    * learn it exceeded the cap), and `coalesce(1)` keeps that limit to one
-    * job per segment instead of a partition scale-up over several. That
-    * one task reads the segment's dictionary files one after another, and
-    * a selective range never reaches the limit early: the gain is measured
+    * else None. While [[resident]] is held: a binary-searched range of the
+    * resident table, counted before any term is materialized. Otherwise
+    * BOUNDED: each segment's range scan stops at cap + 1 rows (never
+    * expandPrefix's full collect — a stopword-scale prefix at corpus scale
+    * must not land its whole expansion on the driver just to learn it
+    * exceeded the cap), and `coalesce(1)` keeps that limit to one job per
+    * segment instead of a partition scale-up over several. That one task
+    * reads the segment's dictionary files one after another, and a
+    * selective range never reaches the limit early: the gain is measured
     * only on 4-partition dictionaries (6,000 docs), not on a segment with
-    * hundreds of dictionary files. A
-    * complete expansion's dictionary rows seed the dictionary memo (the
-    * small-scan gate reads its df sum there), and the result is memoized
-    * like every capped expansion, so a repeated prefix skips the probe.
+    * hundreds of dictionary files. There a complete expansion's dictionary
+    * rows seed the dictionary memo (the small-scan gate reads its df sum
+    * there). Either way the result is memoized like every capped
+    * expansion, so a repeated prefix skips the probe.
     */
-  private def prefixProbe(lo: String, hi: String, cap: Int): Option[Array[String]] =
+  private[graft] def prefixProbe(lo: String, hi: String, cap: Int): Option[Array[String]] =
     memoExpansion("prefix_probe", lo, cap) {
-      val per = segments.map(seg =>
-        InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
-          .where(col("term") >= lo && col("term") < hi)
-          .select(DictMetaCols.map(col): _*)
-          .coalesce(1).limit(cap + 1).collect().map(dictMetaRow))
-      val merged = foldDictRows(per.flatten)
-      if (per.exists(_.length > cap) || merged.size > cap) None
-      else {
-        // every segment's whole range is in hand, so the fold is each
-        // term's complete merged row
-        memoizeDict(merged.iterator.map { case (t, v) => t -> Some(v) }.toSeq)
-        Some(merged.keys.toArray.sorted)
+      resident match {
+        case Some(d) => if (d.rangeSize(lo, hi) > cap) None else Some(d.inRange(lo, hi))
+        case None =>
+          val per = segments.map(seg =>
+            InvertedIndex.read(spark, seg, InvertedIndex.DictTable)
+              .where(col("term") >= lo && col("term") < hi)
+              .select(DictMetaCols.map(col): _*)
+              .coalesce(1).limit(cap + 1).collect().map(dictMetaRow))
+          val merged = foldDictRows(per.flatten)
+          if (per.exists(_.length > cap) || merged.size > cap) None
+          else {
+            // every segment's whole range is in hand, so the fold is each
+            // term's complete merged row
+            memoizeDict(merged.iterator.map { case (t, v) => t -> Some(v) }.toSeq)
+            Some(merged.keys.toArray.sorted)
+          }
       }
     }
 
@@ -2531,4 +2610,114 @@ object IndexReader {
     */
   private def blocksByTerm(blocks: Array[PostingBlock]): Map[String, Array[PostingBlock]] =
     blocks.groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.firstDocId) }
+
+  /** Dictionary data bytes (the segments' `dictionary` files, from a file
+    * listing — no Spark job) at or under which a reader holds its merged
+    * dictionary resident on the driver ([[IndexReader.resident]]).
+    *
+    * Measured on 4 cores (local[4], `Bench.session` settings, medians of
+    * 5-8 reps; a load is the union-collect job plus the driver sort, a
+    * lookup one term-pruned `termMeta` job of a reader without the table,
+    * heap by `SizeEstimator`). CorpusGen indexes (`IndexConfig.auto(n, 4)`)
+    * of 6k, 60k and 400k docs all hold CorpusGen's whole vocabulary,
+    * 20,064 terms: 190-206 KB on disk, 0.71 MB of heap (35.2 bytes per
+    * term), a load of 65-103 ms against a lookup of 61-73 ms; on the
+    * table a lookup took 0.03 ms, a fuzzy expansion 1.4-7 ms (scan form
+    * 71-142 ms) and a wildcard 3.5-6 ms (scan form 74-90 ms). Larger
+    * dictionaries, synthetic (the 6k index with its dictionary replaced by
+    * n terms of 13.6 bytes on average):
+    *  - 250k terms: 2.67 MB on disk, 10.4 MB heap, load 299 ms vs lookup
+    *    91 ms; fuzzy 16 vs 172 ms, wildcard 72 vs 295 ms (table vs scan);
+    *  - 600k terms: 6.02 MB, 24.9 MB heap, load 621 vs 100 ms; fuzzy 39 vs
+    *    235 ms, wildcard 157 vs 358 ms;
+    *  - 1M terms: 9.90 MB, 41.6 MB heap, load 621 vs 74 ms; fuzzy 66 vs
+    *    123 ms, but wildcard 344 vs 264 ms — one driver thread running the
+    *    regex over every term loses to the distributed scan here.
+    * So the table costs 41.6 bytes of heap per term (the term's bytes plus
+    * 28) and 3.4-4.2 heap bytes per dictionary byte on disk; a load costs
+    * 1-8 lookups, repaid by the first few queries. 6 MiB keeps the table
+    * at most ~25 MiB of heap (under the ~32 MiB budget) and ~630k terms,
+    * below the wildcard crossover. More cores favour the scan form.
+    */
+  private[query] val ResidentDictMaxBytes: Long = 6L << 20
+
+  /** A reader's merged dictionary on the driver: the terms in Spark's
+    * binary string order (`UTF8String.binaryCompare`, the order the scan
+    * form's range predicates and `orderBy("term")` compare in), packed as
+    * UTF-8 bytes with offsets, and parallel per-term (df, maxTfn, maxTf,
+    * minDl) arrays. Packed, not one object per term: the heap per term is
+    * the term's bytes plus 28.
+    */
+  private[graft] final class ResidentDict private (bytes: Array[Byte], offsets: Array[Int],
+      df: Array[Long], maxTfn: Array[Double], maxTf: Array[Int], minDl: Array[Int]) {
+    def size: Int = df.length
+
+    private def term(i: Int): UTF8String =
+      UTF8String.fromBytes(bytes, offsets(i), offsets(i + 1) - offsets(i))
+
+    /** The first index whose term is >= `t`. */
+    private def lowerBound(t: UTF8String): Int = {
+      var lo = 0
+      var hi = size
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (term(mid).binaryCompare(t) < 0) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    def get(t: String): Option[(Long, Double, Int, Int)] = {
+      val u = UTF8String.fromString(t)
+      val i = lowerBound(u)
+      if (i < size && term(i).binaryCompare(u) == 0)
+        Some((df(i), maxTfn(i), maxTf(i), minDl(i)))
+      else None
+    }
+
+    /** The terms in [lo, hi), in Java string order — the order the scan
+      * form's `.sorted` gives.
+      */
+    def inRange(lo: String, hi: String): Array[String] = {
+      val (from, until) = bounds(Some((lo, hi)))
+      Array.tabulate(until - from)(j => term(from + j).toString).sorted
+    }
+
+    /** How many terms lie in [lo, hi). */
+    def rangeSize(lo: String, hi: String): Int = {
+      val (from, until) = bounds(Some((lo, hi)))
+      until - from
+    }
+
+    private def bounds(range: Option[(String, String)]): (Int, Int) = range.fold((0, size)) {
+      case (lo, hi) => (lowerBound(UTF8String.fromString(lo)), lowerBound(UTF8String.fromString(hi)))
+    }
+
+    /** The terms in `range` (None: every term) that `keep` accepts, capped
+      * at `cap` by (df desc, term asc), in Java string order. The sort by
+      * df is stable, so equal dfs keep the binary term order.
+      */
+    def capped(range: Option[(String, String)], cap: Int)(keep: UTF8String => Boolean): Array[String] = {
+      val (from, until) = bounds(range)
+      val hits = (from until until).filter(i => keep(term(i)))
+      val top = if (hits.size <= cap) hits else hits.sortBy(i => -df(i)).take(cap)
+      top.map(i => term(i).toString).toArray.sorted
+    }
+  }
+
+  private[graft] object ResidentDict {
+    /** The table over merged rows: one row per term. */
+    def apply(rows: Array[(String, (Long, Double, Int, Int))]): ResidentDict = {
+      val us = rows.map { case (t, _) => UTF8String.fromString(t) }
+      val order = us.indices.toArray.sortWith((a, b) => us(a).binaryCompare(us(b)) < 0)
+      val offsets = new Array[Int](rows.length + 1)
+      order.indices.foreach(j => offsets(j + 1) = offsets(j) + us(order(j)).numBytes)
+      val bytes = new Array[Byte](offsets(rows.length))
+      order.indices.foreach { j =>
+        val b = us(order(j)).getBytes
+        System.arraycopy(b, 0, bytes, offsets(j), b.length)
+      }
+      new ResidentDict(bytes, offsets, order.map(rows(_)._2._1), order.map(rows(_)._2._2),
+        order.map(rows(_)._2._3), order.map(rows(_)._2._4))
+    }
+  }
 }

@@ -410,8 +410,9 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     r.matchSpanNotDf("def", "class", 1, 1).count()
     val spanJobs = countJobs(r.matchSpanNotDf("def", "class", 1, 1).count())
     assert(spanJobs == 1, s"memo-hit matchSpanNotDf(..).count() ran $spanJobs jobs")
+    // the probe runs on the driver over the dictionary the first query loaded
     val coldPrefix = countJobs(r.matchPrefixDf("de").count())
-    assert(coldPrefix == 2, s"cold matchPrefixDf(..).count() ran $coldPrefix jobs (probe + scan)")
+    assert(coldPrefix == 1, s"cold matchPrefixDf(..).count() ran $coldPrefix jobs")
     val prefixJobs = countJobs(r.matchPrefixDf("de").count())
     assert(prefixJobs == 1, s"probe-memoized matchPrefixDf(..).count() ran $prefixJobs jobs")
     r.fuzzyTopK("deff", 2, 10)
@@ -422,6 +423,124 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     assert(smallJobs == 1, s"memo-hit 4-query searchBmwBatch ran $smallJobs jobs")
     val longJobs = countJobs(r.searchBmwBatch(longBatch, 10))
     assert(longJobs >= 2, s"memo-hit 11-query searchBmwBatch ran $longJobs job: not the bucketed plan")
+  }
+
+  test("job guards: a fresh reader's first query runs load + 1; with the table loaded, cold-term match, bool and phrase run one job") {
+    val r = new IndexReader(spark, dir)
+    r.stats
+    val first = countJobs(r.searchBmw("z100_id return", 10))
+    assert(first == 2, s"a fresh reader's first searchBmw ran $first jobs (dictionary load + postings)")
+    assert(r.resident.isDefined)
+    // terms this reader has not looked up before
+    val bmwJobs = countJobs(r.searchBmw("buf_idx import", 10))
+    assert(bmwJobs == 1, s"cold-term searchBmw ran $bmwJobs jobs")
+    val boolJobs = countJobs(r.searchBool(Seq("class"), Seq("else"), Seq("z101_id"), 10))
+    assert(boolJobs == 1, s"cold-term searchBool ran $boolJobs jobs")
+    val phraseJobs = countJobs(r.matchPhraseDf("if val").count())
+    assert(phraseJobs == 1, s"cold-term matchPhraseDf(..).count() ran $phraseJobs jobs")
+  }
+
+  /** Every dictionary consumer, resident form against scan form, on readers
+    * over `d`: bit-equal term metas and equal dfs, expansions and probes.
+    */
+  def assertResidentEqualsScan(d: String): Unit = {
+    val res = new IndexReader(spark, d)
+    val scan = res.scanForm
+    assert(res.resident.isDefined, s"$d: the fixture's dictionary is under the resident bound")
+    assert(scan.resident.isEmpty, s"$d: the scan form holds a table")
+    val vocab = res.segments.map(seg => Tables.read(spark, seg, InvertedIndex.DictTable).select("term"))
+      .reduce(_ union _).distinct().collect().map(_.getString(0)).sorted
+    assert(res.resident.get.size == vocab.length)
+    val lookups = vocab ++ Array("qqqzzznotfound", "zz", "")
+    assert(metaBits(res.termMeta(lookups)) == metaBits(scan.termMeta(lookups)), s"$d: termMeta")
+    assert(res.termDfs(lookups) == scan.termDfs(lookups), s"$d: termDfs")
+    val (resMeta, resDfs) = res.termMetaWithDfs(lookups)
+    val (scanMeta, scanDfs) = scan.termMetaWithDfs(lookups)
+    assert(metaBits(resMeta) == metaBits(scanMeta) && resDfs == scanDfs, s"$d: termMetaWithDfs")
+
+    def same(what: String)(f: IndexReader => Array[String]): Unit = {
+      val (a, b) = (f(res).toSeq, f(scan).toSeq)
+      assert(a == b, s"$d: $what resident $a != scan $b")
+    }
+    // a cap at which the (df desc, term asc) cut falls inside a run of
+    // equal dfs — the term tie-break decides which terms survive
+    var ties = 0
+    def tieCap(terms: Array[String]): Option[Int] = {
+      val dfs = res.termDfs(terms).values.toArray.sorted(Ordering[Long].reverse)
+      val at = (1 until dfs.length).find(i => dfs(i - 1) == dfs(i))
+      ties += at.size
+      at
+    }
+    for (q <- Seq("deff", "vall", "buf_idz", "z100_ie", "clas"); e <- Seq(1, 2);
+         pl <- Seq(0, 2); tr <- Seq(false, true)) {
+      val caps = Seq(1, 50) ++ tieCap(res.expandFuzzy(q, e, 100000, pl, tr))
+      for (cap <- caps) same(s"expandFuzzy($q, $e, cap $cap, prefix $pl, transpositions $tr)")(
+        _.expandFuzzy(q, e, cap, pl, tr))
+    }
+    for (p <- Seq("d", "de", "z1", "buf", "qqq", "_")) {
+      same(s"expandPrefix($p)")(_.expandPrefix(p))
+      val all = res.expandPrefix(p)
+      val caps = Seq(1, 64) ++ tieCap(all)
+      for (cap <- caps) same(s"expandPrefixCapped($p, $cap)")(_.expandPrefixCapped(p, cap))
+      val hi = p.init + (p.last + 1).toChar
+      // under the cap (complete), exactly at it, and over it (None)
+      for (cap <- Seq(all.length + 1, all.length, all.length - 1).filter(_ > 0)) {
+        val (a, b) = (res.prefixProbe(p, hi, cap).map(_.toSeq), scan.prefixProbe(p, hi, cap).map(_.toSeq))
+        assert(a == b, s"$d: prefixProbe($p, cap $cap) resident $a != scan $b")
+        assert(a.isDefined == (all.length <= cap), s"$d: prefixProbe($p, cap $cap) = $a")
+      }
+    }
+    for (w <- Seq("*uf*", "d*", "*_id", "z1*d", "*a*")) {
+      val caps = Seq(1, 128) ++ tieCap(res.expandWildcard(w, 100000))
+      for (cap <- caps) same(s"expandWildcard($w, $cap)")(_.expandWildcard(w, cap))
+    }
+    for (rx <- Seq("de.*|val|class", "z[0-9]+_id", "b.f_.*", ".*", "[a-c]+")) {
+      val caps = Seq(1, 128) ++ tieCap(res.expandRegexp(rx, 100000))
+      for (cap <- caps) same(s"expandRegexp($rx, $cap)")(_.expandRegexp(rx, cap))
+    }
+    assert(ties >= 10, s"$d: only $ties expansions were capped inside a df tie")
+    // the point lookups behind more_like_this, significant_terms and the
+    // term suggester
+    same("selectMltTerms")(_.selectMltTerms("def val buf_idx buf_idx class z100_id qqqzzznotfound", 3))
+    assert(sortedRows(res.significantTermsDf("buf_idx", 5)) == sortedRows(scan.significantTermsDf("buf_idx", 5)),
+      s"$d: significantTermsDf")
+    for (mode <- Seq("always", "popular", "missing"); t <- Seq("deff", "def"))
+      assert(sortedRows(res.suggestTermsDf(t, 2, 5, mode)) == sortedRows(scan.suggestTermsDf(t, 2, 5, mode)),
+        s"$d: suggestTermsDf($t, $mode)")
+  }
+
+  test("resident dictionary == scan form for every lookup and expansion (one segment, base + delta)") {
+    assertResidentEqualsScan(dir)
+    assertResidentEqualsScan(ddir)
+  }
+
+  test("memory rules: the resident table is never serialized; a scan-form reader holds none and memoizes") {
+    def serializedBytes(o: AnyRef): Int = {
+      val bos = new java.io.ByteArrayOutputStream
+      val oos = new java.io.ObjectOutputStream(bos)
+      oos.writeObject(o); oos.close()
+      bos.size
+    }
+    val r = new IndexReader(spark, dir)
+    r.stats
+    val before = serializedBytes(r)
+    val table = r.resident
+    assert(table.exists(_.size > 100), s"loaded table holds ${table.map(_.size)} terms")
+    val after = serializedBytes(r)
+    assert(after == before, s"serialized reader grew from $before to $after bytes after the load")
+    val s = new IndexReader(spark, dir).scanForm
+    s.stats
+    assert(s.resident.isEmpty, "a scan-form reader holds a table")
+    // its dictionary memo and expansion memo serve repeats
+    s.termMeta(Array("def", "val"))
+    assert(countJobs(s.termMeta(Array("def", "val"))) == 0, "memo-hit termMeta ran a job")
+    val coldPrefix = countJobs(s.matchPrefixDf("de").count())
+    assert(coldPrefix == 2, s"scan-form cold matchPrefixDf(..).count() ran $coldPrefix jobs (probe + scan)")
+    val prefixJobs = countJobs(s.matchPrefixDf("de").count())
+    assert(prefixJobs == 1, s"scan-form probe-memoized matchPrefixDf(..).count() ran $prefixJobs jobs")
+    s.fuzzyTopK("deff", 2, 10)
+    val fuzzyJobs = countJobs(s.fuzzyTopK("deff", 2, 10))
+    assert(fuzzyJobs == 1, s"scan-form repeated fuzzyTopK ran $fuzzyJobs jobs")
   }
 
   test("membership counts: plain count == distinct-term count (base + delta)") {

@@ -28,26 +28,30 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** On a fresh reader over the index at `dir`, `termMeta` of a fuzzy and of
-    * a wildcard expansion submits no job (the expansion seeded the
-    * dictionary memo) and equals, bit for bit, a fresh reader's `termMeta`.
-    * The index's vocabulary must be CorpusGen's.
-    */
-  def assertExpansionsSeedMemo(dir: String): Unit = {
-    def bits(m: Map[String, BlockMaxWand.TermMeta]) =
-      m.map { case (t, x) =>
-        t -> (java.lang.Double.doubleToRawLongBits(x.idf), java.lang.Double.doubleToRawLongBits(x.maxImpact))
-      }
-    val r = new IndexReader(spark, dir)
-    r.stats
-    for (terms <- Seq(r.expandFuzzy("deff", 2), r.expandWildcard("*uf*"))) {
-      assert(terms.nonEmpty)
-      val jobs = countJobs(r.termMeta(terms))
-      assert(jobs == 0, s"termMeta after the expansion ran $jobs jobs")
-      assert(bits(r.termMeta(terms)) == bits(new IndexReader(spark, dir).termMeta(terms)),
-        "memo seeded by the expansion differs from a fresh dictionary lookup")
+  /** Per-term (idf, maxImpact) as raw bits: equal iff bit for bit equal. */
+  def metaBits(m: Map[String, BlockMaxWand.TermMeta]): Map[String, (Long, Long)] =
+    m.map { case (t, x) =>
+      t -> (java.lang.Double.doubleToRawLongBits(x.idf), java.lang.Double.doubleToRawLongBits(x.maxImpact))
     }
-  }
+
+  /** On a fresh reader over the index at `dir`, in both dictionary forms
+    * (the resident table, and the scan form with its dictionary memo),
+    * `termMeta` of a fuzzy and of a wildcard expansion submits no job (the
+    * resident table serves it, or the expansion seeded the memo) and
+    * equals, bit for bit, a fresh scan-form reader's `termMeta`. The
+    * index's vocabulary must be CorpusGen's.
+    */
+  def assertExpansionsSeedMemo(dir: String): Unit =
+    for (r <- Seq(new IndexReader(spark, dir), new IndexReader(spark, dir).scanForm)) {
+      r.stats
+      for (terms <- Seq(r.expandFuzzy("deff", 2), r.expandWildcard("*uf*"))) {
+        assert(terms.nonEmpty)
+        val jobs = countJobs(r.termMeta(terms))
+        assert(jobs == 0, s"termMeta after the expansion ran $jobs jobs (resident: ${r.resident.isDefined})")
+        assert(metaBits(r.termMeta(terms)) == metaBits(new IndexReader(spark, dir).scanForm.termMeta(terms)),
+          s"termMeta after the expansion differs from a fresh dictionary scan (resident: ${r.resident.isDefined})")
+      }
+    }
 }
 
 object SparkSpec {

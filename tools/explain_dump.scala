@@ -79,7 +79,7 @@ section("B16 bool filter context: ids-only filter conjunction LEFT SEMI-joined t
 // 11. B17 prefix: term-RANGE predicate pushed into the postings scan,
 // PLUS (round 5) tbucket catalog pruning when the expansion is capped
 section("B17 prefix query: range predicate + expansion-capped tbucket pruning",
-  "PushedFilters must carry GreaterThanOrEqual/LessThan on term — the range itself, never an In(...) of expanded terms (thousands at corpus scale) — and, because the dictionary expansion fits the cap, PartitionFilters must ALSO carry tbucket IN (...) derived from the expanded terms' buckets: a selective prefix reads a handful of bucket directories instead of paying O(buckets) footer reads. Above the cap the pure range scan stands (row-group stats only). One ids-only decode flatMap + one groupBy(docId) exchange.",
+  "PushedFilters must carry GreaterThanOrEqual/LessThan on term — the range itself, never an In(...) of expanded terms (thousands at corpus scale) — and, because the dictionary expansion fits the cap, PartitionFilters must ALSO carry tbucket IN (...) derived from the expanded terms' buckets: a selective prefix reads a handful of bucket directories instead of paying O(buckets) footer reads. Above the cap the pure range scan stands (row-group stats only). One ids-only decode flatMap + one groupBy(docId) exchange. The cap probe (prefixProbe) is a distributed dictionary range scan only above the resident bound (IndexReader.ResidentDictMaxBytes, 6 MiB of dictionary files): under it the probe is a binary-searched range of the reader's resident dictionary on the driver and submits no job, and only the postings scan below runs.",
   graft.driver.DocumentsIndex.reader(spark, sf).matchPrefixDf("s"))
 // 12. B14 multi_match TOP-K serving (round 5): ONE cross-field WAND job
 {
@@ -94,7 +94,7 @@ section("B17 prefix query: range predicate + expansion-capped tbucket pruning",
   val r = graft.driver.DocumentsIndex.reader(spark, sf)
   val idxDir = graft.driver.DocumentsIndex.indexDir(spark, sf)
   section("B18 fuzzy: length-banded Levenshtein dictionary expansion (executor-side verify)",
-    "The expansion scan: PushedFilters carries the length band (edit distance >= length difference, so the band is a correct prefilter); the levenshtein(term, q) <= e verify is Spark's codegen'd BUILT-IN evaluated on the executors — only matching terms reach the driver. The dictionary is postings-scale smaller than the corpus, same economics as prefix expansion.",
+    "The expansion scan: PushedFilters carries the length band (edit distance >= length difference, so the band is a correct prefilter); the levenshtein(term, q) <= e verify is Spark's codegen'd BUILT-IN evaluated on the executors — only matching terms reach the driver. The dictionary is postings-scale smaller than the corpus, same economics as prefix expansion. This distributed scan is the plan used above the resident bound (IndexReader.ResidentDictMaxBytes, 6 MiB of dictionary files); under it expandFuzzy applies the same band and the same distance kernel (UTF8String.levenshteinDistance, DamerauLevenshtein.distance) on the driver over the reader's resident dictionary and submits no job.",
     graft.io.Tables.read(spark, idxDir, graft.index.InvertedIndex.DictTable)
       .where(length(col("term")).between(1, 5) && levenshtein(col("term"), lit("bag")) <= 2)
       .select(col("term"), col("df")))
@@ -108,7 +108,7 @@ section("B19 terms aggregation: dictionary scan -> TakeOrderedAndProject (no pos
   graft.driver.DocumentsIndex.tagsReader(spark, sf).termsAggDf(10))
 // 15. B20 wildcard (round 5): capped expansion feeding the membership scan
 section("B20 wildcard: expansion-capped membership scan (tbucket IN + In(term))",
-  "Non-anchored pattern *or* expands through the dictionary (rlike, distributed), then the membership scan carries BOTH tbucket IN (...) catalog pruning and In(term, ...) row-group pruning — ids-only ReadSchema (no tf/dl/pos bytes).",
+  "Non-anchored pattern *or* expands through the dictionary (rlike: distributed above the resident bound, IndexReader.ResidentDictMaxBytes; under it the same java.util.regex find runs on the driver over the reader's resident dictionary and submits no job), then the membership scan carries BOTH tbucket IN (...) catalog pruning and In(term, ...) row-group pruning — ids-only ReadSchema (no tf/dl/pos bytes).",
   graft.driver.DocumentsIndex.reader(spark, sf).matchWildcardDf("*or*"))
 // 17. B15 match_phrase_prefix (round 5): expansion-widened positional scan
 section("B15 match_phrase_prefix: fixed terms + capped prefix expansion in ONE positional scan",
@@ -136,7 +136,7 @@ section("B19 histogram agg: registry dl scan -> map-side-combined groupBy (no po
   graft.driver.DocumentsIndex.reader(spark, sf).histogramAggDf(8))
 // 22. B20 regexp (round 6): validated-safe expansion + shared membership tail
 section("B20 regexp: anchored safe-subset expansion feeding the tbucket-pruned membership scan",
-  "Same plan family as wildcard: the dictionary rlike expansion is distributed and df-capped as a plan; the membership scan then carries tbucket IN (...) + In(term, ...) with ids-only ReadSchema.",
+  "Same plan family as wildcard: above the resident bound (IndexReader.ResidentDictMaxBytes) the dictionary rlike expansion is distributed and df-capped as a plan, and under it the same filter and (df desc, term asc) cap run on the driver over the reader's resident dictionary with no job; the membership scan then carries tbucket IN (...) + In(term, ...) with ids-only ReadSchema.",
   graft.driver.DocumentsIndex.reader(spark, sf).matchRegexpDf("(s|qu)[a-z]*r[a-z]*"))
 // 23. B22 highlight v2 (round 6): broadcast top-k + typed char-offset fragment
 section("B22 highlight v2 (multi-term): broadcast top-k join + typed char-offset fragment map",
@@ -429,7 +429,7 @@ section("B21 geohash_grid: codegen'd integer interleave projection + map-side-co
   graft.SparkEntry.queries("a69_geohash_grid")(spark, sf))
 // 83. fuzzy transpositions (ring 12): the NATIVE expression stays in codegen
 section("B18 fuzzy transpositions: native damerau_levenshtein expression inside the dictionary scan's WholeStageCodegen",
-  "The transpositions=true verify must not break the codegen span the classic-levenshtein path has: this is the expansion frame exactly as expandFuzzy executes it (fuzzyExpansionScans) — the dictionary scan with Filter((length(term) band) AND damerau_levenshtein(term, ordre) <= 1) inside ONE WholeStageCodegen span, the native expression generating a static call like the levenshtein built-in it extends; expandFuzzy then caps it by df (TakeOrderedAndProject) like every dictionary expansion.",
+  "The transpositions=true verify must not break the codegen span the classic-levenshtein path has: this is the expansion frame exactly as expandFuzzy executes it above the resident bound (fuzzyExpansionScans; under the bound the same kernel runs on the driver over the resident dictionary) — the dictionary scan with Filter((length(term) band) AND damerau_levenshtein(term, ordre) <= 1) inside ONE WholeStageCodegen span, the native expression generating a static call like the levenshtein built-in it extends; expandFuzzy then caps it by df (TakeOrderedAndProject) like every dictionary expansion.",
   graft.driver.DocumentsIndex.reader(spark, sf)
     .fuzzyExpansionScans("ordre", 1, transpositions = true).head)
 // 84. combined_fields (ring 12): per-field pruned scans, broadcast union-df, one final agg
