@@ -196,7 +196,6 @@ object Scaling {
     val buildCpuSec = (tt1._2 - tt0._2) / 1e9
     val stages = report.results.map(r => f"${r.stage}:${r.wallSec}%.1f").mkString("|")
 
-    val reader = new IndexReader(spark, dir)
     val copies = math.max(2, (100000000L / math.max(1L, n)).toInt)
     // Query shards scale with the level's cores (8 x cpus) the way a real
     // cluster's shard count scales with its size — a fixed count makes the
@@ -205,19 +204,20 @@ object Scaling {
     // 64: beyond that the per-bucket x per-query setup dominates at this
     // corpus size (256 buckets measured 2x slower at local[32] in round 2).
     // BMW is exact at any bucket count, so the cross-level fp identity
-    // check keeps holding. GRAFT_SCALE_BUCKETS overrides for experiments.
-    val buckets = sys.env.get("GRAFT_SCALE_BUCKETS").map(_.toInt)
-      .getOrElse(math.min(64, 8 * cpus))
+    // check keeps holding.
+    val buckets = math.min(64, 8 * cpus)
     val generated = (0 until (copies - 1) * QuerySet.all.size).map { i =>
       CorpusGen.Keywords(i % CorpusGen.Keywords.length) + " " +
         CorpusGen.MidIds((i * 131) % CorpusGen.MidIds.length)
     }
     val workload = QuerySet.all ++ generated
-    // driverMergeMaxRows = 0: the scaling protocol always exercises the
-    // DISTRIBUTED shard merge — the path a real large-batch deployment is
-    // on; the driver fast path exists for small interactive batches and
-    // would re-introduce a serial term that penalizes exactly the big level
-    reader.searchBmwBatch(QuerySet.all, QuerySet.K, buckets, driverMergeMaxRows = 0L) // warm
+    // groupedForm: the scaling protocol always exercises the docId buckets
+    // and the DISTRIBUTED shard merge — the path a real large-batch
+    // deployment is on; the driver fast path exists for small interactive
+    // batches and would re-introduce a serial term that penalizes exactly
+    // the big level. Built before the warm-up, which loads its dictionary.
+    val reader = new IndexReader(spark, dir).groupedForm(buckets)
+    reader.searchBmwBatch(QuerySet.all, QuerySet.K) // warm
     val rounds = 2
     var fp = 0L
     // fresh task-time baseline AFTER the warm-up + reader init, so the
@@ -229,7 +229,7 @@ object Scaling {
     val gc1 = gcMs()
     val tq = System.nanoTime()
     for (_ <- 1 to rounds) {
-      val res = reader.searchBmwBatch(workload, QuerySet.K, buckets, driverMergeMaxRows = 0L)
+      val res = reader.searchBmwBatch(workload, QuerySet.K)
       QuerySet.all.foreach(q => res(q).foreach(h => fp = fp * 31 + h.docId))
     }
     val qSec = (System.nanoTime() - tq) / 1e9

@@ -261,7 +261,7 @@ object DedupOps {
     * one pass — when the whole graph fits one partition, iterating
     * distributed rounds over it is pure scheduling overhead. Same gated
     * collect-with-distributed-fallback idiom as IndexReader's
-    * driverMergeMaxRows; above the gate the co-partitioned RDD iteration
+    * DriverMergeMaxRows; above the gate the co-partitioned RDD iteration
     * runs unchanged (the 100 TB path).
     */
   private val CcDriverMaxEndpoints = 2000000L

@@ -45,12 +45,12 @@ import org.apache.spark.util.LongAccumulator
   */
 final class IndexReader private (spark: SparkSession, indexDir: String,
     p: Bm25Params, pinnedSegments: Option[Seq[String]],
-    residentMaxBytes: Long) extends Serializable {
+    residentMaxBytes: Long, groupedBuckets: Int) extends Serializable {
   import spark.implicits._
 
   def this(spark: SparkSession, indexDir: String, p: Bm25Params = Bm25.Default,
       pinnedSegments: Option[Seq[String]] = None) =
-    this(spark, indexDir, p, pinnedSegments, IndexReader.ResidentDictMaxBytes)
+    this(spark, indexDir, p, pinnedSegments, IndexReader.ResidentDictMaxBytes, groupedBuckets = 0)
 
   /** A reader over exactly these segments that never holds the resident
     * dictionary: every lookup and expansion takes the scan form whatever
@@ -58,7 +58,19 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * serve, for tests that compare the two.
     */
   private[graft] def scanForm: IndexReader =
-    new IndexReader(spark, indexDir, p, Some(segments), residentMaxBytes = -1L)
+    new IndexReader(spark, indexDir, p, Some(segments), residentMaxBytes = -1L, groupedBuckets)
+
+  /** A reader over exactly these segments that takes the plan an index
+    * takes above every small-scan gate, for tests that compare the plans
+    * and for `Scaling`: [[singleBucket]] answers false (so top-k, the
+    * positional and batch frames and the membership counts all bucket by
+    * docId), queries bucket into `buckets` docId ranges, and
+    * [[searchBmwBatch]] merges through its distributed exchange.
+    */
+  private[graft] def groupedForm(buckets: Int): IndexReader = {
+    require(buckets >= 1, s"groupedForm needs buckets >= 1, got $buckets")
+    new IndexReader(spark, indexDir, p, Some(segments), residentMaxBytes, buckets)
+  }
 
   /** Base + committed delta segments, each a full index directory. When
     * `pinnedSegments` is given (ES point-in-time: the segment manifest
@@ -333,15 +345,14 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
 
   /** The bucketize skeleton every positional and batch query path shares
     * (batch BMW, the phrase / phrase-prefix / phrase-suggest and span
-    * frames, and top-k BMW and bool above the [[singleBucket]] gate or when
-    * `nBuckets > 0` asks for buckets), in one of two plans with identical
-    * rows:
-    *  - under the gate (the merged df summed over `work`, by default the
-    *    scanned terms, is at most `SingleBucketMaxPostings`), ONE narrow
-    *    partition: the postings scan coalesces to one task and `score` runs
-    *    once over the single bucket [0, Long.MaxValue) — no exchange, so a
-    *    `.count()` or `.collect()` of the frame is one job, and the frame
-    *    stays lazy;
+    * frames, and top-k BMW and bool above the [[singleBucket]] gate), in
+    * one of two plans with identical rows:
+    *  - under the gate (at most `SingleBucketMaxQueries` queries, and the
+    *    merged df summed over `work`, by default the scanned terms, at most
+    *    `SingleBucketMaxPostings`), ONE narrow partition: the postings scan
+    *    coalesces to one task and `score` runs once over the single bucket
+    *    [0, Long.MaxValue) — no exchange, so a `.count()` or `.collect()` of
+    *    the frame is one job, and the frame stays lazy;
     *  - otherwise query-term blocks re-bucket by docId range — a block
     *    spanning bucket boundaries is replicated and masked by the [lo, hi)
     *    the scorer receives — through one groupBy exchange, and each bucket
@@ -354,16 +365,17 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * bucket sorts the same way).
     */
   private def bucketedBlocks[T: org.apache.spark.sql.Encoder](terms: Seq[String],
-      nBuckets: Int = 0, withPositions: Boolean = false, work: Option[Seq[String]] = None)(
+      withPositions: Boolean = false, work: Option[Seq[String]] = None, queries: Int = 1)(
       score: (Long, Long, Map[String, Array[PostingBlock]]) => Iterator[T]): Dataset[T] = {
-    if (singleBucket(work.getOrElse(terms), nBuckets, SingleBucketMaxPostings))
+    if (queries <= SingleBucketMaxQueries &&
+        singleBucket(work.getOrElse(terms), SingleBucketMaxPostings))
       return postingsFor(terms, withPositions).coalesce(1).mapPartitions { it =>
         // no blocks, no bucket — as in the grouped plan, where an empty
         // bucket never forms a group
         if (it.hasNext) score(0L, Long.MaxValue, IndexReader.blocksByTerm(it.toArray))
         else Iterator.empty
       }
-    val buckets = if (nBuckets > 0) nBuckets else spark.sessionState.conf.numShufflePartitions
+    val buckets = docIdBuckets
     val w = math.max(1L, (stats.numDocs + buckets - 1) / buckets)
     postingsFor(terms, withPositions)
       .flatMap(b => ((b.firstDocId / w) to (b.lastDocId / w)).iterator.map(g => (g, b)))
@@ -393,17 +405,17 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * postings, served by [[topKHits]]: when the terms' merged df sum is at
     * most `DriverScoreMaxPostings` the blocks are collected in one job and
     * scored on the driver as one bucket under one global threshold;
-    * otherwise (or when `nBuckets > 0` asks for the bucketed plan) the
-    * blocks are re-bucketed by docId range (a block spanning multiple
-    * buckets is replicated and masked — only query-term data moves, never
-    * the corpus), each bucket runs exact BMW with a local threshold (= one
-    * ES shard) and Catalyst's TakeOrderedAndProject merges the buckets.
+    * otherwise the blocks are re-bucketed by docId range (a block spanning
+    * multiple buckets is replicated and masked — only query-term data
+    * moves, never the corpus), each bucket runs exact BMW with a local
+    * threshold (= one ES shard) and Catalyst's TakeOrderedAndProject
+    * merges the buckets.
     * Both forms return the same exact top-k under (score desc, docId asc).
     * `k` must be >= 1; [[scoreAllDf]] ranks every match.
     */
-  def searchBmw(query: String, k: Int, nBuckets: Int = 0): Array[SearchHit] = {
+  def searchBmw(query: String, k: Int): Array[SearchHit] = {
     requireTopK(k, "scoreAllDf")
-    bmwTopK(termMeta(analyze(query)), k, nBuckets)
+    bmwTopK(termMeta(analyze(query)), k)
   }
 
   /** A top-k entry point's `k` check, made before any job runs: k <= 0 is
@@ -416,8 +428,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * fuzzyTopK, wildcardTopK, mltTopK, searchBool's match route); the BMW
     * skip counters receive each scored bucket's stats on either plan.
     */
-  private def bmwTopK(meta: Map[String, BlockMaxWand.TermMeta], k: Int,
-      nBuckets: Int = 0): Array[SearchHit] = {
+  private def bmwTopK(meta: Map[String, BlockMaxWand.TermMeta], k: Int): Array[SearchHit] = {
     if (meta.isEmpty) return Array.empty
     val metaB = spark.sparkContext.broadcast(meta)
     val avgDl = stats.avgDl
@@ -425,7 +436,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     val kk = k
     val (decAcc, skipAcc, scoredAcc) = (decodedBlocksAcc, skippedBlocksAcc, scoredDocsAcc)
 
-    topKHits(meta.keys.toSeq.sorted, k, nBuckets) { (lo, hi, byTerm) =>
+    topKHits(meta.keys.toSeq.sorted, k) { (lo, hi, byTerm) =>
       val st = BlockMaxWand.BucketStats()
       val hits = BlockMaxWand.scoreBucket(byTerm, metaB.value, lo, hi, kk, avgDl, pp, st,
         presorted = true)
@@ -476,20 +487,31 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     */
   private val SingleBucketMaxQueries = 8
 
+  /** Per-bucket top rows (buckets x queries x k) at or under which a
+    * [[searchBmwBatch]] merges on the driver instead of through an exchange.
+    */
+  private val DriverMergeMaxRows = 1L << 20
+
   /** The small-scan gate of every query plan that buckets by docId
     * ([[topKHits]], [[bucketedBlocks]], [[membershipCounts]]): true when
-    * `nBuckets` is unset and the merged dfs summed over `work` (a term
-    * listed twice counts twice) are at most `maxPostings`. The dfs come
+    * the merged dfs summed over `work` (a term listed twice counts twice)
+    * are at most `maxPostings`, and never on a [[groupedForm]]. The dfs come
     * through the dictionary memo, so the choice depends only on the query:
     * a call site that has looked its terms up (termMeta, the capped
     * expansions, matchPrefixDf's probe) runs no job here, and one that has
     * not pays the one dictionary lookup it would otherwise have skipped.
     */
-  private def singleBucket(work: Seq[String], nBuckets: Int, maxPostings: Long): Boolean =
-    nBuckets <= 0 && {
+  private def singleBucket(work: Seq[String], maxPostings: Long): Boolean =
+    groupedBuckets == 0 && {
       val dfs = mergedDictRows(work.distinct.toArray)
       work.iterator.map(t => dfs.get(t).fold(0L)(_._1)).sum <= maxPostings
     }
+
+  /** The docId buckets of the grouped plans: a [[groupedForm]]'s count,
+    * else one per shuffle partition.
+    */
+  private def docIdBuckets: Int =
+    if (groupedBuckets > 0) groupedBuckets else spark.sessionState.conf.numShufflePartitions
 
   /** Exact top-k of a bucket scorer over `terms`' postings, in one of two
     * plans with identical results (each doc's score is folded over
@@ -502,18 +524,18 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     *    scan, a docId exchange and a TakeOrderedAndProject — two jobs under
     *    AQE — to score the same few hundred postings, and its one-task plan
     *    measured slower than this driver collect;
-    *  - above the gate, or when `nBuckets > 0` asks for it, the bucketed
-    *    plan and a TakeOrderedAndProject merge.
+    *  - above the gate, the bucketed plan and a TakeOrderedAndProject
+    *    merge.
     * `score` receives (lo, hi, term -> blocks sorted by firstDocId).
     */
-  private def topKHits(terms: Seq[String], k: Int, nBuckets: Int)(
+  private def topKHits(terms: Seq[String], k: Int)(
       score: (Long, Long, Map[String, Array[PostingBlock]]) => Iterator[SearchHit])
       : Array[SearchHit] =
-    if (singleBucket(terms, nBuckets, DriverScoreMaxPostings))
+    if (singleBucket(terms, DriverScoreMaxPostings))
       score(0L, Long.MaxValue, IndexReader.blocksByTerm(postingsFor(terms).collect()))
         .toArray.sortBy(h => (-h.score, h.docId)).take(k)
     else
-      bucketedBlocks[SearchHit](terms, nBuckets)(score)
+      bucketedBlocks[SearchHit](terms)(score)
         .orderBy(desc("score"), asc("docId")).limit(k)
         .collect()
 
@@ -529,15 +551,15 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * — the shape a 100 TB deployment serves query batches with.
     *
     * The merge has two gated paths producing identical results (pinned by a
-    * test): when buckets x queries x k <= `driverMergeMaxRows` the per-bucket
+    * test): when buckets x queries x k <= `DriverMergeMaxRows` the per-bucket
     * tops collect straight to the driver and merge there (one job — the
-    * extra exchange measurably dominates small batches); above the threshold
-    * the merge stays DISTRIBUTED — one more exchange on query id reducing to
-    * exactly queries x k driver rows, because 10^6 queries x 10^3 buckets of
-    * partial tops neither fit on the driver nor deserve a serial merge.
+    * extra exchange measurably dominates small batches); above the threshold,
+    * and always on a [[groupedForm]], the merge stays DISTRIBUTED — one more
+    * exchange on query id reducing to exactly queries x k driver rows,
+    * because 10^6 queries x 10^3 buckets of partial tops neither fit on the
+    * driver nor deserve a serial merge.
     */
-  def searchBmwBatch(queriesIn: Seq[String], k: Int, nBuckets: Int = 0,
-      driverMergeMaxRows: Long = 1L << 20): Map[String, Array[SearchHit]] = {
+  def searchBmwBatch(queriesIn: Seq[String], k: Int): Map[String, Array[SearchHit]] = {
     requireTopK(k, "scoreAllDf per query")
     val analyzed = queriesIn.map(q => q -> analyze(q))
     val allTerms = analyzed.flatMap(_._2).distinct.sorted.toArray
@@ -547,7 +569,6 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
       .filter(_._2.nonEmpty).toArray
     if (perQuery.isEmpty) return queriesIn.map(_ -> Array.empty[SearchHit]).toMap
 
-    val buckets = if (nBuckets > 0) nBuckets else spark.sessionState.conf.numShufflePartitions
     val metaB = spark.sparkContext.broadcast(meta)
     val perQueryB = spark.sparkContext.broadcast(perQuery)
     val avgDl = stats.avgDl
@@ -559,10 +580,8 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     // one task scans and scores every query in turn: its work grows with
     // the per-query dfs (a shared term counts once per query), and past
     // `SingleBucketMaxQueries` queries the buckets win whatever the dfs
-    val planBuckets =
-      if (nBuckets <= 0 && perQuery.length > SingleBucketMaxQueries) buckets else nBuckets
-    val perBucketTops = bucketedBlocks[(Int, Long, Double)](presentTerms.toSeq, planBuckets,
-        work = Some(perQuery.flatMap(_._2).toSeq)) {
+    val perBucketTops = bucketedBlocks[(Int, Long, Double)](presentTerms.toSeq,
+        work = Some(perQuery.flatMap(_._2).toSeq), queries = perQuery.length) {
       (lo, hi, byTerm) => // blocks pre-sorted once per bucket, shared by all queries
         val st = BlockMaxWand.BucketStats()
         val cache = new BlockCache() // queries share block decodes
@@ -580,7 +599,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     // TopKHeap (same comparator, same tie-break), so they are result-
     // identical by construction — and a test pins it.
     val merged: Array[(Int, Long, Double)] =
-      if (buckets.toLong * perQuery.length * kk <= driverMergeMaxRows) {
+      if (groupedBuckets == 0 && docIdBuckets.toLong * perQuery.length * kk <= DriverMergeMaxRows) {
         // small batch: skip the extra exchange, heap-merge on the driver
         val heaps = scala.collection.mutable.Map.empty[Int, TopKHeap]
         perBucketTops.collect().foreach { case (qi, d, s) =>
@@ -699,16 +718,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
       mustNot: Seq[String] = Nil, k: Int = 10, minShould: Int = 0,
       boosts: Map[String, Double] = Map.empty,
       filter: Seq[String] = Nil,
-      dlRange: Option[(Long, Long)] = None): Array[SearchHit] =
-    boolTopK(must, should, mustNot, k, minShould, boosts, filter, dlRange, nBuckets = 0)
-
-  /** [[searchBool]]'s body; `nBuckets > 0` forces the bucketed plan with
-    * that many docId buckets (on the match route too).
-    */
-  private[graft] def boolTopK(must: Seq[String], should: Seq[String],
-      mustNot: Seq[String], k: Int, minShould: Int, boosts: Map[String, Double],
-      filter: Seq[String], dlRange: Option[(Long, Long)],
-      nBuckets: Int): Array[SearchHit] = {
+      dlRange: Option[(Long, Long)] = None): Array[SearchHit] = {
     requireTopK(k, "searchBoolDf")
     requireRangeHasTerms(dlRange, must, should, filter)
     val clauses = boolClauses(must, should, mustNot, filter).getOrElse(return Array.empty)
@@ -740,7 +750,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     // it a dl-range check, so an active range disables it the same way.
     if (mustT.isEmpty && notT.isEmpty && filterT.isEmpty && effShould <= 1 &&
         dlRange.isEmpty)
-      return bmwTopK(meta, k, nBuckets)
+      return bmwTopK(meta, k)
     val scoring = (mustT ++ shouldT).distinct.sorted.map(t => (t, meta(t).idf))
     val scanTerms = ((mustT ++ shouldT).toSeq ++ notT.toSeq ++ filterT.toSeq).distinct.sorted
     val (scoringB, mustB, notB, filterB) =
@@ -751,7 +761,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     val kk = k
     val ms = effShould
     val (dlLo, dlHi) = dlRange.getOrElse((0L, Long.MaxValue))
-    topKHits(scanTerms, k, nBuckets) { (lo, hi, byTerm) =>
+    topKHits(scanTerms, k) { (lo, hi, byTerm) =>
       BoolMatcher.scoreBucket(byTerm, scoringB.value, mustB.value, notB.value,
         lo, hi, kk, avgDl, pp, ms, filterB.value, dlLo, dlHi).iterator
     }
@@ -1536,12 +1546,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * documents. At 100 TB the suggester costs one phrase-shaped scan.
     */
   def suggestPhraseDf(input: String, maxEdits: Int = 1, maxExpansions: Int = 32,
-      size: Int = 5): DataFrame =
-    suggestPhraseDf(input, maxEdits, maxExpansions, size, nBuckets = 0)
-
-  /** [[suggestPhraseDf]]'s body; `nBuckets > 0` forces the bucketed plan. */
-  private[graft] def suggestPhraseDf(input: String, maxEdits: Int, maxExpansions: Int,
-      size: Int, nBuckets: Int): DataFrame = {
+      size: Int = 5): DataFrame = {
     requirePositions("phrase suggest")
     require(maxEdits >= 1 && size > 0, "maxEdits >= 1 and size > 0")
     val toks = graft.tokenize.CodeTokenizer.tokenize(input, analyzer)
@@ -1558,7 +1563,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     val pairs = for { a <- c0; b <- c1 } yield (a, b)
     val pairsB = spark.sparkContext.broadcast(pairs)
     val allTerms = (c0 ++ c1).distinct.sorted.toSeq
-    bucketedBlocks[((String, String), Long)](allTerms, nBuckets, withPositions = true) {
+    bucketedBlocks[((String, String), Long)](allTerms, withPositions = true) {
       (lo, hi, byTerm) =>
         PhraseMatcher.bigramDfBucket(byTerm, pairsB.value, lo, hi)
     }
@@ -1718,11 +1723,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * exchange; otherwise one groupBy(docId) exchange, distributed
     * end-to-end.
     */
-  def matchPrefixDf(prefix: String, pruneCap: Int = 64): DataFrame =
-    matchPrefixDf(prefix, pruneCap, nBuckets = 0)
-
-  /** [[matchPrefixDf]]'s body; `nBuckets > 0` forces the exchange plan. */
-  private[graft] def matchPrefixDf(prefix: String, pruneCap: Int, nBuckets: Int): DataFrame = {
+  def matchPrefixDf(prefix: String, pruneCap: Int = 64): DataFrame = {
     val (lo, hi) = prefixBounds(prefix)
     // ES maxExpansions analog as a PRUNING lever: when the dictionary says
     // the range expands to <= pruneCap terms, those terms' tbuckets become a
@@ -1743,7 +1744,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
         .where(pred)
         .select(col("term"), col("firstDocId"), col("count"), col("docDeltas"))
     }
-    membershipCounts(scans.reduce(_ unionByName _), expanded.map(_.toSeq), nBuckets)
+    membershipCounts(scans.reduce(_ unionByName _), expanded.map(_.toSeq))
   }
 
   /** The complete expansion of [lo, hi) when it holds at most `cap` terms,
@@ -1914,18 +1915,17 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
   /** Shared membership tail of the prefix/wildcard/regexp/terms family:
     * (docId, n_terms = the distinct scanned terms in the doc). Under the
     * [[singleBucket]] gate at `SingleBucketMaxPostings` over `terms` (the
-    * scan's exact term list, when known) the scan coalesces to ONE narrow partition that decodes the ids
-    * and counts them per doc — no exchange, so a `.count()` of the frame is
-    * one job; otherwise (or when `nBuckets > 0`) an ids-only decode flatMap
-    * and one groupBy(docId) exchange. Postings hold one row per (term, doc)
-    * and segment docId ranges are disjoint, so a plain count per doc IS the
-    * distinct-term count in both plans.
+    * scan's exact term list, when known) the scan coalesces to ONE narrow
+    * partition that decodes the ids and counts them per doc — no exchange,
+    * so a `.count()` of the frame is one job; otherwise an ids-only decode
+    * flatMap and one groupBy(docId) exchange. Postings hold one row per
+    * (term, doc) and segment docId ranges are disjoint, so a plain count per
+    * doc IS the distinct-term count in both plans.
     */
-  private def membershipCounts(scan: DataFrame, terms: Option[Seq[String]],
-      nBuckets: Int = 0): DataFrame = {
+  private def membershipCounts(scan: DataFrame, terms: Option[Seq[String]]): DataFrame = {
     import spark.implicits._
     val blocks = scan.as[(String, Long, Int, Array[Byte])]
-    if (terms.exists(singleBucket(_, nBuckets, SingleBucketMaxPostings)))
+    if (terms.exists(singleBucket(_, SingleBucketMaxPostings)))
       blocks.coalesce(1).mapPartitions { it =>
         val n = scala.collection.mutable.LongMap.empty[Long]
         it.foreach { case (_, f, c, d) =>
@@ -1990,11 +1990,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * candidate block (PhraseMatcher). A term absent from every segment
     * short-circuits to empty — phrase is conjunctive.
     */
-  def matchPhraseDf(phrase: String, slop: Int = 0): DataFrame =
-    matchPhraseDf(phrase, slop, nBuckets = 0)
-
-  /** [[matchPhraseDf]]'s body; `nBuckets > 0` forces the bucketed plan. */
-  private[graft] def matchPhraseDf(phrase: String, slop: Int, nBuckets: Int): DataFrame = {
+  def matchPhraseDf(phrase: String, slop: Int = 0): DataFrame = {
     requirePositions("phrase")
     val emptyOut = emptyPositional("phrase_tf")
     val tokens = positionalTokens(phrase, "match_phrase")
@@ -2004,7 +2000,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     if (distinct.exists(t => !meta.contains(t))) return emptyOut
     val tokensB = spark.sparkContext.broadcast(tokens)
     val sl = slop
-    bucketedBlocks[(Long, Int)](distinct, nBuckets, withPositions = true) { (lo, hi, byTerm) =>
+    bucketedBlocks[(Long, Int)](distinct, withPositions = true) { (lo, hi, byTerm) =>
       // a bucket missing any distinct term can't host a conjunctive match
       if (tokensB.value.exists(t => !byTerm.contains(t))) Iterator.empty
       else PhraseMatcher.matchBucket(byTerm, tokensB.value, lo, hi, sl).iterator
@@ -2019,11 +2015,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * [[matchPhraseDf]] with slop. Same positional plan shape: only the
     * terms' blocks (with pos), bucketed, candidate-then-payload.
     */
-  def matchSpanNearDf(query: String, slop: Int): DataFrame =
-    matchSpanNearDf(query, slop, nBuckets = 0)
-
-  /** [[matchSpanNearDf]]'s body; `nBuckets > 0` forces the bucketed plan. */
-  private[graft] def matchSpanNearDf(query: String, slop: Int, nBuckets: Int): DataFrame = {
+  def matchSpanNearDf(query: String, slop: Int): DataFrame = {
     requirePositions("span")
     val emptyOut = emptyPositional("min_gap")
     val terms = positionalTokens(query, "span_near").distinct.sorted
@@ -2032,7 +2024,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     if (terms.exists(t => !meta.contains(t))) return emptyOut // conjunctive
     val termsB = spark.sparkContext.broadcast(terms)
     val sl = slop
-    bucketedBlocks[(Long, Int)](terms.toSeq, nBuckets, withPositions = true) { (lo, hi, byTerm) =>
+    bucketedBlocks[(Long, Int)](terms.toSeq, withPositions = true) { (lo, hi, byTerm) =>
       if (termsB.value.exists(t => !byTerm.contains(t))) Iterator.empty
       else PhraseMatcher.matchNearBucket(byTerm, termsB.value, lo, hi, sl).iterator
     }
@@ -2057,14 +2049,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * postings scan, never a position decode of the whole expansion.
     */
   def matchSpanMultiNearDf(prefix: String, other: String, slop: Int,
-      maxExpansions: Int = 128): DataFrame =
-    matchSpanMultiNearDf(prefix, other, slop, maxExpansions, nBuckets = 0)
-
-  /** [[matchSpanMultiNearDf]]'s body; `nBuckets > 0` forces the bucketed
-    * plan.
-    */
-  private[graft] def matchSpanMultiNearDf(prefix: String, other: String, slop: Int,
-      maxExpansions: Int, nBuckets: Int): DataFrame = {
+      maxExpansions: Int = 128): DataFrame = {
     import spark.implicits._
     requirePositions("span_multi")
     require(slop >= 0, s"slop must be >= 0, got $slop")
@@ -2075,7 +2060,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
         "overlapping spans would cover themselves (shape pinned away)")
     if (exp.isEmpty) return emptyPositional("min_gap")
     val (expB, othB, sl) = (exp, oth, slop)
-    bucketedBlocks[(Long, Int)]((exp :+ oth).toSeq, nBuckets, withPositions = true) {
+    bucketedBlocks[(Long, Int)]((exp :+ oth).toSeq, withPositions = true) {
       (lo, hi, byTerm) =>
         PhraseMatcher.spanMultiNearBucket(byTerm, expB, othB, lo, hi, sl)
     }
@@ -2093,12 +2078,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * bucket-local (PhraseMatcher.spanNotBucket) in [[bucketedBlocks]] —
     * exclude positions decode only at candidate docs.
     */
-  def matchSpanNotDf(include: String, exclude: String, pre: Int, post: Int): DataFrame =
-    matchSpanNotDf(include, exclude, pre, post, nBuckets = 0)
-
-  /** [[matchSpanNotDf]]'s body; `nBuckets > 0` forces the bucketed plan. */
-  private[graft] def matchSpanNotDf(include: String, exclude: String, pre: Int, post: Int,
-      nBuckets: Int): DataFrame = {
+  def matchSpanNotDf(include: String, exclude: String, pre: Int, post: Int): DataFrame = {
     import spark.implicits._
     requirePositions("span_not")
     require(pre >= 0 && post >= 0, s"pre/post must be >= 0, got ($pre, $post)")
@@ -2107,7 +2087,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     require(inc != exc, "span_not include == exclude always matches nothing")
     val (prN, poN) = (pre, post)
     val (incB, excB) = (inc, exc)
-    bucketedBlocks[(Long, Int)](Seq(inc, exc), nBuckets, withPositions = true) { (lo, hi, byTerm) =>
+    bucketedBlocks[(Long, Int)](Seq(inc, exc), withPositions = true) { (lo, hi, byTerm) =>
       PhraseMatcher.spanNotBucket(byTerm, incB, excB, prN, poN, lo, hi)
     }
       .toDF("docId", "n_spans")
@@ -2125,7 +2105,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     */
   def matchSpanContainingDf(a: String, b: String, slop: Int,
       little: String): DataFrame =
-    spanContainOf(a, b, slop, little, within = false, nBuckets = 0)
+    spanContainOf(a, b, slop, little, within = false)
 
   /** Lucene `SpanWithinQuery` (ES `span_within`) — the inverse of
     * [[matchSpanContainingDf]]: little occurrences that sit inside ≥ 1 big
@@ -2133,13 +2113,11 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     */
   def matchSpanWithinDf(a: String, b: String, slop: Int,
       little: String): DataFrame =
-    spanContainOf(a, b, slop, little, within = true, nBuckets = 0)
+    spanContainOf(a, b, slop, little, within = true)
 
-  /** The span_containing / span_within body; `nBuckets > 0` forces the
-    * bucketed plan.
-    */
-  private[graft] def spanContainOf(a: String, b: String, slop: Int, little: String,
-      within: Boolean, nBuckets: Int): DataFrame = {
+  /** The span_containing / span_within body. */
+  private def spanContainOf(a: String, b: String, slop: Int, little: String,
+      within: Boolean): DataFrame = {
     import spark.implicits._
     requirePositions(if (within) "span_within" else "span_containing")
     require(slop >= 0, s"slop must be >= 0, got $slop")
@@ -2149,7 +2127,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     require(tc != ta && tc != tb,
       "little ∈ big's terms holds trivially in every window — a shape error")
     val (aN, bN, cN, sl, w) = (ta, tb, tc, slop, within)
-    bucketedBlocks[(Long, Int)](Seq(ta, tb, tc).distinct.sorted, nBuckets, withPositions = true) {
+    bucketedBlocks[(Long, Int)](Seq(ta, tb, tc).distinct.sorted, withPositions = true) {
       (lo, hi, byTerm) =>
         PhraseMatcher.spanContainBucket(byTerm, aN, bN, sl, cN, lo, hi, w)
     }
@@ -2224,14 +2202,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     * .matchBucketAlts).
     */
   def matchPhrasePrefixDf(phrase: String, maxExpansions: Int = 32,
-      slop: Int = 0): DataFrame =
-    matchPhrasePrefixDf(phrase, maxExpansions, slop, nBuckets = 0)
-
-  /** [[matchPhrasePrefixDf]]'s body; `nBuckets > 0` forces the bucketed
-    * plan.
-    */
-  private[graft] def matchPhrasePrefixDf(phrase: String, maxExpansions: Int, slop: Int,
-      nBuckets: Int): DataFrame = {
+      slop: Int = 0): DataFrame = {
     requirePositions("phrase")
     val emptyOut = emptyPositional("phrase_tf")
     val tokens = positionalTokens(phrase, "match_phrase_prefix")
@@ -2248,7 +2219,7 @@ final class IndexReader private (spark: SparkSession, indexDir: String,
     val slotsB = spark.sparkContext.broadcast(slots)
     val sl = slop
     val scanTerms = (fixed ++ expansion).distinct.sorted.toSeq
-    bucketedBlocks[(Long, Int)](scanTerms, nBuckets, withPositions = true) { (blo, bhi, byTerm) =>
+    bucketedBlocks[(Long, Int)](scanTerms, withPositions = true) { (blo, bhi, byTerm) =>
       PhraseMatcher.matchBucketAlts(byTerm, slotsB.value, blo, bhi, sl).iterator
     }
       .toDF("docId", "phrase_tf")

@@ -22,6 +22,7 @@ class BoolQuerySpec extends SparkSpec with BeforeAndAfterAll {
 
   lazy val corpus = CorpusGen.dataset(spark, N, 8)
   lazy val reader = new IndexReader(spark, dir)
+  lazy val grouped = reader.groupedForm(7)
 
   lazy val oracle: ExhaustiveScorer.Prepared = {
     val docs = corpus.toDF()
@@ -626,7 +627,7 @@ class BoolQuerySpec extends SparkSpec with BeforeAndAfterAll {
 
   test("bool top-k plans: driver-scored == bucketed on every clause shape, k = 1, 10, N + 1") {
     // searchBool scores these small postings on the driver as one bucket;
-    // boolTopK(nBuckets = 7) forces the docId-bucketed plan. The other
+    // the reader's groupedForm(7) takes the docId-bucketed plan. The other
     // tests pin searchBool to the oracle; this pins the two plans together.
     val docDls = oracle.rows.collect().map(_._4.toLong).distinct.sorted
     val mid = Some((docDls(docDls.size / 4), docDls(3 * docDls.size / 4)))
@@ -646,7 +647,7 @@ class BoolQuerySpec extends SparkSpec with BeforeAndAfterAll {
     var nonEmpty = 0
     for ((m, sh, n, ms, b, f, r) <- shapes; k <- Seq(1, 10, N.toInt + 1)) {
       val driver = reader.searchBool(m, sh, n, k, ms, b, f, r).toSeq
-      val bucketed = reader.boolTopK(m, sh, n, k, ms, b, f, r, nBuckets = 7).toSeq
+      val bucketed = grouped.searchBool(m, sh, n, k, ms, b, f, r).toSeq
       assert(driver == bucketed, s"bool plans diverge for ($m, $sh, $n, ms=$ms, $b, $f, $r, k=$k)")
       if (driver.nonEmpty) nonEmpty += 1
     }
@@ -657,6 +658,10 @@ class BoolQuerySpec extends SparkSpec with BeforeAndAfterAll {
     reader.searchBool(Seq("def"), Seq("val"), Seq("class"), 10) // fills the dictionary memo
     val boolJobs = countJobs(reader.searchBool(Seq("def"), Seq("val"), Seq("class"), 10))
     assert(boolJobs == 1, s"memo-hit searchBool ran $boolJobs jobs")
+    // the grouped form skips the top-k gate: scan + exchange, then the merge
+    grouped.searchBool(Seq("def"), Seq("val"), Seq("class"), 10)
+    val groupedJobs = countJobs(grouped.searchBool(Seq("def"), Seq("val"), Seq("class"), 10))
+    assert(groupedJobs >= 2, s"memo-hit groupedForm(7).searchBool ran $groupedJobs job: not the bucketed plan")
     val r = new IndexReader(spark, dir)
     r.stats
     assert(r.resident.isDefined, "the fixture's dictionary is under the resident bound")
@@ -685,6 +690,9 @@ class BoolQuerySpec extends SparkSpec with BeforeAndAfterAll {
       assert(jobs == 0, s"$name ran $jobs jobs before rejecting k")
       assert(msg.contains("k >= 1") && msg.contains("rank every match"), s"$name: $msg")
     }
+    // and the grouped form rejects a bucket count < 1 the same way
+    val jobs = countJobs(intercept[IllegalArgumentException](r.groupedForm(0)))
+    assert(jobs == 0, s"groupedForm(0) ran $jobs jobs before rejecting")
   }
 
   test("bool across base ∪ delta segments") {

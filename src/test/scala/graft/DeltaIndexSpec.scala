@@ -64,16 +64,17 @@ class DeltaIndexSpec extends SparkSpec {
   test("composite BMW == composite naive (recomputed bounds are safe)") {
     built
     val rd = new IndexReader(spark, dirDelta)
-    // both top-k plans (driver-scored as one bucket at nBuckets = 0, docId
-    // buckets at 7) at k = 1, K and N + M + 1; naive(k) is the prefix of the
-    // full naive ranking
+    // both top-k plans (driver-scored as one bucket by the reader, docId
+    // buckets on its groupedForm(7)) at k = 1, K and N + M + 1; naive(k) is
+    // the prefix of the full naive ranking
     val kAll = (N + M).toInt + 1
+    val grouped = rd.groupedForm(7)
     for (q <- QuerySet.all) {
       val naiveAll = rd.searchNaive(q, kAll).toSeq
-      for (nBuckets <- Seq(0, 7); k <- Seq(1, QuerySet.K, kAll))
-        assert(rd.searchBmw(q, k, nBuckets).toSeq == naiveAll.take(k),
-          s"composite BMW (nBuckets = $nBuckets) top-$k diverges from exhaustive decode for '$q' — " +
-            "a block bound must be violated")
+      for (r <- Seq(rd, grouped); k <- Seq(1, QuerySet.K, kAll))
+        assert(r.searchBmw(q, k).toSeq == naiveAll.take(k),
+          s"composite BMW (${if (r eq rd) "gate" else "grouped"} plan) top-$k diverges from " +
+            s"exhaustive decode for '$q' — a block bound must be violated")
     }
   }
 
@@ -107,10 +108,15 @@ class DeltaIndexSpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq
     val before = pitRun()
     assert(before.nonEmpty)
+    val pitReader = new IndexReader(spark, dir, pinnedSegments = Some(pit))
+    val pitHits = pitReader.searchBmw("def val", QuerySet.K).toSeq
     DeltaIndex.addDocuments(spark, dir, docsRange(N, N + M), cfg, "pitd0")
     // same manifest, AFTER the commit: identical rows, identical doubles —
     // stats/df/docId map all derive from the pinned segments only
     assert(pitRun() == before, "PIT results must be bit-identical across the delta commit")
+    // a grouped form made after the commit keeps the PIT reader's segments
+    assert(pitReader.groupedForm(7).searchBmw("def val", QuerySet.K).toSeq == pitHits,
+      "a PIT reader's groupedForm(7) must serve the point-in-time hits")
     val fresh = new IndexReader(spark, dir).scoreAllDf("def val").count()
     assert(fresh > before.size.toLong, "a fresh (unpinned) reader must see the delta docs")
   }

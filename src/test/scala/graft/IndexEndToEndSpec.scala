@@ -22,6 +22,7 @@ class IndexEndToEndSpec extends SparkSpec with BeforeAndAfterAll {
 
   lazy val corpus = CorpusGen.dataset(spark, N, 8)
   lazy val reader = new IndexReader(spark, dir)
+  lazy val grouped = reader.groupedForm(7)
   lazy val docs = {
     import spark.implicits._
     Tables.read(spark, dir, InvertedIndex.DocsTable).as[DocRow]
@@ -148,8 +149,8 @@ class IndexEndToEndSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("rank identity: naive DAAT == BMW == exhaustive oracle, all 20 queries") {
-    // BMW runs on both top-k plans (nBuckets = 0 scores these small postings
-    // on the driver as one bucket, 7 forces the docId-bucketed plan) and at
+    // BMW runs on both top-k plans (the reader scores these small postings
+    // on the driver as one bucket, its groupedForm(7) buckets by docId) and at
     // k = 1, K and N + 1 (ties, k beyond the matches). naive(k) is the
     // (score desc, docId asc) prefix of the full naive ranking, so naive
     // runs once per query at k = N + 1 and is cut.
@@ -163,9 +164,9 @@ class IndexEndToEndSpec extends SparkSpec with BeforeAndAfterAll {
         assert(math.abs(g.score - w.score) <= 1e-9 * math.max(1.0, math.abs(w.score)), s"naive score for '$q'")
       }
       // SearchHit equality: same docIds, scores bit-identical to naive
-      for (nBuckets <- Seq(0, 7); k <- Seq(1, QuerySet.K, kAll))
-        assert(reader.searchBmw(q, k, nBuckets).toSeq == naiveAll.take(k),
-          s"BMW (nBuckets = $nBuckets) top-$k for '$q'")
+      for (rd <- Seq(reader, grouped); k <- Seq(1, QuerySet.K, kAll))
+        assert(rd.searchBmw(q, k).toSeq == naiveAll.take(k),
+          s"BMW (${if (rd eq reader) "gate" else "grouped"} plan) top-$k for '$q'")
     }
   }
 
@@ -173,6 +174,10 @@ class IndexEndToEndSpec extends SparkSpec with BeforeAndAfterAll {
     reader.searchBmw("def z100_id", QuerySet.K) // fills the dictionary memo
     val jobs = countJobs(reader.searchBmw("def z100_id", QuerySet.K))
     assert(jobs == 1, s"memo-hit searchBmw ran $jobs jobs")
+    // the grouped form skips the top-k gate: scan + exchange, then the merge
+    grouped.searchBmw("def z100_id", QuerySet.K)
+    val groupedJobs = countJobs(grouped.searchBmw("def z100_id", QuerySet.K))
+    assert(groupedJobs >= 2, s"memo-hit groupedForm(7).searchBmw ran $groupedJobs job: not the bucketed plan")
   }
 
   test("rank-all distributed path == naive full ranking, scores bit-identical") {
@@ -199,10 +204,11 @@ class IndexEndToEndSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("batch merge paths identical: driver heap-merge == distributed merge") {
-    // driverMergeMaxRows = 0 forces the distributed exchange; the default
-    // takes the small-batch driver path — results must match exactly
+    // a groupedForm takes the distributed exchange; the default takes the
+    // small-batch driver path — results must match exactly
     val viaDriver = reader.searchBmwBatch(QuerySet.all, QuerySet.K)
-    val viaExchange = reader.searchBmwBatch(QuerySet.all, QuerySet.K, driverMergeMaxRows = 0L)
+    val viaExchange = reader.groupedForm(spark.sessionState.conf.numShufflePartitions)
+      .searchBmwBatch(QuerySet.all, QuerySet.K)
     for (q <- QuerySet.all)
       assert(viaDriver(q).toSeq == viaExchange(q).toSeq, s"merge paths diverge for '$q'")
   }

@@ -52,10 +52,11 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     ()
   }
 
-  /** The docId-bucketed query plans: 0 lets the small-scan gate choose
-    * (one narrow partition on these fixtures), 7 forces the docId exchange.
+  /** The docId-bucketed query plans: `r`'s small-scan gate chooses (one
+    * narrow partition on these fixtures), its groupedForm(7) the exchange.
     */
-  val planBuckets = Seq(0, 7)
+  def planReaders(r: IndexReader) = Seq("gate" -> r, "grouped" -> r.groupedForm(7))
+  lazy val readerPlans = planReaders(reader)
 
   def slideCount(tokens: Array[String], phrase: Array[String]): Int = {
     var c = 0
@@ -186,10 +187,10 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     var nonTrivial = 0
     for (ph <- Seq("def val", "def def", "def val class", "return if"); sl <- Seq(0, 1, 2)) {
       val exp = slopOracle(ph, sl)
-      for (n <- planBuckets) {
-        val got = reader.matchPhraseDf(ph, sl, n).as[(Long, Int)].collect().toMap
+      for ((plan, r) <- readerPlans) {
+        val got = r.matchPhraseDf(ph, sl).as[(Long, Int)].collect().toMap
         assert(got == exp,
-          s"phrase '$ph' slop $sl nBuckets $n: engine ${got.size} docs vs oracle ${exp.size}")
+          s"phrase '$ph' slop $sl ($plan plan): engine ${got.size} docs vs oracle ${exp.size}")
       }
       // the gate is vacuous unless slop actually ADMITS new matches somewhere
       if (sl > 0 && exp != slopOracle(ph, 0)) nonTrivial += 1
@@ -223,9 +224,9 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
       val exp = tokensById.iterator
         .map { case (id, ts) => id -> prefixSlopCount(ts, fixed, prefix, sl) }
         .filter(_._2 > 0).toMap
-      for (n <- planBuckets) {
-        val got = reader.matchPhrasePrefixDf(ph, 1000, sl, n).as[(Long, Int)].collect().toMap
-        assert(got == exp, s"phrase_prefix '$ph' slop $sl nBuckets $n: ${got.size} vs ${exp.size} docs")
+      for ((plan, r) <- readerPlans) {
+        val got = r.matchPhrasePrefixDf(ph, 1000, sl).as[(Long, Int)].collect().toMap
+        assert(got == exp, s"phrase_prefix '$ph' slop $sl ($plan plan): ${got.size} vs ${exp.size} docs")
       }
       if (exp.nonEmpty) nonEmpty += 1
     }
@@ -250,9 +251,9 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
       val exp = tokensById.iterator.flatMap { case (id, ts) =>
         bruteGap(ts, terms).filter(_ <= sl).map(id -> _)
       }.toMap
-      for (n <- planBuckets) {
-        val got = reader.matchSpanNearDf(q, sl, n).as[(Long, Int)].collect().toMap
-        assert(got == exp, s"span_near '$q' slop $sl nBuckets $n: ${got.size} vs ${exp.size} docs")
+      for ((plan, r) <- readerPlans) {
+        val got = r.matchSpanNearDf(q, sl).as[(Long, Int)].collect().toMap
+        assert(got == exp, s"span_near '$q' slop $sl ($plan plan): ${got.size} vs ${exp.size} docs")
       }
       if (exp.nonEmpty) nonEmpty += 1
     }
@@ -283,9 +284,9 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
         val n = wins.count { case (s, e) => pc.exists(p => s <= p && p <= e) }
         if (n > 0) Some(id -> n) else None
       }.toMap
-      for (n <- planBuckets) {
-        val gotC = reader.spanContainOf(a, b, sl, c, within = false, n).as[(Long, Int)].collect().toMap
-        assert(gotC == expC, s"containing ($a,$b,$c,$sl) nBuckets $n: ${gotC.size} vs ${expC.size}")
+      for ((plan, r) <- readerPlans) {
+        val gotC = r.matchSpanContainingDf(a, b, sl, c).as[(Long, Int)].collect().toMap
+        assert(gotC == expC, s"containing ($a,$b,$c,$sl) ($plan plan): ${gotC.size} vs ${expC.size}")
       }
       val expW = tokensById.iterator.flatMap { case (id, ts) =>
         val wins = bruteSpans(ts, a, b, sl)
@@ -293,9 +294,9 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
           .count(p => wins.exists { case (s, e) => s <= p && p <= e })
         if (n > 0) Some(id -> n) else None
       }.toMap
-      for (n <- planBuckets) {
-        val gotW = reader.spanContainOf(a, b, sl, c, within = true, n).as[(Long, Int)].collect().toMap
-        assert(gotW == expW, s"within ($a,$b,$c,$sl) nBuckets $n: ${gotW.size} vs ${expW.size}")
+      for ((plan, r) <- readerPlans) {
+        val gotW = r.matchSpanWithinDf(a, b, sl, c).as[(Long, Int)].collect().toMap
+        assert(gotW == expW, s"within ($a,$b,$c,$sl) ($plan plan): ${gotW.size} vs ${expW.size}")
       }
       if (expC.nonEmpty) nzC += 1
       if (expW.nonEmpty) nzW += 1
@@ -351,30 +352,30 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     df.queryExecution.executedPlan.toString.contains("Exchange")
 
   /** Every DataFrame consumer of the docId-bucketed plans, by name, as a
-    * function of `nBuckets` (0 = the small-scan gate decides).
+    * function of the reader that plans it.
     */
-  private def planFrames(r: IndexReader): Seq[(String, Int => DataFrame)] = Seq(
-    "phrase slop 0" -> (n => r.matchPhraseDf("def val", 0, n)),
-    "phrase slop 1" -> (n => r.matchPhraseDf("def val class", 1, n)),
-    "phrase_prefix" -> (n => r.matchPhrasePrefixDf("def va", 32, 0, n)),
-    "span_near" -> (n => r.matchSpanNearDf("def val", 3, n)),
-    "span_multi" -> (n => r.matchSpanMultiNearDf("buf", "def", 5, 128, n)),
-    "span_not" -> (n => r.matchSpanNotDf("def", "val", 1, 1, n)),
-    "span_containing" -> (n => r.spanContainOf("def", "val", 4, "class", within = false, n)),
-    "span_within" -> (n => r.spanContainOf("def", "val", 4, "class", within = true, n)),
-    "prefix, probe complete" -> (n => r.matchPrefixDf("de", 64, n)),
-    "prefix, probe over the cap" -> (n => r.matchPrefixDf("de", 1, n)))
+  private val planFrames: Seq[(String, IndexReader => DataFrame)] = Seq(
+    "phrase slop 0" -> (_.matchPhraseDf("def val", 0)),
+    "phrase slop 1" -> (_.matchPhraseDf("def val class", 1)),
+    "phrase_prefix" -> (_.matchPhrasePrefixDf("def va", 32, 0)),
+    "span_near" -> (_.matchSpanNearDf("def val", 3)),
+    "span_multi" -> (_.matchSpanMultiNearDf("buf", "def", 5, 128)),
+    "span_not" -> (_.matchSpanNotDf("def", "val", 1, 1)),
+    "span_containing" -> (_.matchSpanContainingDf("def", "val", 4, "class")),
+    "span_within" -> (_.matchSpanWithinDf("def", "val", 4, "class")),
+    "prefix, probe complete" -> (_.matchPrefixDf("de", 64)),
+    "prefix, probe over the cap" -> (_.matchPrefixDf("de", 1)))
 
   for ((label, d) <- Seq("one segment" -> dir, "base + delta" -> ddir))
     test(s"single-bucket plan == bucketed plan for every consumer ($label)") {
       val r = new IndexReader(spark, d)
       assert(r.segments.size == (if (d == dir) 1 else 2))
       var nonEmpty = 0
-      for (i <- planFrames(r).indices) {
+      for ((name, frame) <- planFrames) {
         // a fresh reader per consumer: the gate must look its terms up itself
-        val (name, frame) = planFrames(new IndexReader(spark, d))(i)
-        val (one, grouped) = (frame(0), frame(7))
-        assert(hasExchange(grouped), s"$name: nBuckets = 7 did not plan the exchange")
+        val fresh = new IndexReader(spark, d)
+        val (one, grouped) = (frame(fresh), frame(fresh.groupedForm(7)))
+        assert(hasExchange(grouped), s"$name: groupedForm(7) did not plan the exchange")
         assert(hasExchange(one) == name.endsWith("over the cap"),
           s"$name: the gate chose the wrong plan:\n${one.queryExecution.executedPlan}")
         assert(one.schema == grouped.schema, s"$name: schemas differ")
@@ -382,10 +383,11 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
         assert(rows == sortedRows(grouped), s"$name: single-bucket rows != bucketed rows")
         if (rows.nonEmpty) nonEmpty += 1
       }
-      assert(nonEmpty == planFrames(r).size, s"only $nonEmpty consumers matched — fixture too sparse")
+      assert(nonEmpty == planFrames.size, s"only $nonEmpty consumers matched — fixture too sparse")
 
-      val suggest = sortedRows(r.suggestPhraseDf("deff vall", 1, 32, 5, 0))
-      assert(suggest.nonEmpty && suggest == sortedRows(r.suggestPhraseDf("deff vall", 1, 32, 5, 7)),
+      val grouped = r.groupedForm(7)
+      val suggest = sortedRows(r.suggestPhraseDf("deff vall", 1, 32, 5))
+      assert(suggest.nonEmpty && suggest == sortedRows(grouped.suggestPhraseDf("deff vall", 1, 32, 5)),
         "suggestPhraseDf: single-bucket rows != bucketed rows")
 
       // a small batch takes the one-task plan, a long one the buckets
@@ -393,7 +395,7 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
         val hits = r.searchBmwBatch(batch, 10)
         assert(hits.values.count(_.nonEmpty) >= batch.size / 2)
         assert(hits.map { case (q, h) => q -> h.toSeq } ==
-          r.searchBmwBatch(batch, 10, nBuckets = 7).map { case (q, h) => q -> h.toSeq },
+          grouped.searchBmwBatch(batch, 10).map { case (q, h) => q -> h.toSeq },
           s"searchBmwBatch (${batch.size} queries): gate-chosen hits != bucketed hits")
       }
     }
@@ -423,6 +425,12 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     assert(smallJobs == 1, s"memo-hit 4-query searchBmwBatch ran $smallJobs jobs")
     val longJobs = countJobs(r.searchBmwBatch(longBatch, 10))
     assert(longJobs >= 2, s"memo-hit 11-query searchBmwBatch ran $longJobs job: not the bucketed plan")
+    // the grouped form buckets even the small batch and merges it through
+    // the exchange on query id: one job more than the long batch
+    val grouped = r.groupedForm(7)
+    grouped.searchBmwBatch(smallBatch, 10)
+    val groupedJobs = countJobs(grouped.searchBmwBatch(smallBatch, 10))
+    assert(groupedJobs > longJobs, s"memo-hit 4-query groupedForm(7).searchBmwBatch ran $groupedJobs jobs")
   }
 
   test("job guards: a fresh reader's first query runs load + 1; with the table loaded, cold-term match, bool and phrase run one job") {
@@ -531,6 +539,7 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
     val s = new IndexReader(spark, dir).scanForm
     s.stats
     assert(s.resident.isEmpty, "a scan-form reader holds a table")
+    assert(s.groupedForm(7).resident.isEmpty, "a scan form's grouped form holds a table")
     // its dictionary memo and expansion memo serve repeats
     s.termMeta(Array("def", "val"))
     assert(countJobs(s.termMeta(Array("def", "val"))) == 0, "memo-hit termMeta ran a job")
@@ -556,11 +565,13 @@ class PhraseSpec extends SparkSpec with BeforeAndAfterAll {
       pairs.where(where).groupBy("docId").agg(countDistinct("term").as("n_terms"))
     val de = distinctCount(col("term") >= "de" && col("term") < "df")
     assert(sortedRows(de).nonEmpty)
-    for (cap <- Seq(64, 1); n <- planBuckets)
-      assert(sortedRows(r.matchPrefixDf("de", cap, n)) == sortedRows(de), s"prefix (cap $cap, nBuckets $n)")
     val set = Seq("def", "val", "buf_idx")
-    assert(sortedRows(r.termsSetDf(set).withColumnRenamed("n_matched", "n_terms")) ==
-      sortedRows(distinctCount(col("term").isin(set: _*))), "terms set")
+    for ((plan, rp) <- planReaders(r)) {
+      for (cap <- Seq(64, 1))
+        assert(sortedRows(rp.matchPrefixDf("de", cap)) == sortedRows(de), s"prefix (cap $cap, $plan plan)")
+      assert(sortedRows(rp.termsSetDf(set).withColumnRenamed("n_matched", "n_terms")) ==
+        sortedRows(distinctCount(col("term").isin(set: _*))), s"terms set ($plan plan)")
+    }
     val filterIds = distinctCount(col("term").isin("def", "val"))
       .where(col("n_terms") === 2).select(col("docId"), lit(0.0).as("score"))
     assert(sortedRows(r.searchBoolDf(Nil, filter = Seq("def", "val"))) == sortedRows(filterIds),
